@@ -33,9 +33,25 @@ def normalize_text(col: Column) -> Column:
     return F.regexp_replace(collapsed, r"^ | $", "")
 
 
+# Java's ``(?U)\s`` (Unicode White_Space), the whitespace every ``(?U)\s``
+# regex in the engine splits on: U+0009-000D, U+0020, U+0085, U+00A0,
+# U+1680, U+2000-200A, U+2028, U+2029, U+202F, U+205F, U+3000.
+UNICODE_WHITESPACE = (
+    "\t\n\x0b\x0c\r \x85\xa0\u1680"
+    + "".join(chr(c) for c in range(0x2000, 0x200B))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+
+
 def py_strip(col: Column) -> Column:
-    """Python ``str.strip()`` (all whitespace kinds, unlike Spark trim)."""
-    return F.regexp_replace(F.coalesce(col, F.lit("")), r"(?U)^\s+|\s+$", "")
+    """``str.strip()`` over the 25 code points of :data:`UNICODE_WHITESPACE`
+    (null → ""), unlike Spark ``trim``, which strips only U+0020.
+
+    One ``btrim``: the same result as the regex ``(?U)^\\s+|\\s+$`` on every
+    code point, without running a regex. Python's own ``str.strip()`` also
+    strips U+001C-001F (the information separators); this does not, and
+    never has."""
+    return F.btrim(F.coalesce(col, F.lit("")), F.lit(UNICODE_WHITESPACE))
 
 
 def split_words(col: Column) -> Column:

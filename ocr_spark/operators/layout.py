@@ -87,33 +87,61 @@ def _empty_columns() -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _is_translation_pair(l1: Column, l2: Column) -> Column:
-    """pdf_processor.py:368-413 on two stripped, non-empty lines."""
-    n1 = F.regexp_extract_all(l1, F.lit(r"\d+"), 0)
-    n2 = F.regexp_extract_all(l2, F.lit(r"\d+"), 0)
-    same_numbers = (F.size(n1) > 0) & (F.size(n2) > 0) & (n1 == n2)
-    numbered = l1.rlike(r"^[1-5]\.") & l2.rlike(r"^[1-5]\.")
+# Spark evaluates higher-order functions (transform, filter, zip_with,
+# aggregate, ...) interpreted, outside whole-stage codegen, and runs no
+# common-subexpression elimination inside their arguments: a lambda that
+# strips a line re-strips it on every use. So the gate below strips and
+# features each line once, in one transform, and counts pairs in one
+# aggregate fold over consecutive lines.
+
+
+def _line_features(line: Column) -> Column:
+    """What the translation-pair test reads of one stripped line."""
+    return F.struct(
+        (line != "").alias("ne"),
+        F.regexp_extract_all(line, F.lit(r"\d+"), 0).alias("nums"),
+        line.rlike(r"^[1-5]\.").alias("numbered"),
+        F.upper(line).alias("up"),
+    )
+
+
+def _no_line() -> Column:
+    """The features of the line before the first: pairs with nothing."""
+    return F.struct(
+        F.lit(False).alias("ne"),
+        F.array().cast("array<string>").alias("nums"),
+        F.lit(False).alias("numbered"),
+        F.lit("").alias("up"),
+    )
+
+
+def _is_translation_pair(a: Column, b: Column) -> Column:
+    """pdf_processor.py:368-413 on the features of two non-empty lines."""
+    same_numbers = (F.size(a["nums"]) > 0) & (F.size(b["nums"]) > 0) & (a["nums"] == b["nums"])
     kw = F.lit(False)
-    u1, u2 = F.upper(l1), F.upper(l2)
+    u1, u2 = a["up"], b["up"]
     for ru, en in config.TRANSLATION_KEYWORD_PAIRS:
         kw = kw | (u1.contains(ru) & u2.contains(en)) | (u1.contains(en) & u2.contains(ru))
-    return same_numbers | numbered | kw
+    return same_numbers | (a["numbered"] & b["numbered"]) | kw
 
 
 def is_clear_side_by_side(text: Column) -> Column:
     """W8 gate (pdf_processor.py:332-366): ≥5 translation pairs over
     consecutive raw-line pairs, needs ≥10 raw lines."""
     lines = F.split(F.coalesce(text, F.lit("")), "\n")
-    n = F.size(lines)
-    l1s = F.transform(F.slice(lines, 1, F.greatest(n - 1, F.lit(0))), py_strip)
-    l2s = F.transform(F.slice(lines, 2, F.greatest(n - 1, F.lit(0))), py_strip)
-    pairs = F.zip_with(
-        l1s,
-        l2s,
-        lambda a, b: ((a != "") & (b != "") & _is_translation_pair(a, b)).cast("int"),
+    feats = F.transform(F.transform(lines, py_strip), _line_features)
+    counted = F.aggregate(
+        feats,
+        F.struct(_no_line().alias("prev"), F.lit(0).alias("n")),
+        lambda acc, x: F.struct(
+            x.alias("prev"),
+            (
+                acc["n"]
+                + (acc["prev"]["ne"] & x["ne"] & _is_translation_pair(acc["prev"], x)).cast("int")
+            ).alias("n"),
+        ),
     )
-    pair_count = F.aggregate(pairs, F.lit(0), lambda acc, x: acc + x)
-    return (n >= config.SBS_MIN_LINES) & (pair_count >= config.SBS_MIN_PAIRS)
+    return (F.size(lines) >= config.SBS_MIN_LINES) & (counted["n"] >= config.SBS_MIN_PAIRS)
 
 
 def _language_bucket_columns(text: Column, confidence: float) -> Column:

@@ -82,46 +82,88 @@ def classify_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def assemble_spans(
-    classified: DataFrame,
+def classify_and_assemble(
+    docs: DataFrame,
     drop_boilerplate: bool = True,
     salt_chunk: int = config.SPAN_SALT_CHUNK,
-    big_doc_spans: int | None = config.BIG_DOC_SPANS,
+    big_doc_spans: int = config.BIG_DOC_SPANS,
 ) -> DataFrame:
-    """Stage 2: reassembly into ordered span sequences — hybrid salting.
+    """Stages 1 and 2 on array-shaped input, routing whole documents.
 
-    Output: (doc_id, spans array<struct<kind,text,media_ref,order>>)
-    with order = 0-based rank of offset among the document's kept spans —
-    the span-sequence-equality contract (kind, text, media_ref, order).
+    Input:  (doc_id, spans array<struct<kind,text,media_ref,offset>>)
+    Output: as :func:`assemble_spans`.
+
+    A document row carries all its spans, so documents are routed before
+    the explode: the ids of rows with a span number ``big_doc_spans + 1``
+    (see :func:`_route_documents`) go through a broadcast ``left_semi``
+    join to the salted path, all other rows through a ``left_anti`` join
+    to the single-phase path. Each span is exploded and classified once,
+    and no count pre-pass runs over span rows. Routing by id keeps every
+    row of one ``doc_id`` on one side, so duplicate-id rows still merge
+    into one output row; a null ``doc_id`` matches no id and takes the
+    single-phase path. The raw span count routes: a document that keeps at most
+    ``big_doc_spans`` spans after boilerplate removal may still take the
+    salted path, which gives the same output. ``big_doc_spans=0`` sends
+    every non-empty document through the salted path.
 
     Skew strategy (measured in tools/skew_bench.py): the salted two-phase
     aggregation costs a second full-data shuffle (~3× overhead on normal
     corpora) but is the only thing keeping a 10^6+-span mega-document from
     owning one reducer (2.1× faster at 3M spans, and an OOM-guard beyond).
-    So documents are routed by span count: normal docs take the single
-    groupBy path, only docs above ``big_doc_spans`` take the salted path.
-    The big-doc id set is long-tail by definition → broadcastable; the
-    count pre-pass shuffles one (doc_id, n) row per document.
-    Set ``big_doc_spans=None`` to force everything through the salted path.
+    So only documents above ``big_doc_spans`` take it. The big-doc id set
+    is long-tail by definition → broadcastable.
 
-    Cost model: the hybrid re-evaluates the upstream (scan+classify) for
-    the count pass and each branch — cheaper than the extra full-data
-    shuffle when upstream is parquet scan + expressions (measured, 2.5×),
-    but if upstream is an EXPENSIVE Arrow-UDF stage (OCR, image decode),
-    persist/checkpoint the classified frame first, or pass
-    ``big_doc_spans=None`` to keep the single-scan two-shuffle plan.
+    Cost model: the upstream (one row per document) is evaluated by each
+    branch and by the id side, but never exploded or classified twice —
+    cheap when it is a parquet scan + expressions. If it is an EXPENSIVE
+    Arrow-UDF stage (OCR, image decode), persist/checkpoint it first.
+    """
+
+    def kept(d: DataFrame) -> DataFrame:
+        classified = classify_spans(d)
+        return classified.filter(~F.col("is_boilerplate")) if drop_boilerplate else classified
+
+    small_docs, big_docs = _route_documents(docs, big_doc_spans)
+    small = _assemble_single_phase(kept(small_docs))
+    big = _assemble_salted(kept(big_docs), salt_chunk)
+    return small.unionByName(big)
+
+
+def _route_documents(docs: DataFrame, big_doc_spans: int) -> tuple[DataFrame, DataFrame]:
+    """(rows of documents with no row above ``big_doc_spans`` spans, rows
+    of documents with one), split by doc_id, not by row.
+
+    A big row is found by exploding its span number ``big_doc_spans + 1``
+    (a row with fewer spans explodes to nothing), not by a filter on
+    ``size(spans)``: the optimizer pushes a filter down through the
+    projections that built ``spans`` and inlines them into the predicate,
+    duplicating every expression a projection shares (on the WARC bridge,
+    ``html_to_spans`` became a 350 KB predicate and a 10x slower pass)."""
+    big_ids = F.broadcast(
+        docs.select("doc_id", F.explode(F.slice("spans", big_doc_spans + 1, 1))).select("doc_id")
+    )
+    return docs.join(big_ids, "doc_id", "left_anti"), docs.join(big_ids, "doc_id", "left_semi")
+
+
+def assemble_spans(
+    classified: DataFrame,
+    drop_boilerplate: bool = True,
+    salt_chunk: int = config.SPAN_SALT_CHUNK,
+) -> DataFrame:
+    """Stage 2 on row-shaped input (one row per span, as
+    :func:`classify_spans` gives): reassembly into ordered span sequences.
+
+    Output: (doc_id, spans array<struct<kind,text,media_ref,order>>)
+    with order = 0-based rank of offset among the document's kept spans —
+    the span-sequence-equality contract (kind, text, media_ref, order).
+
+    Span rows carry no per-document span count, so nothing is routed here:
+    every document takes the salted two-phase aggregation, which holds for
+    any document size. The pipeline runs :func:`classify_and_assemble`,
+    which routes whole documents before the explode; this is the
+    row-shaped form that streaming assembly and the tests compare against.
     """
     kept = classified.filter(~F.col("is_boilerplate")) if drop_boilerplate else classified
-
-    if big_doc_spans is not None:
-        counts = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__n"))
-        big_ids = counts.filter(F.col("__n") > big_doc_spans).select(
-            "doc_id", F.lit(True).alias("__big")
-        )
-        flagged = kept.join(F.broadcast(big_ids), "doc_id", "left")
-        small = _assemble_single_phase(flagged.filter(F.col("__big").isNull()).drop("__big"))
-        big = _assemble_salted(flagged.filter(F.col("__big")).drop("__big"), salt_chunk)
-        return small.unionByName(big)
     return _assemble_salted(kept, salt_chunk)
 
 

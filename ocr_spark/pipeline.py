@@ -1,8 +1,13 @@
 """End-to-end main-content extraction pipeline (the flagship job).
 
 documents(doc_id, spans) →
-  stage 1 classify (narrow)            operators/spans.classify_spans
-  stage 2 salted assembly (shuffle)    operators/spans.assemble_spans
+  stages 1+2 classify and assemble     operators/spans.classify_and_assemble
+             route whole documents before the explode: the ids of rows
+             with a span number BIG_DOC_SPANS+1 (explode(slice(...)),
+             a broadcast semi join) take the salted two-phase assembly,
+             the rest (anti join) one groupBy(doc_id); each branch
+             explodes and classifies its spans once (narrow), then
+             shuffles once or twice
   stage 3 document features (narrow)   extracted_text, structured_data,
                                        layout columns, validity flags
 
@@ -14,7 +19,7 @@ typed row per document:
   columns array<ColumnData>, columns_count, has_multiple_columns,
   n_spans, n_media
 
-Everything after the single assembly shuffle is narrow projection work —
+Everything after the assembly shuffle is narrow projection work —
 Catalyst pipelines it into the same stage; nothing re-shuffles.
 """
 
@@ -121,9 +126,8 @@ def extract_documents(
     drop_boilerplate: bool = True,
     salt_chunk: int = config.SPAN_SALT_CHUNK,
 ) -> DataFrame:
-    classified = S.classify_spans(docs)
-    assembled = S.assemble_spans(
-        classified, drop_boilerplate=drop_boilerplate, salt_chunk=salt_chunk
+    assembled = S.classify_and_assemble(
+        docs, drop_boilerplate=drop_boilerplate, salt_chunk=salt_chunk
     )
 
     text_spans = F.filter(F.col("spans"), lambda s: s["kind"] == "text")

@@ -5401,7 +5401,7 @@ FROM skept""",
 )
 def q_spans_assemble(spark: SparkSession, sf: str) -> DataFrame:
     corpus = D.span_corpus(D.load(spark, sf, "documents"))
-    assembled = SP.assemble_spans(SP.classify_spans(corpus))
+    assembled = SP.classify_and_assemble(corpus)
     return assembled.select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id",
         F.col("s.kind").alias("kind"),

@@ -39,6 +39,17 @@ except ImportError:
     pypdf = None
     HAVE_PYPDF = False
 
+
+def _doc_id(rid) -> int | None:
+    """One doc_id of a pandas batch as an int, or None when it is null.
+
+    pandas widens a long column holding nulls to float, so a null doc_id
+    arrives as NaN, and ``int`` of it would fail the whole task. The float
+    is exact below 2^53, which covers every id :func:`pack_image_id` can
+    pack (doc_id × 10^6 must fit in int64)."""
+    return None if pd.isna(rid) else int(rid)
+
+
 PAGES_SCHEMA = "doc_id long, page_number int, text string"
 META_SCHEMA = (
     "doc_id long, pages int, title string, author string, subject string, "
@@ -188,12 +199,16 @@ class _MiniPdf:
         fm = _re.search(rb"/Filter\s*(?:\[\s*)?/(\w+)", head)
         if not fm:
             return raw
+        # filter parameters live only in the /DecodeParms sub-dictionary; a
+        # same-named key elsewhere in the stream dictionary is not one
+        dm = _re.search(rb"/DecodeParms\s*(?:\[\s*)?<<(.*?)>>", head, _re.S)
+        parms = dm.group(1) if dm else b""
         if fm.group(1) == b"FlateDecode":
             import zlib
 
             data = zlib.decompress(raw)
         elif fm.group(1) == b"LZWDecode":
-            em = _re.search(rb"/EarlyChange\s+(\d+)", head)
+            em = _re.search(rb"/EarlyChange\s+(\d+)", parms)
             data = _lzw_decode(raw, early=int(em.group(1)) if em else 1)
         else:
             raise NotImplementedError(
@@ -201,9 +216,9 @@ class _MiniPdf:
                 "install pypdf for general PDFs (the built-in reader handles "
                 "uncompressed, /FlateDecode, and /LZWDecode streams)"
             )
-        pm = _re.search(rb"/Predictor\s+(\d+)", head)
+        pm = _re.search(rb"/Predictor\s+(\d+)", parms)
         if pm and int(pm.group(1)) >= 10:
-            cm = _re.search(rb"/Columns\s+(\d+)", head)
+            cm = _re.search(rb"/Columns\s+(\d+)", parms)
             data = _png_unpredict(data, int(cm.group(1)) if cm else 1)
         return data
 
@@ -431,7 +446,7 @@ def extract_pages(docs: DataFrame, id_col: str = "doc_id", content_col: str = "c
                 except Exception:  # graceful degradation (§4): bad doc → no rows
                     continue
                 for i, text in enumerate(texts, start=1):
-                    out["doc_id"].append(int(rid))
+                    out["doc_id"].append(_doc_id(rid))
                     out["page_number"].append(i)
                     out["text"].append(text)
             yield pd.DataFrame(out)
@@ -469,7 +484,7 @@ def extract_metadata(docs: DataFrame, id_col: str = "doc_id", content_col: str =
                     info, n_pages = {}, 0
                 except Exception:
                     continue
-                out["doc_id"].append(int(rid))
+                out["doc_id"].append(_doc_id(rid))
                 out["pages"].append(n_pages)
                 for c in cols:
                     out[c].append(info.get(c))
@@ -635,7 +650,7 @@ def rasterize_pages(pages: DataFrame, width: int = RASTER_W) -> DataFrame:
                 pdf_b["doc_id"].tolist(), pdf_b["page_number"].tolist(), pdf_b["text"].tolist()
             ):
                 img = render_page_array(text, width)
-                out["doc_id"].append(int(rid))
+                out["doc_id"].append(_doc_id(rid))
                 out["page_number"].append(int(pno))
                 out["data"].append(img.tobytes())
                 out["width"].append(img.shape[1])
@@ -727,7 +742,7 @@ def rasterize_pages_poppler(
                         arr = np.asarray(pil_img.convert("L"), dtype=np.uint8)
                     except Exception:
                         continue
-                    out["doc_id"].append(int(rid))
+                    out["doc_id"].append(_doc_id(rid))
                     out["page_number"].append(pno)
                     out["data"].append(arr.tobytes())
                     out["width"].append(arr.shape[1])

@@ -759,3 +759,59 @@ def test_corrupt_lzw_page_degrades_not_drops(spark):
     assert {(r["page_number"], r["text"]) for r in rows} == {
         (1, ""), (2, "Page 2 of doc 1")
     }
+
+
+def test_null_doc_id_pdf_keeps_good_documents(spark, monkeypatch, tmp_path):
+    """A null doc_id among good PDFs comes out as a null doc_id in every
+    per-document adapter; it never fails the task (local mode does not
+    retry tasks, so one failure fails the collect) and every good document
+    comes out."""
+    from ocr_spark.sources.pdf_fixture import page_text, synth_pdf_bytes
+
+    p, _ = _install_fake_pdf2image(monkeypatch, tmp_path)
+    spark.sparkContext.addPyFile(str(p))
+    n_pages = {d: 1 + d % 3 for d in range(5)}
+    rows = [(None if d == 2 else d, bytearray(synth_pdf_bytes(d, n_pages[d]))) for d in range(5)]
+    # one partition: the null shares its pandas batch with the good ids
+    docs = spark.createDataFrame(rows, "doc_id long, content binary").coalesce(1)
+    good = {d: n for d, n in n_pages.items() if d != 2}
+
+    pages = pdf.extract_pages(docs).collect()
+    assert {(r["doc_id"], r["page_number"], r["text"]) for r in pages if r["doc_id"] is not None} == {
+        (d, p, page_text(d, p)) for d, n in good.items() for p in range(1, n + 1)
+    }
+    assert sorted(r["page_number"] for r in pages if r["doc_id"] is None) == [1, 2, 3]
+
+    meta = {r["doc_id"]: r["pages"] for r in pdf.extract_metadata(docs).collect()}
+    assert meta == {**good, None: 3}
+
+    raster = pdf.rasterize_pages(pdf.extract_pages(docs)).collect()
+    assert sum(r["doc_id"] is None for r in raster) == 3
+    assert {r["doc_id"] for r in raster} == {*good, None}
+
+    poppler = pdf.rasterize_pages_poppler(docs).collect()
+    assert {r["doc_id"] for r in poppler} == {*good, None}
+
+
+def test_early_change_read_only_from_decode_parms():
+    """/EarlyChange outside /DecodeParms is not a filter parameter: the
+    stream decodes with the default of 1. Inside /DecodeParms it applies."""
+    import random
+
+    from ocr_spark.sources.pdf_fixture import lzw_encode, page_text, synth_pdf_bytes
+
+    rng = random.Random(3)
+    payload = bytes(rng.randrange(256) for _ in range(5000))  # crosses code widths
+    default = lzw_encode(payload, early=1)
+    with pytest.raises(ValueError):  # the setting matters for this stream
+        pdf._lzw_decode(default, early=0)
+    stray = b"<< /Length %d /Filter /LZWDecode /EarlyChange 0 >>" % len(default)
+    assert pdf._MiniPdf._decode(stray, default) == payload
+    early0 = lzw_encode(payload, early=0)
+    scoped = b"<< /Filter /LZWDecode /DecodeParms << /EarlyChange 0 >> /Length %d >>" % len(early0)
+    assert pdf._MiniPdf._decode(scoped, early0) == payload
+
+    data = synth_pdf_bytes(1, 2, compress="lzw")
+    stray_pdf = data.replace(b"/Filter /LZWDecode", b"/EarlyChange 0 /Filter /LZWDecode")
+    assert stray_pdf != data
+    assert pdf._minipdf_pages(stray_pdf) == [page_text(1, 1), page_text(1, 2)]

@@ -67,19 +67,150 @@ def test_mega_doc_crosses_chunks(spark_result, golden):
     assert spark_result[mega]["n_spans"] == golden[mega]["n_spans"]
 
 
-def test_assembly_plan_has_two_aggregates(spark, docs, tmp_path_factory):
-    """The salted assembly must be a two-phase aggregation (partial skew
-    defusal), visible as two ObjectHashAggregate pairs in the plan."""
-    path = str(tmp_path_factory.mktemp("corpus_plan"))
+def _corpus_df(spark, docs, tmp_path_factory, name):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pq.write_table(
-        pa.Table.from_pylist(docs[:5], schema=corpus.SCHEMA), path + "/p.parquet"
+    path = str(tmp_path_factory.mktemp(name))
+    pq.write_table(pa.Table.from_pylist(docs, schema=corpus.SCHEMA), path + "/p.parquet")
+    return spark.read.parquet(path)
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_array_input_plan_explodes_once_without_count_pass(spark, docs, tmp_path_factory):
+    """Array-shaped input routes whole documents on their span count
+    before the explode: one span explode per union branch, no count
+    aggregate over span rows, and the salted branch keeps its two-phase
+    aggregation (keyed on (doc_id, salt), then on doc_id)."""
+    import re
+
+    from ocr_spark.operators.spans import assemble_spans, classify_spans
+
+    df = _corpus_df(spark, docs[:5], tmp_path_factory, "corpus_plan")
+    plan = _plan(extract_documents(df))
+    assert plan.count("Generate explode(spans") == 2
+    assert "LeftAnti" in plan and "LeftSemi" in plan
+    assert "count(1)" not in plan
+    assert re.search(r"ObjectHashAggregate\(keys=\[doc_id#\d+, salt#\d+L\]", plan)
+    assert plan.count("Exchange hashpartitioning") == 3  # single-phase 1 + salted 2
+    # row-shaped input is not routed: no count pass, only the salted path
+    rows = _plan(assemble_spans(classify_spans(df)))
+    assert "count(1)" not in rows and "LeftSemi" not in rows
+    assert re.search(r"ObjectHashAggregate\(keys=\[doc_id#\d+, salt#\d+L\]", rows)
+
+
+def test_salted_route_matches_golden(spark, docs, tmp_path_factory, golden):
+    """With a threshold below the mega-documents' span count, they take the
+    salted path and still match the reference."""
+    from ocr_spark.operators.spans import classify_and_assemble
+
+    df = _corpus_df(spark, docs, tmp_path_factory, "corpus_salted")
+    out = {r["doc_id"]: r for r in classify_and_assemble(df, salt_chunk=64, big_doc_spans=1000).collect()}
+    assert set(out) == set(golden)
+    for doc_id, want in golden.items():
+        got = [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in out[doc_id]["spans"]]
+        assert got == [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in want["spans"]]
+
+
+_SPANS_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
+
+
+def _assembled(df, **kw):
+    from ocr_spark.operators.spans import classify_and_assemble
+
+    return sorted(
+        ((r["doc_id"], [tuple(s) for s in r["spans"]]) for r in classify_and_assemble(df, **kw).collect()),
+        key=lambda r: (r[0] is not None, r[0]),
     )
-    df = spark.read.parquet(path)
-    plan = extract_documents(df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") >= 2  # salt shuffle + doc_id shuffle
+
+
+def test_duplicate_doc_id_rows_merge_across_the_route(spark):
+    """Rows of one doc_id land on one side of the route even when only one
+    of them is big, so they still merge into one output row."""
+    long_a = ("text", "first part of the body text here", None, 0)
+    long_b = ("text", "second part of the body text here", None, 2)
+    long_c = ("text", "third part of the body text here", None, 4)
+    df = spark.createDataFrame(
+        [
+            ("d", [long_a, long_c, ("media", None, "img://d/0", 5)]),
+            ("d", [long_b]),
+            ("e", [long_a]),
+        ],
+        _SPANS_SCHEMA,
+    )
+    want = [
+        ("d", [
+            ("text", long_a[1], None, 0),
+            ("text", long_b[1], None, 1),
+            ("text", long_c[1], None, 2),
+            ("media", None, "img://d/0", 3),
+        ]),
+        ("e", [("text", long_a[1], None, 0)]),
+    ]
+    for big in (2, 100, 0):  # d salted / everything single-phase / all salted
+        assert _assembled(df, big_doc_spans=big) == want, big
+
+
+def test_route_sends_null_id_single_phase_and_splits_by_id(spark):
+    from ocr_spark.operators.spans import _route_documents
+
+    span = ("text", "a body sentence of some length", None, 0)
+    df = spark.createDataFrame(
+        [(None, [span] * 4), ("d", [span] * 4), ("d", [span]), ("s", [span])], _SPANS_SCHEMA
+    )
+    small, big = _route_documents(df, 2)
+    assert sorted((r["doc_id"] or "", len(r["spans"])) for r in small.collect()) == [("", 4), ("s", 1)]
+    assert sorted(len(r["spans"]) for r in big.select("spans").collect()) == [1, 4]
+    got = _assembled(df, big_doc_spans=2)
+    assert got[0][0] is None and len(got[0][1]) == 4
+
+
+def test_route_does_not_inline_upstream_projections(spark):
+    """The big-id side must not carry a filter on size(spans): the
+    optimizer pushes it through html_to_spans' projections and inlines
+    them, growing the plan ~15x (and the WARC-bridge pass 10x). Each side
+    of the route is the upstream plan twice (the rows and the broadcast
+    ids), nothing more."""
+    from ocr_spark.operators.boilerplate import html_to_spans
+    from ocr_spark.operators.spans import _route_documents
+
+    docs = html_to_spans(
+        spark.createDataFrame([(1, "<p>some body text here</p>")], "doc_id long, html string")
+    )
+    size = len(docs._jdf.queryExecution().optimizedPlan().toString())
+    for side in _route_documents(docs, 2):
+        assert len(side._jdf.queryExecution().optimizedPlan().toString()) < 3 * size
+
+
+def test_raw_count_routes_but_output_equals_single_phase(spark):
+    """A document whose raw span count exceeds big_doc_spans but whose kept
+    count does not takes the salted path; the output equals the
+    single-phase path's."""
+    from ocr_spark.operators.spans import classify_spans
+
+    boiler = corpus.BOILERPLATE_LINES[1]
+    df = spark.createDataFrame(
+        [(
+            "d",
+            [
+                ("text", boiler, None, 0),
+                ("text", "the kept body text of this document", None, 1),
+                ("text", boiler, None, 2),
+                ("media", None, "img://d/0", 3),
+                ("text", boiler, None, 4),
+            ],
+        )],
+        _SPANS_SCHEMA,
+    )
+    assert classify_spans(df).filter("is_boilerplate").count() == 3
+    salted = _assembled(df, big_doc_spans=3)  # raw 5 > 3, kept 2 <= 3
+    assert salted == _assembled(df, big_doc_spans=100)
+    assert [s[0] for s in salted[0][1]] == ["text", "media"]
 
 
 # --- language runs over interleaved spans -------------------------------------

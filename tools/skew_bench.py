@@ -2,9 +2,10 @@
 assembly buys when one document is 10^5-10^6 spans (north_rule: "salted
 repartitioning to defuse skew from mega-documents").
 
-Compares assemble_spans with the production salt chunk (offset-contiguous
-sub-groups → many reducers per mega-doc) against an effectively-unsalted
-run (salt chunk larger than any offset → one reducer owns the whole doc).
+Compares classify_and_assemble's production route (only docs above
+BIG_DOC_SPANS take the salted path: offset-contiguous sub-groups → many
+reducers per mega-doc) against every doc salted and against no doc salted
+(one reducer owns each whole doc).
 
 Usage: python tools/skew_bench.py [mega_spans] [n_normal_docs]
 """
@@ -24,7 +25,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from ocr_spark import config
-    from ocr_spark.operators.spans import assemble_spans, classify_spans
+    from ocr_spark.operators.spans import classify_and_assemble
     from ocr_spark.session import get_spark
 
     spark = get_spark("skew-bench", master="local[32]", shuffle_partitions=32)
@@ -55,13 +56,13 @@ def main() -> None:
             ),
         ).alias("spans"),
     )
-    docs = normal.repartition(64).unionByName(mega)
-    classified = classify_spans(docs)
-    classified.write.mode("overwrite").parquet("/tmp/skew_bench_rows")
-    rows = spark.read.parquet("/tmp/skew_bench_rows")
+    normal.repartition(64).unionByName(mega).write.mode("overwrite").parquet(
+        "/tmp/skew_bench_docs"
+    )
+    docs = spark.read.parquet("/tmp/skew_bench_docs")
 
     def run(**kw) -> float:
-        out = assemble_spans(rows, **kw)
+        out = classify_and_assemble(docs, **kw)
         out.write.format("noop").mode("overwrite").save()  # warm
         return min(
             _timed(out) for _ in range(2)
@@ -74,8 +75,8 @@ def main() -> None:
 
     modes = {
         "hybrid": {},  # production default: route by span count
-        "all_salted": {"big_doc_spans": None},  # every doc two-phase
-        "single_phase": {"big_doc_spans": 1 << 60},  # no doc ever salted
+        "all_salted": {"big_doc_spans": 0},  # every doc two-phase
+        "single_phase": {"big_doc_spans": 1 << 30},  # no doc ever salted
     }
     n_spans = n_docs * 12 + 2 * mega_spans
     results = {name: run(**kw) for name, kw in modes.items()}
