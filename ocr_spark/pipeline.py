@@ -60,55 +60,41 @@ def process_pdfs(text_pages: DataFrame, visual_pages: DataFrame | None = None) -
 
         per-page text layer (S2) → ordered concat (A4) → min-text route
         (F6) → 'direct': the concatenated text layer
-             → 'ocr':    rasterize pages (S3) → OCR scan (S6) →
-                         conf-gated corrected box assembly (F1+T3+A6) →
-                         ordered page concat
+             → 'ocr':    rasterize + OCR scan the page (S3+S6, one Python
+                         stage) → conf-gated corrected box assembly
+                         (F1+T3+A6) → ordered page concat
 
     ``text_pages``   (doc_id, page_number, text) — the extracted text layer
     ``visual_pages`` same schema — what the page LOOKS like (defaults to
                      the text layer; pass the original pages when
                      simulating scanned PDFs whose text layer is empty)
 
-    Output: (doc_id, route, full_text, total_pages). Only routed-to-OCR
-    documents enter the rasterize/scan stages (semi-join pushdown — the
-    ~100-1000× costlier branch never touches direct-path documents).
+    Output: (doc_id, route, full_text, total_pages).
+
+    The plan reads the text layer once: the routed concat feeds both the
+    OCR semi-join and the final left join, and the two uses share one
+    shuffle stage (``concat_pages``' aggregate is the same for both, and
+    the semi-join keys null-safe, so no ``isnotnull`` filter is inferred
+    under one of them alone). Only routed-to-OCR pages enter the render+
+    scan stage (``ocr_engine.scan_pages``), which renders and OCRs each
+    page in one batch loop — the ~100-1000× costlier branch never touches
+    direct-path documents. A null doc_id can enter that stage, but the
+    final join never matches it, so its OCR text stays empty.
     """
     from ocr_spark.operators.layout import full_text_from_boxes
     from ocr_spark.sources import pdf as P
-    from ocr_spark.sources.ocr_engine import scan_images
+    from ocr_spark.sources.ocr_engine import scan_pages
 
     visual = visual_pages if visual_pages is not None else text_pages
     direct = P.concat_pages(text_pages)  # (doc_id, all_text, total_pages)
     routed = route_documents(direct, direct_text_col="all_text")
 
-    ocr_ids = routed.filter(F.col("route") == "ocr").select("doc_id")
-    scans = P.rasterize_pages(visual.join(ocr_ids, "doc_id"))
-    imgs = scans.select(
-        P.pack_image_id(F.col("doc_id"), F.col("page_number")).alias("image_id"),
-        "data",
-        "width",
-        "height",
-    )
-    boxes = scan_images(imgs, include_preprocess=False)
-    u_doc, u_page = P.unpack_image_id(F.col("image_id"))
-    page_text = boxes.select(
-        u_doc.alias("doc_id"),
-        u_page.alias("page_number"),
-        full_text_from_boxes(F.col("boxes")).alias("text"),
-    )
-    ocr_text = page_text.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("page_number").alias("p"), F.col("text").alias("t"))
-                    )
-                ),
-                lambda s: s["t"],
-            ),
-            "\n",
-        ).alias("ocr_text")
-    )
+    ocr_ids = routed.filter(F.col("route") == "ocr").select(F.col("doc_id").alias("ocr_id"))
+    ocr_pages = visual.join(ocr_ids, F.col("doc_id").eqNullSafe(F.col("ocr_id")), "left_semi")
+    boxes = scan_pages(ocr_pages, P.render_page_array)
+    ocr_text = P.concat_pages(
+        boxes.select("doc_id", "page_number", full_text_from_boxes(F.col("boxes")).alias("text"))
+    ).select("doc_id", F.col("all_text").alias("ocr_text"))
 
     out = routed.join(ocr_text, "doc_id", "left")
     return out.select(

@@ -6341,26 +6341,21 @@ FROM oph""",
 )
 def q_pdf_ocr_scan(spark: SparkSession, sf: str) -> DataFrame:
     """The FULL OCR fallback branch on real bytes: fixture PDF → S2 page
-    text → S3 rasterize (deterministic band render) → S6 scan → boxes.
-    Raw+rotation candidates only (include_preprocess=False) so every box
-    is oracle-predictable; the oracle recomputes band darkness from the
-    page text's char hash and derives conf/cx/cy in closed form."""
+    text → S3 rasterize (deterministic band render) + S6 scan in one
+    Python stage (ocr_engine.scan_pages, the process_pdfs path) → boxes.
+    Raw+rotation candidates only, so every box is oracle-predictable; the
+    oracle recomputes band darkness from the page text's char hash and
+    derives conf/cx/cy in closed form."""
     import ocr_spark.sources.pdf as P
-    from ocr_spark.sources.ocr_engine import scan_images
+    from ocr_spark.sources.ocr_engine import scan_pages
 
     pages = P.extract_pages(P.synth_pdf_docs(spark, _N_PDF_DOCS))
-    imgs = P.rasterize_pages(pages).select(
-        P.pack_image_id(F.col("doc_id"), F.col("page_number")).alias("image_id"),
-        "data",
-        "width",
-        "height",
+    b = scan_pages(pages, P.render_page_array).select(
+        "doc_id", "page_number", F.explode("boxes").alias("b")
     )
-    out = scan_images(imgs, include_preprocess=False)
-    b = out.select("image_id", F.explode("boxes").alias("b"))
-    u_doc, u_page = P.unpack_image_id(F.col("image_id"))
     return b.select(
-        u_doc.alias("doc_id"),
-        u_page.alias("page_number"),
+        "doc_id",
+        "page_number",
         F.col("b.text").alias("box_text"),
         F.col("b.conf").alias("conf"),
         F.col("b.cx").alias("cx"),

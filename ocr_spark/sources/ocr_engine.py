@@ -25,7 +25,7 @@ box schema are identical across engines; only _load_model/_recognize swap.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,10 +40,9 @@ from ocr_spark.operators.image import (
     rotation_candidates,
 )
 
-BOXES_SCHEMA = (
-    "image_id long, boxes array<struct<text:string, conf:double, cx:double, cy:double>>, "
-    "engine string"
-)
+_BOX = "array<struct<text:string, conf:double, cx:double, cy:double>>"
+BOXES_SCHEMA = f"image_id long, boxes {_BOX}, engine string"
+PAGE_BOXES_SCHEMA = f"doc_id long, page_number int, boxes {_BOX}"
 
 DEFAULT_ENGINE = "fake"
 
@@ -152,6 +151,58 @@ def _score(boxes: list[tuple[str, float, float, float]]) -> float:
     return len(boxes) + sum(b[1] for b in boxes) / len(boxes)
 
 
+def _best_boxes(
+    model: dict,
+    img: np.ndarray,
+    include_preprocess: bool,
+    detect_skew: bool | None,
+) -> list[dict]:
+    """I3+I5 for one image: try the bounded candidate set and keep the
+    argmax by score, with box coordinates divided back to input scale."""
+    real = model["engine"] != "fake-deterministic"
+    # I3 preprocess variants × I4 rotation sweep — a bounded candidate set
+    # evaluated inside the batch (never exploded to extra rows; batch
+    # locality wins, SURVEY §4). include_preprocess=False restricts to
+    # raw+rotations for callers needing oracle-predictable candidates (the
+    # rasterized-PDF scan).
+    # per-variant (sx, sy): int() truncation in upscale_floor makes the
+    # effective x and y factors differ by up to ~1px equivalent — dividing
+    # cx by the y-derived factor would skew x coordinates into the
+    # gap-based column splitter
+    variants = [(img, 1.0, 1.0)]
+    if include_preprocess:
+        pre = preprocess_array(img, floor=3000 if real else 1)
+        psx = pre.shape[1] / img.shape[1]
+        psy = pre.shape[0] / img.shape[0]
+        variants.append((pre, psx, psy))
+        if real:
+            # the reference's full candidate set (ocr_service.py:57-81):
+            # inverted base + adaptive MEAN threshold(15,10) on the gray
+            # input. Only meaningful for real readers — the deterministic
+            # band engine would "read" an inverted page as all-bands.
+            variants.append((255 - pre, psx, psy))
+            variants.append((adaptive_mean_threshold(img), 1.0, 1.0))
+    # a 90°/270° rotation swaps the axes, so the rotated image's x
+    # coordinates carry the variant's y scale (and vice versa)
+    candidates = [
+        (rot, (sy, sx) if a % 180 == 90 else (sx, sy))
+        for v, sx, sy in variants
+        for a, rot in rotation_candidates(v)
+    ]
+    # OSD analog (ocr_service.py:88-97): if the projection profile finds a
+    # non-right skew, add the corrected image to the sweep — right angles
+    # are already covered above. Gated to real engines by default: the
+    # deterministic band rasters are axis-aligned by construction, and the
+    # 21-angle full-image sweep dominated the fake/bench path cost.
+    if real if detect_skew is None else detect_skew:
+        skew = detect_skew_angle(img)
+        if skew % 90 != 0:
+            candidates.extend((rotate_arbitrary(v, skew), (sx, sy)) for v, sx, sy in variants)
+    scored = [(_recognize(model, c), sc) for c, sc in candidates]
+    best, (sx, sy) = max(scored, key=lambda r: _score(r[0]))
+    return [{"text": t, "conf": c, "cx": cx / sx, "cy": cy / sy} for (t, c, cx, cy) in best]
+
+
 def scan_images(
     images: DataFrame,
     engine: str | None = None,
@@ -179,8 +230,6 @@ def scan_images(
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _load_model(engine, langs)  # once per executor; cheap no-op afterwards
-        real = model["engine"] != "fake-deterministic"
-        floor = 3000 if real else 1
         for pdf in batches:
             out = {"image_id": [], "boxes": [], "engine": []}
             for image_id, data, w, h in zip(
@@ -188,62 +237,37 @@ def scan_images(
                 pdf["width"].tolist(), pdf["height"].tolist(),
             ):
                 img = decode_gray(data, w, h)
-                # I3 preprocess variants × I4 rotation sweep — a bounded
-                # candidate set evaluated inside the batch (never exploded
-                # to extra rows; batch locality wins, SURVEY §4).
-                # include_preprocess=False restricts to raw+rotations for
-                # callers needing oracle-predictable candidates (the
-                # rasterized-PDF scan).
-                # per-variant (sx, sy): int() truncation in upscale_floor
-                # makes the effective x and y factors differ by up to ~1px
-                # equivalent — dividing cx by the y-derived factor would
-                # skew x coordinates into the gap-based column splitter
-                variants = [(img, 1.0, 1.0)]
-                if include_preprocess:
-                    pre = preprocess_array(img, floor=floor)
-                    psx = pre.shape[1] / img.shape[1]
-                    psy = pre.shape[0] / img.shape[0]
-                    variants.append((pre, psx, psy))
-                    if real:
-                        # the reference's full candidate set
-                        # (ocr_service.py:57-81): inverted base + adaptive
-                        # MEAN threshold(15,10) on the gray input. Only
-                        # meaningful for real readers — the deterministic
-                        # band engine would "read" an inverted page as
-                        # all-bands.
-                        variants.append((255 - pre, psx, psy))
-                        variants.append((adaptive_mean_threshold(img), 1.0, 1.0))
-                # a 90°/270° rotation swaps the axes, so the rotated image's
-                # x coordinates carry the variant's y scale (and vice versa)
-                candidates = [
-                    (rot, (sy, sx) if a % 180 == 90 else (sx, sy))
-                    for v, sx, sy in variants
-                    for a, rot in rotation_candidates(v)
-                ]
-                # OSD analog (ocr_service.py:88-97): if the projection
-                # profile finds a non-right skew, add the corrected image
-                # to the sweep — right angles are already covered above.
-                # Gated to real engines by default: the deterministic band
-                # rasters are axis-aligned by construction, and the 21-angle
-                # full-image sweep dominated the fake/bench path cost.
-                if real if detect_skew is None else detect_skew:
-                    skew = detect_skew_angle(img)
-                    if skew % 90 != 0:
-                        candidates.extend(
-                            (rotate_arbitrary(v, skew), (sx, sy))
-                            for v, sx, sy in variants
-                        )
-                scored = [(_recognize(model, c), sc) for c, sc in candidates]
-                best, (sx, sy) = max(scored, key=lambda r: _score(r[0]))
                 out["image_id"].append(int(image_id))
-                out["boxes"].append([
-                    {"text": t, "conf": c, "cx": cx / sx, "cy": cy / sy}
-                    for (t, c, cx, cy) in best
-                ])
+                out["boxes"].append(_best_boxes(model, img, include_preprocess, detect_skew))
                 out["engine"].append(model["engine"])
             yield pd.DataFrame(out)
 
     return images.mapInPandas(process, BOXES_SCHEMA)
+
+
+def scan_pages(pages: DataFrame, render: Callable[[str], np.ndarray]) -> DataFrame:
+    """Rasterise + OCR scan fused: (doc_id, page_number, text) → (doc_id,
+    page_number, boxes), one row per page.
+
+    ``render`` turns a page's text into its grayscale raster (e.g.
+    ``sources.pdf.render_page_array``); the page is rendered and scanned
+    in the same batch loop, so the raster never leaves the Python worker.
+    Same candidate set as ``scan_images(include_preprocess=False)`` on the
+    rasterised pages: raw + right-angle rotations. A null doc_id passes
+    through as null."""
+
+    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model = _load_model()
+        for pdf in batches:
+            boxes = [
+                _best_boxes(model, render(text), include_preprocess=False, detect_skew=None)
+                for text in pdf["text"].tolist()
+            ]
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "page_number": pdf["page_number"], "boxes": boxes}
+            )
+
+    return pages.select("doc_id", "page_number", "text").mapInPandas(process, PAGE_BOXES_SCHEMA)
 
 
 def model_init_count() -> int:

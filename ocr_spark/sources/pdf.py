@@ -495,18 +495,21 @@ def extract_metadata(docs: DataFrame, id_col: str = "doc_id", content_col: str =
 
 def concat_pages(pages: DataFrame) -> DataFrame:
     """A4 (pdf_processor.py:104-139): order-preserving page concat — sort
-    INSIDE the aggregation, never relying on partition order."""
-    return pages.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("page_number").alias("p"), F.col("text").alias("t")))
-                ),
-                lambda s: s["t"],
-            ),
-            "\n",
-        ).alias("all_text"),
-        F.count(F.lit(1)).cast("int").alias("total_pages"),
+    INSIDE the aggregation, never relying on partition order.
+
+    ``total_pages`` is the size of the collected page list, not a
+    ``count(1)`` beside it: the aggregate then holds one function whatever
+    columns a consumer keeps, so two uses of this frame in one plan (see
+    ``pipeline.process_pdfs``) share one shuffle."""
+    collected = pages.groupBy("doc_id").agg(
+        F.collect_list(F.struct(F.col("page_number").alias("p"), F.col("text").alias("t"))).alias(
+            "pages"
+        )
+    )
+    return collected.select(
+        "doc_id",
+        F.array_join(F.transform(F.array_sort("pages"), lambda s: s["t"]), "\n").alias("all_text"),
+        F.size("pages").alias("total_pages"),
     )
 
 

@@ -82,13 +82,19 @@ def _png_predict_up(data: bytes, columns: int) -> bytes:
     return bytes(out)
 
 
-def lzw_encode(data: bytes, early: int = 1) -> bytes:
-    """PDF /LZWDecode-compatible encoder (ISO 32000-2 §7.4.4, TIFF-style):
-    MSB-first variable-width codes 9→12 bits, 256 = clear, 257 = EOD,
-    table reset at 4095, width grows ``early`` codes ahead (the spec
-    default 1). The fixture-side inverse of pdf._lzw_decode — kept here so
-    the reader never round-trips through its own encoder in production."""
-    out_codes: list[tuple[int, int]] = [(256, 9)]
+LZW_MAX_CODE = 4095  # the largest code 12 bits carry
+
+
+def lzw_codes(data: bytes, early: int = 1) -> list[tuple[int, int]]:
+    """The (code, width) sequence :func:`lzw_encode` packs: MSB-first
+    variable-width codes 9→12 bits, 256 = clear, 257 = EOD, width grows
+    ``early`` codes ahead (the spec default 1).
+
+    Each code emitted inside the loop registers one table entry. The
+    clear code goes out as soon as entry ``LZW_MAX_CODE`` is registered,
+    whatever ``early`` is, so no code above it is ever registered or
+    emitted."""
+    codes: list[tuple[int, int]] = [(256, 9)]
     table = {bytes([i]): i for i in range(256)}
     next_code, width = 258, 9
     w = b""
@@ -97,23 +103,30 @@ def lzw_encode(data: bytes, early: int = 1) -> bytes:
         if wc in table:
             w = wc
             continue
-        out_codes.append((table[w], width))
+        codes.append((table[w], width))
         table[wc] = next_code
         next_code += 1
-        if next_code + early - 1 >= (1 << width):
-            if width < 12:
-                width += 1
-            else:
-                out_codes.append((256, 12))
-                table = {bytes([i]): i for i in range(256)}
-                next_code, width = 258, 9
+        if next_code > LZW_MAX_CODE:
+            codes.append((256, width))
+            table = {bytes([i]): i for i in range(256)}
+            next_code, width = 258, 9
+        elif next_code + early - 1 >= (1 << width):
+            width += 1
         w = bytes([ch])
     if w:
-        out_codes.append((table[w], width))
-    out_codes.append((257, width))
+        codes.append((table[w], width))
+    codes.append((257, width))
+    return codes
+
+
+def lzw_encode(data: bytes, early: int = 1) -> bytes:
+    """PDF /LZWDecode-compatible encoder (ISO 32000-2 §7.4.4, TIFF-style):
+    :func:`lzw_codes` packed MSB-first. The fixture-side inverse of
+    pdf._lzw_decode — kept here so the reader never round-trips through
+    its own encoder in production."""
     buf = nbits = 0
     out = bytearray()
-    for code, wd in out_codes:
+    for code, wd in lzw_codes(data, early):
         buf = (buf << wd) | code
         nbits += wd
         while nbits >= 8:

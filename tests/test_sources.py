@@ -75,6 +75,53 @@ def test_lzw_roundtrip_across_width_boundaries():
             assert pdf._lzw_decode(enc, early=early) == p
 
 
+def _lzw_reset_payload() -> bytes:
+    import random
+
+    rng = random.Random(7)
+    return bytes(rng.randrange(256) for _ in range(20000))  # several table resets
+
+
+def test_lzw_encoder_never_registers_code_4096():
+    """Each code the encoder emits inside its loop registers one table
+    entry, from 258 on. So between two clear codes, n data codes register
+    entries up to 257 + n (the flush code of the last segment registers
+    none). Neither that nor any emitted code may pass the 12-bit maximum
+    4095, for either EarlyChange value."""
+    from ocr_spark.sources.pdf_fixture import LZW_MAX_CODE, lzw_codes
+
+    for early in (0, 1):
+        codes = lzw_codes(_lzw_reset_payload(), early=early)
+        assert max(c for c, _ in codes) <= LZW_MAX_CODE
+        assert all(c < 1 << w for c, w in codes)
+        segments, n = [], 0
+        for code, _ in codes[1:]:
+            if code in (256, 257):
+                segments.append(n)
+                n = 0
+            else:
+                n += 1
+        assert len(segments) > 2  # the payload crosses table resets
+        assert max(257 + n for n in segments) <= LZW_MAX_CODE
+        # a full table resets right after entry 4095 is registered
+        assert 257 + segments[0] == LZW_MAX_CODE
+
+
+def test_lzw_encoder_default_output_unchanged():
+    """The benchmark and fixture PDFs use the default EarlyChange 1; its
+    encoding is pinned byte for byte (sha256) across table resets."""
+    import hashlib
+
+    from ocr_spark.sources.pdf_fixture import lzw_encode, synth_pdf_bytes
+
+    assert hashlib.sha256(lzw_encode(_lzw_reset_payload())).hexdigest() == (
+        "694caf0c6311df6a286dccb0d02b7e1c17094d767e43d191fe389eebac30260b"
+    )
+    assert hashlib.sha256(synth_pdf_bytes(1, 4, compress="lzw")).hexdigest() == (
+        "f1a2d494e5c57b2398a9fd24ec3ef34d2dada796aaacfa031036f87bfcbcf7f8"
+    )
+
+
 def test_lzw_pdf_flows_direct_text_route(spark):
     """The judge-prescribed closure: a /LZWDecode PDF takes the DIRECT
     text route (extract_pages yields the real text; pipeline routes it
@@ -347,6 +394,108 @@ def test_process_pdfs_routes_both_branches(spark):
             assert r["route"] == "direct"
             assert r["full_text"].split("\n")[0] == f"Page 1 of doc {d}"
         assert r["total_pages"] == 1 + d % 4
+
+
+def _final_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def _scanned_text_layer(pages):
+    """docs with a null id or an id divisible by 5 simulate scanned PDFs:
+    an empty text layer over pages that still show their text."""
+    scanned = F.col("doc_id").isNull() | (F.col("doc_id") % 5 == 0)
+    return pages.withColumn("text", F.when(scanned, F.lit("")).otherwise(F.col("text")))
+
+
+def test_process_pdfs_parses_text_layer_once(spark, tmp_path):
+    """The executed (final AQE) plan reads the input twice, not three
+    times: the text layer's concat shuffle is shared by the OCR semi-join
+    and the final join (a ReusedExchange), and render+OCR is one Python
+    stage — two PDF parses plus one scan, 3 MapInPandas."""
+    from ocr_spark.pipeline import process_pdfs
+
+    path = str(tmp_path / "docs")
+    pdf.synth_pdf_docs(spark, 20).write.parquet(path)
+    pages = pdf.extract_pages(spark.read.parquet(path))
+    out = process_pdfs(_scanned_text_layer(pages), visual_pages=pages)
+    rows = out.collect()  # an action first: the AQE plan is final
+    assert len(rows) == 20 and sum(r["route"] == "ocr" for r in rows) == 4
+    plan = _final_plan(out)
+    assert "isFinalPlan=true" in plan
+    assert plan.count("FileScan parquet") == 2
+    assert plan.count("MapInPandas") == 3
+    assert plan.count("ReusedExchange") >= 1
+
+
+def test_concat_pages_total_pages_counts_rows(spark):
+    """total_pages is the number of page rows of a document, also when
+    rows repeat a page number or carry null text or a null page number."""
+    rows = [
+        (1, 1, "a"), (1, 1, "b"), (1, 2, None),
+        (2, 1, None),
+        (3, 2, "x"), (3, 2, "x"), (3, None, None),
+        (None, 1, "z"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, page_number int, text string")
+    got = {r["doc_id"]: r["total_pages"] for r in pdf.concat_pages(df).collect()}
+    want = {r["doc_id"]: r["count"] for r in df.groupBy("doc_id").count().collect()}
+    assert got == want == {1: 3, 2: 1, 3: 3, None: 1}
+
+
+def test_process_pdfs_fault_rows(spark):
+    """One faulty PDF per case among good ones, in one batch, through
+    process_pdfs; no task fails and each case yields exactly its pinned
+    row:
+    - a scanned PDF with a null doc_id enters the OCR branch, but the
+      final join never matches a null key, so its OCR text stays empty
+    - non-PDF bytes yield no pages, so no row
+    - a truncated PDF keeps the pages it still has
+    - a /DCTDecode page degrades to empty text and routes to OCR"""
+    from ocr_spark.pipeline import process_pdfs
+    from ocr_spark.sources.pdf_fixture import synth_pdf_bytes
+
+    truncated = synth_pdf_bytes(9, 3)
+    dct = synth_pdf_bytes(11, 2).replace(b"<< /Length", b"<< /Filter /DCTDecode /Length")
+    rows = [(d, synth_pdf_bytes(d, 1 + d % 3)) for d in (1, 2, 3, 5)] + [
+        (None, synth_pdf_bytes(7, 2)),
+        (8, b"not a pdf at all"),
+        (9, truncated[: len(truncated) // 2]),
+        (11, dct),
+    ]
+    docs = spark.createDataFrame(
+        [(d, bytearray(b)) for d, b in rows], "doc_id long, content binary"
+    ).coalesce(1)
+    pages = pdf.extract_pages(docs)
+    got = {tuple(r) for r in process_pdfs(_scanned_text_layer(pages), visual_pages=pages).collect()}
+    band = "\u043bi\u043f\u0435-0"  # "line-0" after OCR correction
+    assert got == {
+        (None, "ocr", "", 2),
+        (1, "direct", "Page 1 of doc 1\nPage 2 of doc 1", 2),
+        (2, "direct", "Page 1 of doc 2\nPage 2 of doc 2\nPage 3 of doc 2", 3),
+        (3, "direct", "Page 1 of doc 3", 1),
+        (5, "ocr", "\n".join([band] * 3), 3),
+        (9, "direct", "Page 1 of doc 9\n", 2),
+        (11, "ocr", "\n", 2),
+    }
+
+
+def test_scan_pages_matches_rasterize_then_scan_images(spark):
+    """The fused render+OCR stage returns the boxes of rasterize_pages →
+    scan_images(include_preprocess=False), page for page."""
+    pages = pdf.extract_pages(pdf.synth_pdf_docs(spark, 8))
+    fused = {
+        (r["doc_id"], r["page_number"]): r["boxes"]
+        for r in ocr_engine.scan_pages(pages, pdf.render_page_array).collect()
+    }
+    imgs = pdf.rasterize_pages(pages).select(
+        pdf.pack_image_id(F.col("doc_id"), F.col("page_number")).alias("image_id"),
+        "data", "width", "height",
+    )
+    staged = {
+        divmod(r["image_id"], pdf.PAGE_PACK): r["boxes"]
+        for r in ocr_engine.scan_images(imgs, include_preprocess=False).collect()
+    }
+    assert len(fused) == 20 and fused == staged
 
 
 def test_minipdf_writer_styles_identical_text():
