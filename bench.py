@@ -67,7 +67,7 @@ HEADLINE = [
     "html_cetr",
     "host_extract_stats",
     "layout_flags",
-    "layout_boxes_arrow",
+    "layout_boxes",
     "token_stats",
     "top_terms",
     "gopher_quality",

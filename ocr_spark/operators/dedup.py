@@ -155,16 +155,6 @@ def minhash_signature(text: Column, num_hashes: int = config.MINHASH_NUM_HASHES)
     )
 
 
-def minhash_bands(signature: Column, band_size: int = config.MINHASH_BAND_SIZE,
-                  num_hashes: int = config.MINHASH_NUM_HASHES) -> Column:
-    """LSH band keys: concat each band's minhashes into one string key."""
-    bands = []
-    for b in range(num_hashes // band_size):
-        parts = [F.element_at(signature, b * band_size + i + 1).cast("string") for i in range(band_size)]
-        bands.append(F.concat_ws("_", F.lit(str(b)), *parts))
-    return F.array(*bands)
-
-
 def minhash_feats_pandas(
     text: Column,
     num_hashes: int = config.MINHASH_NUM_HASHES,

@@ -233,11 +233,6 @@ def enhance_text_quality_array(img: np.ndarray) -> np.ndarray:
     return remove_artifacts_array(x, min_size=10)
 
 
-def noise_level_array(img: np.ndarray) -> float:
-    """I7: std/255 clamped to 1.0."""
-    return min(float(img.std()) / 255.0, 1.0)
-
-
 # --- denoise pipeline (I6, noise_handler.py:81-184) -------------------------
 
 

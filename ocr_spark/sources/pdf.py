@@ -688,17 +688,6 @@ def pack_image_id(doc_id: Column, page_number: Column) -> Column:
     )
 
 
-def unpack_image_id(image_id: Column) -> tuple[Column, Column]:
-    """Inverse of :func:`pack_image_id` → (doc_id, page_number) columns.
-
-    The quotient goes through decimal, not double, division: packed keys
-    reach ~10^18 at corpus scale and float64 loses integer exactness past
-    2^53."""
-    page = F.pmod(image_id, F.lit(PAGE_PACK))
-    doc = ((image_id - page).cast("decimal(38,0)") / PAGE_PACK).cast("long")
-    return doc, page.cast("int")
-
-
 def rasterize_pages_poppler(
     docs: DataFrame,
     dpi: int = 300,
@@ -754,14 +743,4 @@ def rasterize_pages_poppler(
 
     return docs.mapInPandas(
         process, "doc_id long, page_number int, data binary, width int, height int"
-    )
-
-
-def rasterize_stub(*_a, **_k):
-    """Real-PDF rasterization needs poppler (process boundary); use
-    rasterize_pages (text-band renderer) in this environment, or
-    :func:`rasterize_pages_poppler` where pdf2image/poppler exists."""
-    raise NotImplementedError(
-        "pdf rasterization requires pdf2image/poppler; "
-        "sources/pdf.rasterize_pages_poppler is the wired adapter"
     )

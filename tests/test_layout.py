@@ -209,21 +209,21 @@ def test_b3_b4_single(box_results):
     assert len(box_results["b5"]["columns"]) == 0
 
 
-def test_box_columns_three_forms_agree(spark):
-    """Expression, exploded-DataFrame, and Arrow-batched forms of the
-    geometry analyzer must produce identical column rows."""
-    from pyspark.sql import functions as F
+def test_layout_boxes_matches_oracle(spark):
+    """The geometry analyzer on real data: the ``layout_boxes`` query on
+    sf0.001 returns exactly the rows of its DuckDB oracle."""
+    import glob
+    import os
 
-    from ocr_spark.plans import derived as D
-    from ocr_spark.plans.entry_queries import (
-        q_layout_boxes,
-        q_layout_boxes_arrow,
-        q_layout_boxes_df,
-    )
+    import duckdb
+
+    from ocr_spark.plans.entry_queries import ORACLES, q_layout_boxes
 
     sf = "/root/testdata/sf0.001"
-    key = lambda r: (r["doc_id"], r["pos"], r["side"])
-    a = sorted([tuple(r) for r in q_layout_boxes(spark, sf).collect()])
-    b = sorted([tuple(r) for r in q_layout_boxes_df(spark, sf).collect()])
-    c = sorted([tuple(r) for r in q_layout_boxes_arrow(spark, sf).collect()])
-    assert a == b == c and len(a) > 0
+    con = duckdb.connect()
+    for p in glob.glob(os.path.join(sf, "*.parquet")):
+        t = os.path.basename(p).replace(".parquet", "")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    want = sorted(con.sql(ORACLES["layout_boxes"]).fetchall())
+    got = sorted(tuple(r) for r in q_layout_boxes(spark, sf).collect())
+    assert got == want and len(got) > 0

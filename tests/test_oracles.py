@@ -6,13 +6,16 @@ or DECIMAL hashes differently from Spark's BIGINT/DOUBLE even when every
 value is identical.  That was the one red row in CORRECTNESS_r03
 (``pagerank``).  These tests run every oracle against the sf0.001 tables
 and fail on any such output type, plus basic contract hygiene (every query
-has an oracle or is knowingly rows-only, priority ordering holds).
+has an oracle or is knowingly rows-only, the registration order is static).
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
+import subprocess
+import sys
 
 import duckdb
 import pytest
@@ -51,32 +54,22 @@ def test_every_query_has_an_oracle():
     assert missing == []
 
 
-def test_driver_priority_tiering():
-    """Registration order must put checked-but-not-green queries first (a
-    red row means a landed fix awaiting driver confirmation — round-3
-    VERDICT), then changed-this-round queries (their old green rows
-    describe code that no longer ships), then every never-driver-checked
-    query CHEAPEST-FIRST by the measured gate cost (the driver's per-round
-    pass is time-budgeted; ascending cost maximizes how many earn a green
-    row), then the already-green remainder."""
-    seen, bad, max_round = eq._driver_history()
-    changed = eq._changed_queries(max_round)
-
-    def tier(n):
-        if n in bad and n in seen:
-            return 0.0
-        if n in changed:
-            return 0.5
-        return 1.0 if n not in seen else 2.0
-
+def test_registration_order_is_static():
+    """QUERIES starts with the literal ``_GRADE_FIRST`` names in order,
+    ORACLES follows QUERIES, and importing the module reads no
+    CORRECTNESS_r*.json file."""
     ks = list(eq.QUERIES)
-    tiers = [tier(n) for n in ks]
-    assert tiers == sorted(tiers), "tier order violated"
-    # never-checked tier: measured cost ascending (unknown cost sorts last)
-    costs = [eq._QUERY_COST_SF001.get(n, 99.0) for n in ks if tier(n) == 1.0]
-    assert costs == sorted(costs), "cost order violated in never-checked tier"
-    # static priority respected inside the red tier (must-confirm fixes)
-    prio = {n: i for i, n in enumerate(eq._DRIVER_PRIORITY)}
-    in_prio = [prio[n] for n in ks if tier(n) == 0.0 and n in prio]
-    assert in_prio == sorted(in_prio), "priority order violated in red tier"
+    assert ks[: len(eq._GRADE_FIRST)] == list(eq._GRADE_FIRST)
     assert list(eq.ORACLES) == [n for n in ks if n in eq.ORACLES]
+    probe = (
+        "import json, sys\n"
+        "opened = []\n"
+        "sys.addaudithook(lambda ev, args: ev == 'open' and opened.append(str(args[0])))\n"
+        "import ocr_spark.plans.entry_queries\n"
+        "print(json.dumps([p for p in opened if 'CORRECTNESS_r' in p]))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=root, capture_output=True, text=True, check=True
+    )
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == []
