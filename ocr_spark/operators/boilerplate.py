@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.functions.text import py_strip
+from ocr_spark.operators.spans import word_count
 
 # block-level boundary tags; (?i) works identically in Java regex and RE2
 BLOCK_TAG_RE = (
@@ -50,11 +51,6 @@ _TAG_RE = r"(?s)<[^>]*>"
 # boilerpipe NumWordsRulesClassifier.java — public algorithm constants)
 _CURR_LD_MAX = 0.333333
 _PREV_LD_MAX = 0.555556
-
-
-def _word_count(text: Column) -> Column:
-    s = py_strip(text)
-    return F.when(s == "", F.lit(0)).otherwise(F.size(F.split(s, r"(?U)\s+")))
 
 
 def html_blocks(html: Column) -> Column:
@@ -103,7 +99,7 @@ def html_blocks(html: Column) -> Column:
         ).otherwise(F.lit(0.0))
         return F.struct(
             text.alias("text"),
-            _word_count(text).alias("n_words"),
+            word_count(text).alias("n_words"),
             ld.alias("link_density"),
             depth.alias("depth"),
         )

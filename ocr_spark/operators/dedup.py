@@ -127,34 +127,6 @@ def release_feature_caches() -> int:
 # --- minhash + LSH -----------------------------------------------------------
 
 
-def minhash_signature(text: Column, num_hashes: int = config.MINHASH_NUM_HASHES) -> Column:
-    """K minhashes: min over shingles of md5(k || shingle) prefix-int.
-
-    Built as ONE nested higher-order expression (transform over the hash
-    index k, inner transform over shingles) instead of K unrolled
-    aggregations — the unrolled form blows past the JVM 64KB method limit
-    and silently drops the whole stage out of whole-stage codegen.
-    """
-    from ocr_spark.operators.textstats import bind_once
-
-    def md5_int_dyn(s: Column, k: Column) -> Column:
-        h = F.md5(F.concat(k.cast("string"), F.lit(":"), s))
-        return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-
-    # shingle array bound once — inline it and the whole shingling chain
-    # re-runs per hash index (K× the work even before the per-gram trap)
-    return bind_once(
-        shingles(text),
-        lambda sh: F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda k: F.coalesce(
-                F.array_min(F.transform(sh, lambda s: md5_int_dyn(s, k))),
-                F.lit(-1).cast("long"),
-            ),
-        ),
-    )
-
-
 def minhash_feats_pandas(
     text: Column,
     num_hashes: int = config.MINHASH_NUM_HASHES,
@@ -707,17 +679,18 @@ def pair_prf(truth: DataFrame, pred: DataFrame, tier: str) -> DataFrame:
 
 
 def quantized_cosine_pandas(a: Column, b: Column, scale: int = 1000) -> Column:
-    """Arrow-vectorized twin of :func:`quantized_cosine` (numpy int64 math;
-    ~100× faster than the interpreted higher-order-function form on wide
-    pair sets). Agrees with the expression form on every value our corpora
-    produce; the one theoretical divergence is doubles ADJACENT to a .5 tie
-    (floor(m+0.5) vs BigDecimal HALF_UP — the Math.round(0.49999999999999994)
-    class), which quantized inputs never hit.
+    """Cosine over integer-quantized vectors, Arrow-batched: each component
+    becomes round(x*scale) as int64, dot and norms are exact int64 sums
+    (order-independent), and only the final sqrt/division is floating —
+    so it equals the DuckDB oracle (``_sql_quantize`` + ``_sql_qcos`` in
+    ``plans/entry_queries.py``) to the last bit.
 
-    Rounding is half-away-from-zero to match Spark's HALF_UP round and
-    DuckDB's round() — numpy's own round() is banker's and would differ on
-    exact .5 ties. Null or length-mismatched vector pairs yield 0.0, the
-    same degradation as the expression form (null propagation → otherwise).
+    Rounding is half-away-from-zero, as DuckDB's round() is — numpy's own
+    round() is banker's and would differ on exact .5 ties. It is computed
+    as floor(m+0.5) / ceil(m-0.5), which differs from a correctly rounded
+    .5 tie only for doubles ADJACENT to one (the
+    Math.round(0.49999999999999994) class); quantized inputs never hit it.
+    A null vector, a length mismatch or a zero norm yields 0.0.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -747,20 +720,6 @@ def quantized_cosine_pandas(a: Column, b: Column, scale: int = 1000) -> Column:
         return pd.Series(out)
 
     return _cos(a, b)
-
-
-def quantized_cosine(a: Column, b: Column, scale: int = 1000) -> Column:
-    """Cosine over integer-quantized vectors (round(x*scale)): dot and norms
-    are exact int64 sums (order-independent), so Spark and DuckDB agree to
-    the last bit; only the final sqrt/division is floating."""
-    qa = F.transform(a, lambda x: F.round(x.cast("double") * scale).cast("long"))
-    qb = F.transform(b, lambda x: F.round(x.cast("double") * scale).cast("long"))
-    dot = F.aggregate(F.zip_with(qa, qb, lambda x, y: x * y), F.lit(0).cast("long"), lambda s, v: s + v)
-    na = F.aggregate(F.transform(qa, lambda x: x * x), F.lit(0).cast("long"), lambda s, v: s + v)
-    nb = F.aggregate(F.transform(qb, lambda x: x * x), F.lit(0).cast("long"), lambda s, v: s + v)
-    return F.when(
-        (na > 0) & (nb > 0), dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double")))
-    ).otherwise(F.lit(0.0))
 
 
 def dedup_embedding_cosine(

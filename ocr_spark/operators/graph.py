@@ -57,71 +57,12 @@ def pagerank(
     same number of rounds, and rank consumers (sampling weights) want a
     deterministic cost, not a tolerance. Node ids must be integer-typed
     (map string URLs through a surrogate — the same id contract as the
-    GEMM kernels)."""
-    from pyspark import StorageLevel
+    GEMM kernels).
 
-    e = (
-        edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        )
-        .distinct()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # pre-partition the two cached sides on their join keys: a persisted
-    # DataFrame's partitioning is visible to Catalyst, so when the rank
-    # table outgrows the broadcast threshold and the per-round join goes
-    # sort-merge, only the N-row rank table exchanges — never the ~3N-row
-    # edge table (below the threshold Spark broadcasts ranks and neither
-    # side shuffles; on this steal-bound host the wall clock is dominated
-    # by the sort/agg CPU either way — see tools/pagerank_scale_bench.py)
-    ew = (
-        e.join(outdeg, "src")
-        .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition("node")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = nodes.count()  # driver scalar; also materializes the persisted nodes
-    if n == 0:
-        return nodes.select("node", F.lit(0).cast("long").alias("rank_units"))
-    base = (15 * UNIT) // (100 * n)
-    ranks = nodes.select("node", F.lit(UNIT // n).cast("long").alias("r"))
-    for i in range(n_iters):
-        contrib = ew.join(ranks, ew.src == ranks.node).select(
-            "dst", F.expr("r div outdeg").alias("c")
-        )
-        insum = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(insum, nodes.node == insum.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr("(85 * coalesce(s, 0L)) div 100")
-                ).cast("long").alias("r"),
-            )
-            # lazy within a cadence window, eager every 8th round: a lazy
-            # chain nests one plan level per round and Catalyst re-analysis
-            # goes super-linear past ~dozens of levels (the connected-
-            # components lesson), so long runs pin the chain periodically
-            # while short runs still execute in one job
-            .localCheckpoint(eager=(i + 1) % 8 == 0)
-        )
-    # eager: pin the result BEFORE releasing the edge/node caches — a lazy
-    # return would re-execute every round against the unpersisted (i.e.
-    # recomputed-per-use) edge table at the caller's first action
-    out = ranks.select("node", F.col("r").alias("rank_units")).localCheckpoint(
-        eager=True
-    )
-    ew.unpersist()
-    nodes.unpersist()
-    return out
+    PageRank is :func:`trustrank` with every node a seed (S = N, so
+    r_0 = UNIT div N and the teleport is uniform): both run one seeded
+    loop, and this call passes no seed set, so no seed join runs."""
+    return _seeded_rank(edges, None, n_iters, src_col, dst_col, "rank_units")
 
 
 HITS_SCALE = 10**6
@@ -253,14 +194,30 @@ def trustrank(
     Non-seed nodes receive trust ONLY through in-links — a node unreachable
     from every seed stays exactly 0 (the property that makes the score a
     spam gate rather than a popularity score). With S = all nodes this
-    degenerates to :func:`pagerank` bit-for-bit.
+    is :func:`pagerank` bit-for-bit.
 
-    Plan shape is pagerank's: the per-iteration join keys on src against
-    the once-persisted pre-partitioned edge+outdeg table, the node table
-    carries the seed indicator so `base` is a column expression (no second
-    join per round), two shuffles per iteration, localCheckpoint cadence
-    identical. The only driver scalar is S (a count, like pagerank's N).
-    An empty effective seed set returns all-zero trust."""
+    Both run one seeded loop, so the plan shape is pagerank's: the
+    per-iteration join keys on src against the once-persisted
+    pre-partitioned edge+outdeg table, the node table carries the seed
+    indicator so `base` is a column expression (no second join per
+    round), two shuffles per iteration, the same localCheckpoint cadence.
+    The only driver scalar is S (a count; pagerank's is N). An empty
+    effective seed set returns all-zero trust."""
+    sd = seeds.select(F.col(seed_col).cast("long").alias("node"))
+    return _seeded_rank(edges, sd, n_iters, src_col, dst_col, "trust_units")
+
+
+def _seeded_rank(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    n_iters: int,
+    src_col: str,
+    dst_col: str,
+    out_col: str,
+) -> DataFrame:
+    """The loop :func:`pagerank` and :func:`trustrank` share → (node,
+    out_col). ``seeds`` is a one-column (node) frame, or None for every
+    node a seed (S = N: the uniform teleport, with no seed join)."""
     from pyspark import StorageLevel
 
     e = (
@@ -271,62 +228,76 @@ def trustrank(
         .distinct()
     )
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    # pre-partition the two cached sides on their join keys: a persisted
+    # DataFrame's partitioning is visible to Catalyst, so when the rank
+    # table outgrows the broadcast threshold and the per-round join goes
+    # sort-merge, only the N-row rank table exchanges — never the ~3N-row
+    # edge table (below the threshold Spark broadcasts ranks and neither
+    # side shuffles; on a steal-bound VM the wall clock is dominated
+    # by the sort/agg CPU either way — see tools/pagerank_scale_bench.py)
     ew = (
         e.join(outdeg, "src")
         .repartition("src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sd = seeds.select(F.col(seed_col).cast("long").alias("node")).distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .join(sd.select("node", F.lit(1).alias("is_seed")), "node", "left")
-        .select("node", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
-        .repartition("node")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    s = nodes.filter(F.col("is_seed") == 1).count()  # driver scalar (like N)
-    if s == 0:
-        out = nodes.select(
-            "node", F.lit(0).cast("long").alias("trust_units")
-        ).localCheckpoint(eager=True)
+    if seeds is None:
+        nodes = nodes.select("node", F.lit(1).alias("is_seed"))
+    else:
+        nodes = nodes.join(
+            seeds.distinct().select("node", F.lit(1).alias("is_seed")), "node", "left"
+        ).select("node", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
+    nodes = nodes.repartition("node").persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        # the one driver scalar; also materializes the persisted nodes
+        s = nodes.filter(F.col("is_seed") == 1).count()
+        if s == 0:
+            return nodes.select(
+                "node", F.lit(0).cast("long").alias(out_col)
+            ).localCheckpoint(eager=True)
+        base = F.when(
+            F.col("is_seed") == 1, F.lit((15 * UNIT) // (100 * s))
+        ).otherwise(F.lit(0))
+        ranks = nodes.select(
+            "node",
+            F.when(F.col("is_seed") == 1, F.lit(UNIT // s))
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("r"),
+        )
+        for i in range(n_iters):
+            contrib = ew.join(ranks, ew.src == ranks.node).select(
+                "dst", F.expr("r div outdeg").alias("c")
+            )
+            insum = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+            ranks = (
+                nodes.join(insum, nodes.node == insum.dst, "left")
+                .select(
+                    "node",
+                    (base + F.expr("(85 * coalesce(s, 0L)) div 100"))
+                    .cast("long")
+                    .alias("r"),
+                )
+                # lazy within a cadence window, eager every 8th round: a
+                # lazy chain nests one plan level per round and Catalyst
+                # re-analysis goes super-linear past ~dozens of levels (the
+                # connected-components lesson), so long runs pin the chain
+                # periodically while short runs still execute in one job
+                .localCheckpoint(eager=(i + 1) % 8 == 0)
+            )
+        # eager: pin the result BEFORE releasing the edge/node caches — a
+        # lazy return would re-execute every round against the unpersisted
+        # (i.e. recomputed-per-use) edge table at the caller's first action
+        return ranks.select("node", F.col("r").alias(out_col)).localCheckpoint(
+            eager=True
+        )
+    finally:
         ew.unpersist()
         nodes.unpersist()
-        return out
-    base = F.when(
-        F.col("is_seed") == 1, F.lit((15 * UNIT) // (100 * s))
-    ).otherwise(F.lit(0))
-    ranks = nodes.select(
-        "node",
-        "is_seed",
-        F.when(F.col("is_seed") == 1, F.lit(UNIT // s))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("r"),
-    )
-    for i in range(n_iters):
-        contrib = ew.join(ranks, ew.src == ranks.node).select(
-            "dst", F.expr("r div outdeg").alias("c")
-        )
-        insum = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(insum, nodes.node == insum.dst, "left")
-            .select(
-                "node",
-                "is_seed",
-                (base + F.expr("(85 * coalesce(s, 0L)) div 100"))
-                .cast("long")
-                .alias("r"),
-            )
-            .localCheckpoint(eager=(i + 1) % 8 == 0)
-        )
-    out = ranks.select("node", F.col("r").alias("trust_units")).localCheckpoint(
-        eager=True
-    )
-    ew.unpersist()
-    nodes.unpersist()
-    return out
 
 
 def label_propagation(

@@ -200,6 +200,10 @@ def create_bilingual_columns(text: Column) -> Column:
     ).otherwise(_empty_columns())
 
 
+def _block_lang(t: Column) -> Column:
+    return F.when(_cyr_count(t) > _lat_count(t), F.lit("ru")).otherwise(F.lit("en"))
+
+
 def detect_language_split(text: Column) -> Column:
     """W5+W6 alternating-language split (pdf_processor.py:765-875).
 
@@ -239,12 +243,9 @@ def detect_language_split(text: Column) -> Column:
         F.length(left_text), F.length(right_text), F.lit(1)
     )
 
-    def block_lang(t):
-        return F.when(_cyr_count(t) > _lat_count(t), F.lit("ru")).otherwise(F.lit("en"))
-
     cols = F.array(
-        _column_struct(left_text, F.lit("left"), block_lang(left_text), F.size(left), F.lit(config.ALTERNATING_CONFIDENCE)),
-        _column_struct(right_text, F.lit("right"), block_lang(right_text), F.size(right), F.lit(config.ALTERNATING_CONFIDENCE)),
+        _column_struct(left_text, F.lit("left"), _block_lang(left_text), F.size(left), F.lit(config.ALTERNATING_CONFIDENCE)),
+        _column_struct(right_text, F.lit("right"), _block_lang(right_text), F.size(right), F.lit(config.ALTERNATING_CONFIDENCE)),
     )
     ok = (
         (F.size(raw) >= config.ALTERNATING_MIN_LINES)
@@ -298,12 +299,9 @@ def detect_column_patterns_split(text: Column) -> Column:
         F.length(left_text), F.length(right_text), F.lit(1)
     )
 
-    def block_lang(t):
-        return F.when(_cyr_count(t) > _lat_count(t), F.lit("ru")).otherwise(F.lit("en"))
-
     cols = F.array(
-        _column_struct(left_text, F.lit("left"), block_lang(left_text), F.size(left_lines), F.lit(config.PATTERN_CONFIDENCE)),
-        _column_struct(right_text, F.lit("right"), block_lang(right_text), F.size(right_lines), F.lit(config.PATTERN_CONFIDENCE)),
+        _column_struct(left_text, F.lit("left"), _block_lang(left_text), F.size(left_lines), F.lit(config.PATTERN_CONFIDENCE)),
+        _column_struct(right_text, F.lit("right"), _block_lang(right_text), F.size(right_lines), F.lit(config.PATTERN_CONFIDENCE)),
     )
     ok = (
         (n_pat >= config.PATTERN_MIN_COUNT)

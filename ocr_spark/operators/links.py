@@ -585,6 +585,14 @@ def _xml_unescape(c: Column) -> Column:
     return c
 
 
+def _xml_blocks(xml: Column, pat: str, kind: str) -> Column:
+    """Every match of ``pat`` in ``xml`` as a (kind, b) struct."""
+    return F.transform(
+        F.regexp_extract_all(xml, F.lit(pat), 0),
+        lambda b: F.struct(F.lit(kind).alias("kind"), b.alias("b")),
+    )
+
+
 def sitemap_entries(
     maps: DataFrame, url_col: str = "sitemap_url", xml_col: str = "xml"
 ) -> DataFrame:
@@ -605,14 +613,9 @@ def sitemap_entries(
     lastmod, priority_milli)."""
     xml = F.coalesce(F.col(xml_col), F.lit(""))
 
-    def blocks(pat: str, kind: str) -> Column:
-        return F.transform(
-            F.regexp_extract_all(xml, F.lit(pat), 0),
-            lambda b: F.struct(F.lit(kind).alias("kind"), b.alias("b")),
-        )
-
     allb = F.concat(
-        blocks(_SM_URL_BLOCK_RE, "url"), blocks(_SM_SMAP_BLOCK_RE, "sitemap")
+        _xml_blocks(xml, _SM_URL_BLOCK_RE, "url"),
+        _xml_blocks(xml, _SM_SMAP_BLOCK_RE, "sitemap"),
     )
     rows = maps.select(
         F.col(url_col).alias("sitemap_url"), F.explode(allb).alias("e")
@@ -691,13 +694,9 @@ def feed_entries(
     published)."""
     xml = F.coalesce(F.col(xml_col), F.lit(""))
 
-    def blocks(pat: str, kind: str) -> Column:
-        return F.transform(
-            F.regexp_extract_all(xml, F.lit(pat), 0),
-            lambda b: F.struct(F.lit(kind).alias("kind"), b.alias("b")),
-        )
-
-    allb = F.concat(blocks(_FEED_ITEM_RE, "rss"), blocks(_FEED_ENTRY_RE, "atom"))
+    allb = F.concat(
+        _xml_blocks(xml, _FEED_ITEM_RE, "rss"), _xml_blocks(xml, _FEED_ENTRY_RE, "atom")
+    )
     rows = feeds.select(
         F.col(url_col).alias("feed_url"), F.explode(allb).alias("e")
     )

@@ -18,7 +18,7 @@ IVF×PQ is the composition production batch indexes (FAISS on Spark
 clusters) actually run, and it covers the same recall/latency envelope
 for batched offline queries.
 
-All math is integer-quantized (see dedup.quantized_cosine) so the DuckDB
+All math is integer-quantized (see dedup.quantized_cosine_pandas) so the DuckDB
 oracle agrees bit-for-bit; the hyperplanes are integer-hash ±1 matrices —
 no RNG state, reproducible everywhere.
 """
@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ocr_spark.operators.dedup import quantized_cosine, quantized_cosine_pandas
+from ocr_spark.operators.dedup import quantized_cosine_pandas
 
 LSH_PLANES = 8
 LSH_SEED = 0x5EED2026

@@ -167,33 +167,41 @@ def assemble_spans(
     return _assemble_salted(kept, salt_chunk)
 
 
+def _span_key() -> Column:
+    """A span row as the struct whose natural order is the canonical span
+    order (offset, kind, text, media_ref)."""
+    return F.struct(
+        F.col("offset").alias("offset"),
+        F.col("kind").alias("kind"),
+        F.col("text").alias("text"),
+        F.col("media_ref").alias("media_ref"),
+    )
+
+
+def _numbered(ordered: Column) -> Column:
+    """Ordered spans → the output spans, each with its 0-based position
+    as ``order``."""
+    return F.transform(
+        ordered,
+        lambda s, i: F.struct(
+            s["kind"].alias("kind"),
+            s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"),
+            i.cast("int").alias("order"),
+        ),
+    ).cast(_OUT_SPAN_TYPE)
+
+
 def _assemble_single_phase(kept: DataFrame) -> DataFrame:
     """One shuffle: groupBy(doc_id) + sort inside the aggregation. Tie
     order for duplicate offsets is the full (offset, kind, text, media_ref)
     tuple — identical to the chunked path."""
     merged = kept.groupBy("doc_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("offset").alias("offset"),
-                    F.col("kind").alias("kind"),
-                    F.col("text").alias("text"),
-                    F.col("media_ref").alias("media_ref"),
-                )
-            )
-        ).alias("ordered")
+        F.sort_array(F.collect_list(_span_key())).alias("ordered")
     )
     return merged.select(
         "doc_id",
-        F.transform(
-            F.col("ordered"),
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("order"),
-            ),
-        ).cast(_OUT_SPAN_TYPE).alias("spans"),
+        _numbered(F.col("ordered")).alias("spans"),
     )
 
 
@@ -202,16 +210,7 @@ def _assemble_salted(kept: DataFrame, salt_chunk: int) -> DataFrame:
         kept.withColumn("salt", (F.col("offset") / F.lit(salt_chunk)).cast("long"))
         .groupBy("doc_id", "salt")
         .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("offset").alias("offset"),
-                        F.col("kind").alias("kind"),
-                        F.col("text").alias("text"),
-                        F.col("media_ref").alias("media_ref"),
-                    )
-                )
-            ).alias("chunk")
+            F.sort_array(F.collect_list(_span_key())).alias("chunk")
         )
     )
 
@@ -231,15 +230,7 @@ def _assemble_salted(kept: DataFrame, salt_chunk: int) -> DataFrame:
 
     return merged.select(
         "doc_id",
-        F.transform(
-            F.col("ordered"),
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("order"),
-            ),
-        ).cast(_OUT_SPAN_TYPE).alias("spans"),
+        _numbered(F.col("ordered")).alias("spans"),
     )
 
 
@@ -559,15 +550,7 @@ def coalesce_spans(
             )
         ),
     )
-    out_spans = F.transform(
-        merged_arr,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("order"),
-        ),
-    ).cast(_OUT_SPAN_TYPE)
+    out_spans = _numbered(merged_arr)
 
     if big_doc_spans is None:
         return docs.select(F.col(id_col).alias("doc_id"), out_spans.alias("spans"))

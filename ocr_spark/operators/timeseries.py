@@ -44,11 +44,8 @@ def asof_join(
     to agree. Right-side ties are deduped with one window pass BEFORE the
     union, so the carry-forward sees a total order.
 
-    Mega-key caveat: the carry-forward window sorts each key group on one
-    reducer — correct at any size, but a key owning 10⁹ rows serializes.
-    For such keys use :func:`asof_join_chunked` — identical semantics
-    (pinned by test), per-(key, time-chunk) windows plus a bounded
-    distinct-chunk carry pass."""
+    The carry-forward window sorts each key group on one reducer — correct
+    at any size, but a key owning 10⁹ rows serializes."""
     rsel = right.select(
         F.col(key_col).alias("__k"),
         F.col(ts_col).alias("__ts"),
@@ -151,118 +148,3 @@ def range_join(
         & (p[ts_col] <= i["__e"]),
     )
     return j.select(*[points[c] for c in points.columns], *[F.col(c) for c in value_cols])
-
-
-def asof_join_chunked(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    left_id_col: str = "event_id",
-    value_cols: tuple[str, ...] = ("value",),
-    tie_col: str | None = None,
-    suffix: str = "_asof",
-    chunk: int = 86_400,
-) -> DataFrame:
-    """:func:`asof_join` for MEGA-KEYS — identical semantics (pinned by
-    test), but no per-key window ever sees more than one time chunk.
-
-    ``ts_col`` must be an integer (epoch seconds/millis — convert with
-    ``wall_epoch_seconds``); rows partition into ``chunk``-sized windows
-    and the carry-forward runs per (key, chunk) — bounded partitions at
-    any key size. Cross-chunk carry is a SECOND, bounded pass over the
-    DISTINCT chunk axis: one summary row per non-empty (key, chunk) (the
-    chunk's last right-side row) unions with the distinct miss chunks,
-    one per-key window over those ≤ 2·chunks-per-key rows carries the
-    latest summary forward (miss rows ordered before same-chunk
-    summaries, so a miss never sees a right row later in its own chunk),
-    and misses resolve by plain equi-join on (key, chunk) — never a
-    chunk-range theta join. Same right-tie dedup, same
-    inclusive-at-equal-ts convention."""
-    rsel = right.select(
-        F.col(key_col).alias("__k"),
-        F.col(ts_col).alias("__ts"),
-        *([F.col(tie_col).alias("__tie")] if tie_col is not None else []),
-        *[F.col(c) for c in value_cols],
-    )
-    if tie_col is not None:
-        wt = Window.partitionBy("__k", "__ts").orderBy(F.col("__tie").desc())
-        rsel = (
-            rsel.withColumn("__rn", F.row_number().over(wt))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__tie")
-        )
-    rpack = rsel.select(
-        "__k",
-        "__ts",
-        F.expr(f"__ts div {chunk}").alias("__c"),
-        F.lit(0).alias("__side"),
-        F.lit(None).cast("long").alias("__lid"),
-        F.struct(
-            F.col("__ts").alias("rts"), *[F.col(c).alias(c) for c in value_cols]
-        ).alias("__r"),
-    )
-    rtype = dict(rpack.dtypes)["__r"]
-    lpack = left.select(
-        F.col(key_col).alias("__k"),
-        F.col(ts_col).alias("__ts"),
-        F.expr(f"{ts_col} div {chunk}").alias("__c"),
-        F.lit(1).alias("__side"),
-        F.col(left_id_col).cast("long").alias("__lid"),
-        F.lit(None).cast(rtype).alias("__r"),
-    )
-    w = (
-        Window.partitionBy("__k", "__c")
-        .orderBy(F.col("__ts").asc(), F.col("__side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    in_chunk = (
-        rpack.unionByName(lpack)
-        .withColumn("__cin", F.last("__r", ignorenulls=True).over(w))
-        .filter(F.col("__side") == 1)
-    )
-    # cross-chunk carry, fully bounded and equi-join-only: what a miss
-    # needs depends on (key, chunk), not on the row — so carry over the
-    # DISTINCT chunk axis. One summary row per non-empty (key, chunk)
-    # (its last right row) unions with the distinct miss chunks; a window
-    # per key over those rows (≤ 2·chunks-per-key — bounded regardless of
-    # key size) carries the latest summary forward, with miss rows
-    # ordered BEFORE same-chunk summaries so a miss never sees a right
-    # row later in its own chunk (the in-chunk pass already proved none
-    # exists at-or-before its ts). Misses then resolve by plain equi-join.
-    misses = in_chunk.filter(F.col("__cin").isNull())
-    hits = in_chunk.filter(F.col("__cin").isNotNull())
-    sum_rows = (
-        rpack.groupBy("__k", "__c")
-        .agg(F.max_by("__r", F.col("__ts")).alias("__carry"))
-        .withColumn("__o", F.lit(1))
-    )
-    miss_chunks = (
-        misses.select("__k", "__c").distinct()
-        .withColumn("__carry", F.lit(None).cast(rtype))
-        .withColumn("__o", F.lit(0))
-    )
-    wcar = (
-        Window.partitionBy("__k")
-        .orderBy(F.col("__c").asc(), F.col("__o").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carries = (
-        miss_chunks.unionByName(sum_rows)
-        .withColumn("__cb", F.last("__carry", ignorenulls=True).over(wcar))
-        .filter(F.col("__o") == 0)
-        .select("__k", "__c", "__cb")
-    )
-    resolved = (
-        misses.drop("__cin")
-        .join(carries, ["__k", "__c"], "left")
-        .select("__k", "__ts", "__lid", F.col("__cb").alias("__cin"))
-    )
-    out = hits.select("__k", "__ts", "__lid", "__cin").unionByName(resolved)
-    return out.select(
-        F.col("__lid").alias(left_id_col),
-        F.col("__k").alias(key_col),
-        F.col("__ts").alias(ts_col),
-        F.col("__cin.rts").alias(f"{ts_col}{suffix}"),
-        *[F.col(f"__cin.{c}").alias(f"{c}{suffix}") for c in value_cols],
-    )

@@ -158,7 +158,7 @@ def _sql_quantize(vec: str, scale: int = 1000) -> str:
 
 
 def _sql_qcos(qa: str, qb: str) -> str:
-    """dedup.quantized_cosine twin: products are integer-valued doubles →
+    """dedup.quantized_cosine_pandas twin: products are integer-valued doubles →
     list_dot_product sums them exactly in any order."""
     dot = f"list_dot_product({qa}::DOUBLE[], {qb}::DOUBLE[])"
     na = f"list_dot_product({qa}::DOUBLE[], {qa}::DOUBLE[])"
@@ -416,12 +416,6 @@ def q_metrics_rollup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _sql_wer_words(e: str) -> str:
-    """_wer_udf's norm_words twin: lower, strip, split on whitespace."""
-    s = _strip(f"lower(coalesce({e}, ''))")
-    return f"(CASE WHEN {s} = '' THEN []::VARCHAR[] ELSE regexp_split_to_array({s}, '{_WS}+') END)"
-
-
 # Word-level Levenshtein in pure SQL: intern each distinct word of the pair
 # to a single-BYTE codepoint (DuckDB levenshtein counts bytes, so chr(pos)
 # must stay <= 127 — valid while a pair's vocabulary is < 128 words; the
@@ -431,7 +425,7 @@ _SQL_WER = f"""
 WITH {D.SQL_PAIRS},
 ww AS (
   SELECT doc_id, extracted AS e, ground_truth AS g,
-         {_sql_wer_words('extracted')} AS ew, {_sql_wer_words('ground_truth')} AS gw
+         {_words_lower('extracted')} AS ew, {_words_lower('ground_truth')} AS gw
   FROM pairs
 ),
 wv AS (
@@ -6406,6 +6400,8 @@ def _sql_bp_flag_ctes(src: str) -> str:
     AND the html_spans oracle, so the classifier tree exists exactly once."""
     strip_tags = "regexp_replace(p, '(?s)<[^>]*>', '', 'g')"
     text_of = _strip(strip_tags)
+    # DuckDB array_to_string([]) is NULL, and least(NULL, 1.0) = 1.0 —
+    # coalesce, or anchor-free blocks all score link_density 1.0
     anchor = (
         "coalesce(array_to_string(list_transform("
         "regexp_extract_all(p, '(?is)<a\\b[^>]*>(.*?)</a>', 1), "
@@ -6423,6 +6419,8 @@ def _sql_bp_flag_ctes(src: str) -> str:
         f"THEN least(length({anchor})::DOUBLE / length({text_of}), 1.0) ELSE 0.0 END, "
         f"'depth': {depth}}}"
     )
+    # NumWordsRulesClassifier: fields of out-of-range blocks[i] are NULL →
+    # coalesce to the empty-block defaults
     clf = """
       CASE WHEN coalesce(b[i].link_density, 0.0) <= 0.333333 THEN
         CASE WHEN coalesce(b[i-1].link_density, 0.0) <= 0.555556 THEN
@@ -6465,42 +6463,6 @@ def _sql_html_extract(
     """Boilerplate-extraction oracle over any (doc_id, html) source SQL —
     parameterized so the fuzz-parity suite can feed adversarial HTML
     through the exact driver oracle."""
-    strip_tags = "regexp_replace(p, '(?s)<[^>]*>', '', 'g')"
-    text_of = _strip(strip_tags)
-    # DuckDB array_to_string([]) is NULL, and least(NULL, 1.0) = 1.0 —
-    # coalesce, or anchor-free blocks all score link_density 1.0
-    anchor = (
-        "coalesce(array_to_string(list_transform("
-        "regexp_extract_all(p, '(?is)<a\\b[^>]*>(.*?)</a>', 1), "
-        "a -> regexp_replace(a, '(?s)<[^>]*>', '', 'g')), ''), '')"
-    )
-    depth = (
-        "coalesce(list_sum(list_transform(tags[1:i-1], t -> "
-        f"CASE WHEN regexp_matches(t, '{_BP_OPEN_RE}') THEN 1 "
-        f"WHEN regexp_matches(t, '{_BP_CLOSE_RE}') THEN -1 ELSE 0 END)), 0)"
-    )
-    block = (
-        f"{{'text': {text_of}, "
-        f"'n_words': {_sql_bp_wordcount(text_of)}, "
-        f"'link_density': CASE WHEN length({text_of}) > 0 "
-        f"THEN least(length({anchor})::DOUBLE / length({text_of}), 1.0) ELSE 0.0 END, "
-        f"'depth': {depth}}}"
-    )
-    # NumWordsRulesClassifier: fields of out-of-range blocks[i] are NULL →
-    # coalesce to the empty-block defaults
-    clf = """
-      CASE WHEN coalesce(b[i].link_density, 0.0) <= 0.333333 THEN
-        CASE WHEN coalesce(b[i-1].link_density, 0.0) <= 0.555556 THEN
-          CASE WHEN coalesce(b[i].n_words, 0) <= 16 THEN
-            CASE WHEN coalesce(b[i+1].n_words, 0) <= 15
-                 THEN coalesce(b[i-1].n_words, 0) > 4
-                 ELSE TRUE END
-          ELSE TRUE END
-        ELSE CASE WHEN coalesce(b[i].n_words, 0) <= 40
-                  THEN coalesce(b[i+1].n_words, 0) > 17
-                  ELSE TRUE END
-        END
-      ELSE FALSE END"""
     return f"""
 WITH {_sql_bp_flag_ctes(src)}
 SELECT doc_id,

@@ -124,105 +124,6 @@ def sessionize(events: DataFrame) -> DataFrame:
     )
 
 
-class SessionProcessor:
-    """StatefulProcessor for :func:`sessionize_tws` — Spark 4's
-    arbitrary-state API (``transformWithStateInPandas``), same semantics
-    as the applyInPandasWithState sessionizer: closed sessions append,
-    the open session lives in a ValueState, a processing-time timer one
-    gap after the last event flushes it.
-
-    Deliberately duck-typed (not subclassing StatefulProcessor) so the
-    state machine runs under plain-Python fakes in pytest: the sandbox
-    lacks ``google.protobuf``, which the runtime's state-server client
-    needs, so the end-to-end streaming path is import-gated exactly like
-    the real-OCR adapters — the LOGIC is fully tested, the plumbing swap
-    point is this class."""
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("sess", STATE_SCHEMA)
-
-    @staticmethod
-    def _emit(user_id, start, end, n):
-        return pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_start": [pd.Timestamp(int(start), unit="s")],
-                "session_end": [pd.Timestamp(int(end), unit="s")],
-                "n_events": [n],
-            }
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        gap = SESSION_GAP_SECONDS
-        if self._state.exists():
-            start, end, n = self._state.get()
-            if n == 0:
-                start = end = None
-        else:
-            start, end, n = None, None, 0
-        all_ts: list[int] = []
-        for pdf in rows:
-            all_ts.extend((pdf["ts"].astype("int64") // 1_000_000_000).tolist())
-        for t in sorted(all_ts):
-            if start is None:
-                start, end, n = int(t), int(t), 1
-            elif t - end <= gap:
-                end, n = max(end, int(t)), n + 1
-            else:
-                yield self._emit(user_id, start, end, n)
-                start, end, n = int(t), int(t), 1
-        self._state.update((start or 0, end or 0, n))
-        # re-arm the gap timer behind the newest event (old API:
-        # setTimeoutDuration; here: explicit delete + register)
-        for t_ms in self._handle.listTimers():
-            self._handle.deleteTimer(t_ms)
-        self._handle.registerTimer(
-            timerValues.getCurrentProcessingTimeInMs() + gap * 1000
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        (user_id,) = key
-        if self._state.exists():
-            start, end, n = self._state.get()
-            if n:
-                yield self._emit(user_id, start, end, n)
-            self._state.clear()
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def sessionize_tws(events: DataFrame) -> DataFrame:
-    """Session windows on Spark 4's arbitrary-state API
-    (``transformWithStateInPandas`` + ``StatefulProcessor``) — the
-    successor to ``applyInPandasWithState`` used by :func:`sessionize`,
-    with identical semantics (pytest drives both state machines over the
-    same event history and asserts row equality against the batch twin).
-
-    Why both: the old API couples state and timeout into one GroupState;
-    the new one separates typed state handles (Value/List/Map) from
-    explicit timers, which is what multi-state operators (sessions + a
-    per-user counter, say) need.  Requires ``google.protobuf`` at
-    runtime (the state-server client) — absent from this sandbox, so the
-    end-to-end path is import-gated like the real-OCR engine adapters."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _P(SessionProcessor, StatefulProcessor):
-        pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _P(),
-        SESSION_SCHEMA,
-        "append",
-        "ProcessingTime",
-    )
-
-
 def sessionize_batch(events: DataFrame, gap_seconds: int = SESSION_GAP_SECONDS) -> DataFrame:
     """Batch-equivalent session windows (for oracle checking): classic
     lag/cumsum session assignment — two window passes, one shuffle."""

@@ -78,6 +78,14 @@ def test_pagerank_long_run_crosses_checkpoint_cadence(spark):
     assert got == py_pagerank(edges, 10)
 
 
+def test_pagerank_empty_graph_releases_caches(spark):
+    # the empty exit must unpersist the edge and node tables like the
+    # normal one does, or each call pins two MEMORY_AND_DISK caches
+    spark.catalog.clearCache()
+    assert pagerank(_df(spark, []), n_iters=3).collect() == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def py_hits(edges, iters):
     """Reference implementation of the exact integer HITS formulation."""
     from ocr_spark.operators.graph import HITS_SCALE as S

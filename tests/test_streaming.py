@@ -432,59 +432,39 @@ def test_interval_join_rejects_unknown_how(spark):
         interval_join(ev, ev, how="full_outer")
 
 
-def test_sessionize_tws_state_machine_equals_batch_sessionize(spark, events_path):
-    """Drive the transformWithState SessionProcessor under plain-Python
-    fakes (the sandbox lacks google.protobuf, which only the runtime's
-    state-server client needs) through the full event history, firing the
-    gap timer between microbatches exactly as the runtime would — the
-    emitted sessions must equal sessionize_batch row-for-row, including
-    the final open sessions the timer flushes."""
+def test_sessionize_state_machine_equals_batch_sessionize(spark, events_path):
+    """Drive ``_sessionize_group`` (the applyInPandasWithState body of
+    ``sessionize``) under a plain-Python GroupState through the full event
+    history, one microbatch per event, then one timed-out call per user as
+    the runtime makes after the gap — the emitted sessions must equal
+    sessionize_batch row-for-row, including the open sessions the timeout
+    flushes."""
     import pandas as pd
 
     from ocr_spark.streaming import events as EVM
 
-    class FakeValueState:
+    class FakeGroupState:
         def __init__(self):
             self._v = None
+            self.hasTimedOut = False
+            self.timeout_ms = None
 
+        @property
         def exists(self):
             return self._v is not None
 
+        @property
         def get(self):
             return self._v
 
         def update(self, v):
             self._v = tuple(v)
 
-        def clear(self):
+        def remove(self):
             self._v = None
 
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-            self.timers = []
-
-        def getValueState(self, name, schema):
-            return self.state
-
-        def listTimers(self):
-            return list(self.timers)
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    class FakeTimerValues:
-        def __init__(self, now_ms):
-            self._now = now_ms
-
-        def getCurrentProcessingTimeInMs(self):
-            return self._now
-
-        def getCurrentWatermarkInMs(self):
-            return -1
+        def setTimeoutDuration(self, ms):
+            self.timeout_ms = ms
 
     ev = spark.read.parquet(events_path).orderBy("ts", "event_id").collect()
     by_user = {}
@@ -493,21 +473,14 @@ def test_sessionize_tws_state_machine_equals_batch_sessionize(spark, events_path
 
     emitted = []
     for user_id, rows in by_user.items():
-        handle = FakeHandle()
-        proc = EVM.SessionProcessor()
-        proc.init(handle)
-        # one microbatch per event (worst case: maximal state round-trips),
-        # then fire the armed timer as the runtime would after the gap
-        for i, r in enumerate(rows):
+        state = FakeGroupState()
+        for r in rows:
             pdf = pd.DataFrame({"ts": [pd.Timestamp(r["ts"])]})
-            emitted.extend(
-                proc.handleInputRows((user_id,), iter([pdf]), FakeTimerValues(i))
-            )
-        assert len(handle.timers) == 1  # exactly one armed gap timer
-        emitted.extend(
-            proc.handleExpiredTimer((user_id,), FakeTimerValues(10**9), None)
-        )
-        assert not handle.state.exists()  # timer cleared the open session
+            emitted.extend(EVM._sessionize_group((user_id,), iter([pdf]), state))
+        assert state.timeout_ms == EVM.SESSION_GAP_SECONDS * 1000
+        state.hasTimedOut = True
+        emitted.extend(EVM._sessionize_group((user_id,), iter([]), state))
+        assert not state.exists  # the timeout flushed the open session
 
     got = sorted(
         (
@@ -528,21 +501,3 @@ def test_sessionize_tws_state_machine_equals_batch_sessionize(spark, events_path
         for r in EVM.sessionize_batch(spark.read.parquet(events_path)).collect()
     )
     assert got == want and len(got) == 12
-
-
-def test_sessionize_tws_plan_builds_and_runtime_gate(spark, events_path, tmp_path):
-    """The transformWithStateInPandas plan must CONSTRUCT (API wiring is
-    real); executing it needs google.protobuf, absent here — run it only
-    when available, with the same drain harness as the old-API test."""
-    stream = EV.read_events_stream(spark, events_path)
-    q = EV.sessionize_tws(stream)  # plan construction must not raise
-    assert q.isStreaming and set(q.columns) == {
-        "user_id", "session_start", "session_end", "n_events",
-    }
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf absent: transformWithState runtime gated")
-    _drain(q, tmp_path, "sessions_tws", expect_rows=8)
-    got = spark.sql("select * from sessions_tws").collect()
-    assert len(got) >= 8 and all(r["n_events"] == 5 for r in got)

@@ -93,7 +93,9 @@ def test_dedup_exact(docs_df):
 
 
 def test_minhash_signature_matches_python(spark, docs_df):
-    out = docs_df.select("doc_id", D.minhash_signature(F.col("text")).alias("sig")).collect()
+    out = docs_df.select(
+        "doc_id", D.minhash_feats_pandas(F.col("text"))["sigs"].alias("sig")
+    ).collect()
     for r in out:
         t = dict(DOCS)[r["doc_id"]]
         assert list(r["sig"]) == py_minhash(t), r["doc_id"]
@@ -2170,28 +2172,6 @@ def test_derive_df_cap_quantile_and_floor(spark):
     dfreq = spark.createDataFrame(rows, "h long, df long")
     assert D.derive_df_cap(dfreq, quantile=0.999, floor=8) == 8
     assert D.derive_df_cap(dfreq, quantile=1.0, floor=8) == 500
-
-
-def test_asof_join_chunked_equals_plain(spark):
-    """The mega-key chunked form must equal the single-window asof_join
-    on random data, across chunk sizes (including chunks smaller than
-    typical gaps, so the cross-chunk carry path is exercised hard)."""
-    import random
-
-    from ocr_spark.operators.timeseries import asof_join, asof_join_chunked
-
-    rnd = random.Random(13)
-    lefts = [(i, rnd.randrange(4), rnd.randrange(0, 20_000)) for i in range(250)]
-    rights = [(1000 + i, rnd.randrange(4), rnd.randrange(0, 20_000), float(i))
-              for i in range(80)]
-    l_df = spark.createDataFrame(lefts, "event_id long, user_id long, ts long")
-    r_df = spark.createDataFrame(rights, "event_id long, user_id long, ts long, value double")
-    kw = dict(key_col="user_id", ts_col="ts", left_id_col="event_id",
-              value_cols=("value",), tie_col="event_id")
-    want = sorted(map(tuple, asof_join(l_df, r_df, **kw).collect()))
-    for chunk in (100, 1_000, 50_000):
-        got = sorted(map(tuple, asof_join_chunked(l_df, r_df, chunk=chunk, **kw).collect()))
-        assert got == want, chunk
 
 
 def test_pack_interleaved_media_budget(spark):
