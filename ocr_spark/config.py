@@ -51,8 +51,11 @@ PATTERN_CONFIDENCE = 0.8
 
 # --- field extraction patterns (config.py:133-166 / data_extractor.py:12-45).
 # Order matters: first pattern with a match wins (data_extractor.py:96-103).
-# Written for Java regex; `(?iu)` = Unicode-aware case-insensitive, matching
-# Python's re.IGNORECASE on these patterns.  DuckDB (RE2) uses `(?i)`.
+# Written for Java regex, run with an `(?iU)` prefix (fields._java_ci):
+# UNICODE_CHARACTER_CLASS: Unicode case folding and Unicode `\s`/`\d`.
+# Python's `\s` and `\d` on str are Unicode, and `(?iu)` would leave them
+# ASCII-only in Java, so `(?iU)` is what matches re.IGNORECASE here.
+# DuckDB (RE2) uses `(?i)`.
 FIELD_PATTERNS: dict[str, list[str]] = {
     "name": [
         r"(?:имя|name|фио|ф\.и\.о\.?)\s*:?\s*([а-яё\s]+)",

@@ -1,9 +1,13 @@
 """Structured field extraction + validation (SURVEY.md §2.3 T6–T13, F4,
 §2.4 M10–M11, §2.5 A2) as generated Column-expression stacks.
 
-The reference's pattern table (config.py:133-166) is config data broadcast
-into literal `regexp_extract` chains — Catalyst folds and codegens the whole
-stack; nothing here touches Python at runtime.
+The reference's pattern table (config.py:133-166) is config data folded
+into literal `regexp_extract` chains; nothing here touches Python at
+runtime. The field map sits inside `map_filter`, which Spark evaluates
+interpreted (`CodegenFallback`) with no common-subexpression elimination,
+so every value read twice is bound once with `text.let`: each pattern
+runs at most once per text, a fallback pattern only when the earlier ones
+miss, and each normalizer reads its input once.
 """
 
 from __future__ import annotations
@@ -12,7 +16,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ocr_spark import config
-from ocr_spark.functions.text import py_strip
+from ocr_spark.functions.text import let, py_strip
 
 
 def _java_ci(pattern: str) -> str:
@@ -43,13 +47,18 @@ def _extract_raw(text: Column, field: str, patterns: dict[str, list[str]] | None
     """First match of the first matching pattern (data_extractor.py:96-103).
 
     Python: `re.findall(p, text, I|M)[0].strip()`, skipping patterns whose
-    first match strips to ''. regexp_extract returns '' on no match → nullif.
+    first match strips to ''. regexp_extract returns '' on no match → null.
+    Each stripped match is bound once and the next pattern runs only in
+    the `otherwise` branch of the one before.
     """
-    candidates = []
-    for pat in _patterns_for(field, patterns):
-        m = py_strip(F.regexp_extract(text, _java_ci(pat), 1))
-        candidates.append(F.nullif(m, F.lit("")))
-    return F.coalesce(*candidates)
+
+    def first(pats: list[str]) -> Column:
+        if not pats:
+            return F.lit(None).cast("string")
+        m = py_strip(F.regexp_extract(text, _java_ci(pats[0]), 1))
+        return let(m, lambda m: F.when(m != "", m).otherwise(first(pats[1:])))
+
+    return first(_patterns_for(field, patterns))
 
 
 def normalize_phone(v: Column) -> Column:
@@ -65,15 +74,21 @@ def normalize_email(v: Column) -> Column:
 def normalize_date(v: Column) -> Column:
     """T9 (data_extractor.py:148-162): separators → '.', keep if it then
     STARTS with d{1,2}.d{1,2}.d{2,4} (re.match = start-anchored), else the
-    original string. Stays a string — no DateType cast (reference parity)."""
-    norm = F.regexp_replace(v, r"[/\-]", ".")
-    return F.when(norm.rlike(r"^\d{1,2}\.\d{1,2}\.\d{2,4}"), norm).otherwise(v)
+    original string. Stays a string — no DateType cast (reference parity).
+    `(?U)`: Python's `\\d` matches every Unicode decimal digit."""
+    return let(
+        F.regexp_replace(v, r"[/\-]", "."),
+        lambda norm: F.when(norm.rlike(r"(?U)^\d{1,2}\.\d{1,2}\.\d{2,4}"), norm).otherwise(v),
+    )
 
 
 def normalize_amount(v: Column) -> Column:
-    """T10 (data_extractor.py:164-179): first number, comma → dot."""
-    num = F.regexp_extract(v, r"(\d+(?:[.,]\d+)?)", 1)
-    return F.when(num != "", F.regexp_replace(num, ",", ".")).otherwise(v)
+    """T10 (data_extractor.py:164-179): first number, comma → dot.
+    `(?U)`: Python's `\\d` matches every Unicode decimal digit."""
+    return let(
+        F.regexp_extract(v, r"(?U)(\d+(?:[.,]\d+)?)", 1),
+        lambda num: F.when(num != "", F.regexp_replace(num, ",", ".")).otherwise(v),
+    )
 
 
 def normalize_name(v: Column) -> Column:
@@ -100,7 +115,7 @@ def extract_field(text: Column, field: str, patterns: dict[str, list[str]] | Non
     normalizer, matching the reference's add_custom_field_pattern)."""
     raw = _extract_raw(text, field, patterns)
     norm = _NORMALIZERS.get(field)
-    return norm(raw) if norm else raw
+    return let(raw, norm) if norm else raw
 
 
 def extract_fields_map(

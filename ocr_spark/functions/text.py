@@ -1,6 +1,7 @@
 """Scalar text functions (SURVEY.md §2.3 T1–T5) as pure Column expressions.
 
-Everything here stays inside whole-stage codegen — no Python in the hot path.
+No Python in the hot path, and everything but :func:`let` (which
+:func:`line_language` uses) stays inside whole-stage codegen.
 Semantics follow the reference exactly (citations inline); the pure-Python
 twin lives in ``tests/reference_impl.py``.
 """
@@ -16,10 +17,16 @@ from ocr_spark import config
 #  * ocr_service._detect_language (ocr_service.py:650): lowercases first,
 #    then counts 'а'<=c<='я' — NOTE: 'ё' (U+0451) is OUTSIDE that range.
 #  * pdf_processor per-line counts (pdf_processor.py:304,:436): counts
-#    'а'<=c.lower()<='я' OR c in the full alphabet incl 'ё' → effectively
-#    [а-яё] on the lowered char.
+#    'а'<=c.lower()<='я' OR c in the lowercase alphabet incl 'ё', and
+#    Latin as 'a'<=c.lower()<='z' (a string comparison, so 'İ' → 'i̇' and
+#    the Kelvin sign → 'k' count too). Over single characters that is
+#    exactly the sets below; uppercase 'Ё' is in neither, because its
+#    lowercase 'ё' lies past 'я'. :func:`cyrillic_count` (the lowered
+#    [а-яё] count) does count 'Ё'.
 _CYR_NO_YO = "а-я"
 _CYR_WITH_YO = "а-яё"
+_PDF_CYRILLIC = "АБВГДЕЖЗИЙКЛМНОПРСТУФХЦЧШЩЪЫЬЭЮЯабвгдежзийклмнопрстуфхцчшщъыьэюяё"
+_PDF_LATIN = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz\u0130\u212a"
 
 
 def _count_chars(col: Column, char_class: str) -> Column:
@@ -52,6 +59,21 @@ def py_strip(col: Column) -> Column:
     strips U+001C-001F (the information separators); this does not, and
     never has."""
     return F.btrim(F.coalesce(col, F.lit("")), F.lit(UNICODE_WHITESPACE))
+
+
+def let(value: Column, body) -> Column:
+    """``body(v)`` with ``v`` bound to ``value``, which is evaluated once.
+
+    Spark runs higher-order functions (``transform``, ``filter``,
+    ``map_filter``, ``aggregate``, ...) interpreted, with no
+    common-subexpression elimination inside their arguments, so an
+    expression that reads the same sub-expression twice evaluates it
+    twice. Outside them, ``nullif`` and friends are rewritten through
+    Spark's ``With``, which hoists its input only when the use is not
+    under a conditional. A one-element ``transform`` is the binding that
+    holds everywhere: its lambda variable is the value, computed once,
+    and a ``when``/``coalesce`` in ``body`` stays lazy."""
+    return F.transform(F.array(value), body)[0]
 
 
 def split_words(col: Column) -> Column:
@@ -103,15 +125,22 @@ def detect_language_ocr(col: Column) -> Column:
     )
 
 
+def script_balance(col: Column) -> Column:
+    """Cyrillic minus Latin letters of ``col`` by the pdf per-line counts
+    (null → null), without a regex: each count is the length a
+    ``translate`` that deletes its letters takes off the text, so the
+    difference is that of the two translated lengths."""
+    return F.length(F.translate(col, _PDF_LATIN, "")) - F.length(F.translate(col, _PDF_CYRILLIC, ""))
+
+
 def line_language(col: Column) -> Column:
     """Per-line language of the PDF path (pdf_processor.py:789-797):
-    'ru' if cyr>lat and cyr>0; 'en' if lat>cyr and lat>0; else 'mixed'."""
-    cyr = cyrillic_count(col, include_yo=True)
-    lat = latin_count(col)
-    return (
-        F.when((cyr > lat) & (cyr > 0), F.lit("ru"))
-        .when((lat > cyr) & (lat > 0), F.lit("en"))
-        .otherwise(F.lit("mixed"))
+    'ru' if cyr>lat and cyr>0; 'en' if lat>cyr and lat>0; else 'mixed'.
+    Both counts are ≥ 0, so cyr>lat already means cyr>0: the sign of
+    :func:`script_balance`, evaluated once, decides."""
+    return let(
+        script_balance(col),
+        lambda d: F.when(d > 0, F.lit("ru")).when(d < 0, F.lit("en")).otherwise(F.lit("mixed")),
     )
 
 

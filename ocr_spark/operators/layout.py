@@ -28,32 +28,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ocr_spark import config
-from ocr_spark.functions.text import correct_ocr_errors, py_strip
+from ocr_spark.functions.text import correct_ocr_errors, let, line_language, py_strip, script_balance
 
 # ---------------------------------------------------------------------------
 # lambda-friendly scalar helpers
 # ---------------------------------------------------------------------------
-
-
-def _cyr_count(c: Column) -> Column:
-    """pdf-variant Cyrillic count (includes 'ё'), pdf_processor.py:304."""
-    low = F.lower(c)
-    return F.length(low) - F.length(F.regexp_replace(low, "[а-яё]", ""))
-
-
-def _lat_count(c: Column) -> Column:
-    low = F.lower(c)
-    return F.length(low) - F.length(F.regexp_replace(low, "[a-z]", ""))
-
-
-def _line_lang(c: Column) -> Column:
-    """pdf_processor.py:789-797: 'ru' / 'en' / 'mixed' per line."""
-    cyr, lat = _cyr_count(c), _lat_count(c)
-    return (
-        F.when((cyr > lat) & (cyr > 0), F.lit("ru"))
-        .when((lat > cyr) & (lat > 0), F.lit("en"))
-        .otherwise(F.lit("mixed"))
-    )
 
 
 def _column_struct(text, side, language, items_count, confidence_avg) -> Column:
@@ -84,16 +63,23 @@ def _empty_columns() -> Column:
 # Spark evaluates higher-order functions (transform, filter, zip_with,
 # aggregate, ...) interpreted, outside whole-stage codegen, and runs no
 # common-subexpression elimination inside their arguments: a lambda that
-# strips a line re-strips it on every use. So the gate below strips and
-# features each line once, in one transform, and counts pairs in one
-# aggregate fold over consecutive lines.
+# strips a line re-strips it on every use. So the text path splits and
+# strips the lines once (bound with ``let``), features each line once in
+# one transform, counts pairs in one aggregate fold over consecutive
+# lines, and tags each line with its language once.
+
+
+def _stripped_lines(text: Column) -> Column:
+    """The text's lines, each `str.strip()`ed (null text → one '')."""
+    return F.transform(F.split(F.coalesce(text, F.lit("")), "\n"), py_strip)
 
 
 def _line_features(line: Column) -> Column:
-    """What the translation-pair test reads of one stripped line."""
+    """What the translation-pair test reads of one stripped line.
+    `(?U)`: Python's `\\d` matches every Unicode decimal digit."""
     return F.struct(
         (line != "").alias("ne"),
-        F.regexp_extract_all(line, F.lit(r"\d+"), 0).alias("nums"),
+        F.regexp_extract_all(line, F.lit(r"(?U)\d+"), 0).alias("nums"),
         line.rlike(r"^[1-5]\.").alias("numbered"),
         F.upper(line).alias("up"),
     )
@@ -119,13 +105,10 @@ def _is_translation_pair(a: Column, b: Column) -> Column:
     return same_numbers | (a["numbered"] & b["numbered"]) | kw
 
 
-def is_clear_side_by_side(text: Column) -> Column:
-    """W8 gate (pdf_processor.py:332-366): ≥5 translation pairs over
-    consecutive raw-line pairs, needs ≥10 raw lines."""
-    lines = F.split(F.coalesce(text, F.lit("")), "\n")
-    feats = F.transform(F.transform(lines, py_strip), _line_features)
+def _side_by_side(lines: Column) -> Column:
+    """The W8 gate over already stripped lines."""
     counted = F.aggregate(
-        feats,
+        F.transform(lines, _line_features),
         F.struct(_no_line().alias("prev"), F.lit(0).alias("n")),
         lambda acc, x: F.struct(
             x.alias("prev"),
@@ -138,30 +121,47 @@ def is_clear_side_by_side(text: Column) -> Column:
     return (F.size(lines) >= config.SBS_MIN_LINES) & (counted["n"] >= config.SBS_MIN_PAIRS)
 
 
-def _language_bucket_columns(text: Column, confidence: float) -> Column:
-    """G1 (pdf_processor.py:415-488 / :537-608): bucket non-empty stripped
-    lines by per-line language; ru column left, en column right."""
-    stripped = F.filter(
-        F.transform(F.split(F.coalesce(text, F.lit("")), "\n"), py_strip),
-        lambda l: l != "",
+def is_clear_side_by_side(text: Column) -> Column:
+    """W8 gate (pdf_processor.py:332-366): ≥5 translation pairs over
+    consecutive raw-line pairs, needs ≥10 raw lines."""
+    return _side_by_side(_stripped_lines(text))
+
+
+def _language_bucket_columns(lines: Column, confidence: float) -> Column:
+    """G1 (pdf_processor.py:415-488 / :537-608): bucket the non-empty
+    stripped ``lines`` by per-line language; ru column left, en column
+    right."""
+    tagged = F.transform(
+        F.filter(lines, lambda l: l != ""),
+        lambda l: F.struct(l.alias("l"), line_language(l).alias("lang")),
     )
-    ru = F.filter(stripped, lambda l: _line_lang(l) == "ru")
-    en = F.filter(stripped, lambda l: _line_lang(l) == "en")
-    both = (F.size(ru) > 0) & (F.size(en) > 0)
-    cols = F.array(
-        _column_struct(F.array_join(ru, "\n"), F.lit("left"), F.lit("ru"), F.size(ru), F.lit(confidence)),
-        _column_struct(F.array_join(en, "\n"), F.lit("right"), F.lit("en"), F.size(en), F.lit(confidence)),
+
+    def bucket(ts: Column, lang: str) -> Column:
+        return F.transform(F.filter(ts, lambda t: t["lang"] == lang), lambda t: t["l"])
+
+    def columns(ru: Column, en: Column) -> Column:
+        cols = F.array(
+            _column_struct(F.array_join(ru, "\n"), F.lit("left"), F.lit("ru"), F.size(ru), F.lit(confidence)),
+            _column_struct(F.array_join(en, "\n"), F.lit("right"), F.lit("en"), F.size(en), F.lit(confidence)),
+        )
+        return F.when((F.size(ru) > 0) & (F.size(en) > 0), cols).otherwise(_empty_columns())
+
+    return let(
+        tagged,
+        lambda ts: let(bucket(ts, "ru"), lambda ru: let(bucket(ts, "en"), lambda en: columns(ru, en))),
     )
-    return F.when(both, cols).otherwise(_empty_columns())
 
 
 def analyze_text_columns(text: Column) -> Column:
     """The reference's live text-path analysis (pdf_processor.py:292-330):
     columns only when the strict side-by-side gate fires."""
-    return F.when(
-        is_clear_side_by_side(text),
-        _language_bucket_columns(text, config.SBS_CONFIDENCE),
-    ).otherwise(_empty_columns())
+    return let(
+        _stripped_lines(text),
+        lambda lines: F.when(
+            _side_by_side(lines),
+            _language_bucket_columns(lines, config.SBS_CONFIDENCE),
+        ).otherwise(_empty_columns()),
+    )
 
 
 # --- secondary text-path detectors (kept for parity; not on the live path) --
@@ -169,39 +169,33 @@ def analyze_text_columns(text: Column) -> Column:
 
 def has_clear_bilingual_structure(text: Column) -> Column:
     """W9 (pdf_processor.py:490-535): ≥3 consecutive opposite-script pairs,
-    ≥6 raw lines."""
-    lines = F.split(F.coalesce(text, F.lit("")), "\n")
-    n = F.size(lines)
-    l1s = F.transform(F.slice(lines, 1, F.greatest(n - 1, F.lit(0))), py_strip)
-    l2s = F.transform(F.slice(lines, 2, F.greatest(n - 1, F.lit(0))), py_strip)
+    ≥6 raw lines. An empty line is 'mixed', so pairs need no emptiness
+    test of their own."""
+    langs = F.transform(_stripped_lines(text), line_language)
 
-    def is_ru(l):
-        return (_cyr_count(l) > _lat_count(l)) & (_cyr_count(l) > 0)
+    def count(ls: Column) -> Column:
+        n = F.greatest(F.size(ls) - 1, F.lit(0))
+        pairs = F.zip_with(
+            F.slice(ls, 1, n),
+            F.slice(ls, 2, n),
+            lambda a, b: (((a == "ru") & (b == "en")) | ((a == "en") & (b == "ru"))).cast("int"),
+        )
+        cnt = F.aggregate(pairs, F.lit(0), lambda acc, x: acc + x)
+        return (F.size(ls) >= config.BILINGUAL_MIN_LINES) & (cnt >= config.BILINGUAL_MIN_PAIRS)
 
-    def is_en(l):
-        return (_lat_count(l) > _cyr_count(l)) & (_lat_count(l) > 0)
-
-    pairs = F.zip_with(
-        l1s,
-        l2s,
-        lambda a, b: (
-            (a != "") & (b != "") & ((is_ru(a) & is_en(b)) | (is_en(a) & is_ru(b)))
-        ).cast("int"),
-    )
-    cnt = F.aggregate(pairs, F.lit(0), lambda acc, x: acc + x)
-    return (n >= config.BILINGUAL_MIN_LINES) & (cnt >= config.BILINGUAL_MIN_PAIRS)
+    return let(langs, count)
 
 
 def create_bilingual_columns(text: Column) -> Column:
     """pdf_processor.py:537-608 — language buckets at confidence 0.9."""
     return F.when(
         has_clear_bilingual_structure(text),
-        _language_bucket_columns(text, config.BILINGUAL_CONFIDENCE),
+        _language_bucket_columns(_stripped_lines(text), config.BILINGUAL_CONFIDENCE),
     ).otherwise(_empty_columns())
 
 
 def _block_lang(t: Column) -> Column:
-    return F.when(_cyr_count(t) > _lat_count(t), F.lit("ru")).otherwise(F.lit("en"))
+    return F.when(script_balance(t) > 0, F.lit("ru")).otherwise(F.lit("en"))
 
 
 def detect_language_split(text: Column) -> Column:
@@ -213,7 +207,7 @@ def detect_language_split(text: Column) -> Column:
     """
     raw = F.split(F.coalesce(text, F.lit("")), "\n")
     items = F.filter(F.transform(raw, py_strip), lambda l: l != "")
-    langs = F.transform(items, _line_lang)
+    langs = F.transform(items, line_language)
     n_ru = F.size(F.filter(langs, lambda x: x == "ru"))
     n_en = F.size(F.filter(langs, lambda x: x == "en"))
     # alternating pattern over the sequence (pdf_processor.py:877-914)

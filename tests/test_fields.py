@@ -19,6 +19,10 @@ DOCS = [
     ("f6", "Contact: john.DOE+x@Example.COM, phone +1 (555) 123-4567 ext"),
     ("f7", "пустой документ без полей"),
     ("f8", "Адрес: г. Москва, ул. Ленина, д. 1"),
+    # Python's \d is every Unicode decimal digit: the date and amount
+    # normalizers must match Arabic-Indic digits as the reference does
+    ("f9", "Дата: ١٢/٠٣/٢٠٢٣"),
+    ("f10", "Сумма: ١٠٠,٥ руб"),
 ]
 
 

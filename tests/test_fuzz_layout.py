@@ -67,6 +67,63 @@ def test_fuzz_sbs_gate_and_columns(layout_texts):
         assert got == want["columns"], (i, repr(t))
 
 
+# Line pairs that each pass the reference's translation-pair test, and
+# filler lines that exercise the language buckets: blank and
+# whitespace-only lines, mixed script, 'ё' (Cyrillic in the pdf-variant
+# count) and 'Ё' (neither script there), and letters whose lowercase is
+# not a plain ASCII letter ('İ' → 'i̇', the Kelvin sign → 'k').
+_PAIRS = [
+    ("ДОГОВОР поставки 12", "AGREEMENT of supply 12"),
+    ("1. Предмет", "1. Subject"),
+    ("ИСПОЛНИТЕЛЬ обязуется", "The CONTRACTOR shall"),
+    ("Ёлка и ёж 7", "Fir and hedgehog 7"),
+    ("УСЛОВИЯ оплаты", "TERMS of payment"),
+    ("Статья ٣", "Article ٣"),
+    ("Пункт 5", "Раздел 5"),  # a pair, but both lines Russian
+]
+_FILLER = [
+    "", "   ", "\t", "\u3000", "смешанная mixed", "ab вг", "Ё", "ёё x",
+    "İstanbul", "\u212a", "100", "\u3000Строка\u3000", "mixed ёж and",
+]
+
+
+def _gen_bucket_doc(rng: random.Random) -> str:
+    lines = []
+    while len(lines) < 10 or rng.random() < 0.6:
+        if rng.random() < 0.6:
+            ru, en = rng.choice(_PAIRS)
+            lines += [ru, en] if rng.random() < 0.8 else [en, ru]
+        else:
+            lines.append(rng.choice(_FILLER))
+    return "\n".join(lines)
+
+
+@pytest.fixture(scope="module")
+def bucket_texts(spark):
+    rng = random.Random(8086)
+    rows = [(i, _gen_bucket_doc(rng)) for i in range(200)]
+    return rows, spark.createDataFrame(rows, "id long, t string")
+
+
+def test_fuzz_column_buckets(bucket_texts):
+    """Texts on which the side-by-side gate mostly fires, so the language
+    buckets behind it run: gate and columns equal the reference's."""
+    rows, df = bucket_texts
+    assert sum(R.is_clear_side_by_side(t) for _, t in rows) >= 50
+    out = {
+        r["id"]: r
+        for r in df.select(
+            "id",
+            L.is_clear_side_by_side(F.col("t")).alias("sbs"),
+            L.analyze_text_columns(F.col("t")).alias("cols"),
+        ).collect()
+    }
+    for i, t in rows:
+        assert out[i]["sbs"] == R.is_clear_side_by_side(t), (i, repr(t))
+        got = [c.asDict() for c in out[i]["cols"]]
+        assert got == R.analyze_text_columns(t)["columns"], (i, repr(t))
+
+
 def test_fuzz_boilerplate_rule(layout_texts):
     rows, df = layout_texts
     bp_rows = []

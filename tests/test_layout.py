@@ -61,6 +61,8 @@ TEXT_DOCS = [
     ("c4", C4_ALTERNATING),
     ("c5", ""),  # empty
     ("c6", "один\ntwo\nтри\nfour\nпять\nsix\nсемь\neight\nдевять\nten\n100\n100"),
+    # pairs that share only an Arabic-Indic number: Python's \d matches it
+    ("c7", "\n".join(["Пункт ٣ договор", "Item ٣ contract"] * 6)),
 ]
 
 

@@ -80,7 +80,12 @@ def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_array_input_plan_explodes_once_without_count_pass(spark, docs, tmp_path_factory):
+@pytest.fixture(scope="module")
+def small_corpus(spark, docs, tmp_path_factory):
+    return _corpus_df(spark, docs[:5], tmp_path_factory, "corpus_plan")
+
+
+def test_array_input_plan_explodes_once_without_count_pass(spark, small_corpus):
     """Array-shaped input routes whole documents on their span count
     before the explode: one span explode per union branch, no count
     aggregate over span rows, and the salted branch keeps its two-phase
@@ -89,7 +94,7 @@ def test_array_input_plan_explodes_once_without_count_pass(spark, docs, tmp_path
 
     from ocr_spark.operators.spans import assemble_spans, classify_spans
 
-    df = _corpus_df(spark, docs[:5], tmp_path_factory, "corpus_plan")
+    df = small_corpus
     plan = _plan(extract_documents(df))
     assert plan.count("Generate explode(spans") == 2
     assert "LeftAnti" in plan and "LeftSemi" in plan
@@ -100,6 +105,23 @@ def test_array_input_plan_explodes_once_without_count_pass(spark, docs, tmp_path
     rows = _plan(assemble_spans(classify_spans(df)))
     assert "count(1)" not in rows and "LeftSemi" not in rows
     assert re.search(r"ObjectHashAggregate\(keys=\[doc_id#\d+, salt#\d+L\]", rows)
+
+
+def test_stage3_plan_runs_each_pattern_once(small_corpus):
+    """Fields and columns evaluate each regex once per document: every
+    field pattern (plus normalize_amount's number) appears once in each
+    union branch (single-phase and salted), no value is left to Spark's
+    `With` rewrite (`_common_expr`), and the column analysis runs no
+    regex replace at all."""
+    from ocr_spark import config
+    from ocr_spark.operators import layout as L
+
+    plan = extract_documents(small_corpus)._jdf.queryExecution().optimizedPlan().toString()
+    per_branch = sum(len(config.FIELD_PATTERNS[f]) for f in config.DEFAULT_FIELDS) + 1
+    assert per_branch == 17
+    assert plan.count("regexp_extract(") == 2 * per_branch
+    assert "_common_expr" not in plan
+    assert "regexp_replace" not in str(L.analyze_text_columns(F.col("t")))
 
 
 def test_salted_route_matches_golden(spark, docs, tmp_path_factory, golden):
