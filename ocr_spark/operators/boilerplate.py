@@ -17,10 +17,24 @@ Shallow Text Features", WSDM 2010):
 4. **Block fusion** — adjacent content blocks merge into the main text
    (newline-joined, in document order).
 
-Everything is a higher-order Column expression (no UDF, no parser
-library): at 10^12 documents this runs inside whole-stage codegen on the
-exploded corpus, and the DuckDB oracle replays every step bit-for-bit
-(`__spark_entry__.oracle_sql()['html_extract']`).
+Every block extractor here (Boilerpipe, Readability, jusText, the span
+bridge and the sectioner) reads one tokenizer, :func:`_tokens`: the page
+(for all but :func:`html_blocks`, first cleaned of script, style and
+comment bodies by :func:`_clean_html`) is split on the block tags once,
+and each part carries its opening tag and its stripped text. The features
+on top of it exist once each: anchor characters and link density
+(:func:`_anchor_chars`, :func:`_link_density`), the depth delta of a tag
+(:func:`_depth_delta`) and the prefix fold (:func:`_scan`).
+
+Spark runs higher-order functions (``transform``, ``filter``,
+``zip_with``, ``aggregate``) interpreted, with no common-subexpression
+elimination inside their arguments, and the optimizer inlines a column
+read once into the lambda that reads it, where it re-runs per element.
+So every block array read more than once is bound once with
+:func:`~ocr_spark.functions.text.let`, and each extractor is one
+expression over one tokenization, not a chain of ``withColumn`` steps.
+No UDF, no parser library, and the DuckDB oracle replays every step
+bit-for-bit (`__spark_entry__.oracle_sql()['html_extract']`).
 
 The reference repo has no HTML path (it is an OCR/PDF service); this
 module implements the north_star's HTML-boilerplate requirement from the
@@ -32,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ocr_spark.functions.text import py_strip
+from ocr_spark.functions.text import let, py_strip
 from ocr_spark.operators.spans import word_count
 
 # block-level boundary tags; (?i) works identically in Java regex and RE2
@@ -46,6 +60,11 @@ _DEPTH_OPEN_RE = r"(?i)^<(?:div|ul|ol|table|article|section|header|footer|nav)\b
 _DEPTH_CLOSE_RE = r"(?i)^</(?:div|ul|ol|table|article|section|header|footer|nav)\b"
 _ANCHOR_RE = r"(?is)<a\b[^>]*>(.*?)</a>"
 _TAG_RE = r"(?s)<[^>]*>"
+# script/style/comment strip happens BEFORE block split (readability.js
+# removeScripts/prepDocument); no backreferences — the oracle's RE2 has none
+SCRIPT_RE = r"(?is)<script\b[^>]*>.*?</script>"
+STYLE_RE = r"(?is)<style\b[^>]*>.*?</style>"
+HTML_COMMENT_RE = r"(?s)<!--.*?-->"
 
 # NumWordsRulesClassifier thresholds (Kohlschütter et al., WSDM 2010;
 # boilerpipe NumWordsRulesClassifier.java — public algorithm constants)
@@ -53,59 +72,126 @@ _CURR_LD_MAX = 0.333333
 _PREV_LD_MAX = 0.555556
 
 
+def _clean_html(html: Column) -> Column:
+    """The page without its script, style and comment bodies (null → '')."""
+    h = F.coalesce(html, F.lit(""))
+    for pat in (SCRIPT_RE, STYLE_RE, HTML_COMMENT_RE):
+        h = F.regexp_replace(h, pat, "")
+    return h
+
+
+def _tokens(html: Column, body) -> Column:
+    """``body(ts)``, ``ts`` bound to the page's parts: ``html`` split on
+    BLOCK_TAG_RE once, each part a (part, tag, text) struct — the raw
+    part, the boundary tag that opens it ('' for the first) and its
+    tag-stripped, `str.strip()`ed text."""
+
+    def token(part: Column, tag: Column) -> Column:
+        text = py_strip(F.regexp_replace(part, _TAG_RE, ""))
+        return F.struct(part.alias("part"), tag.alias("tag"), text.alias("text"))
+
+    return let(
+        html,
+        lambda h: let(
+            F.zip_with(
+                F.split(h, BLOCK_TAG_RE),
+                F.concat(F.array(F.lit("")), F.regexp_extract_all(h, F.lit(BLOCK_TAG_RE), 0)),
+                token,
+            ),
+            body,
+        ),
+    )
+
+
+def _anchor_chars(part: Column) -> Column:
+    """Characters of a part's anchor text (tags stripped)."""
+    anchors = F.transform(
+        F.regexp_extract_all(part, F.lit(_ANCHOR_RE), 1),
+        lambda a: F.regexp_replace(a, _TAG_RE, ""),
+    )
+    return F.length(F.array_join(anchors, ""))
+
+
+def _link_density(anchor: Column, text: Column) -> Column:
+    """Anchor share of the text's characters, capped at 1 (0 for no text)."""
+    return F.when(
+        F.length(text) > 0,
+        F.least(anchor.cast("double") / F.length(text), F.lit(1.0)),
+    ).otherwise(F.lit(0.0))
+
+
+def _depth_delta(tag: Column) -> Column:
+    """+1 for a container open tag, -1 for its close, 0 for anything else."""
+    return (
+        F.when(tag.rlike(_DEPTH_OPEN_RE), F.lit(1))
+        .when(tag.rlike(_DEPTH_CLOSE_RE), F.lit(-1))
+        .otherwise(F.lit(0))
+    )
+
+
+def _scan(xs: Column, zero: Column, step) -> Column:
+    """Inclusive prefix fold: out[i] = step(out[i-1], xs[i]), out[-1] =
+    ``zero``. One ``aggregate`` that reads ``xs`` once and runs ``step``
+    once per element (each append copies the flat states so far, cheap
+    next to the regex work per part); a per-element fold over a slice
+    would re-run ``step`` quadratically often."""
+    return F.aggregate(
+        xs,
+        F.array(zero),
+        lambda acc, x: F.concat(acc, F.array(step(F.element_at(acc, -1), x))),
+        lambda acc: F.slice(acc, 2, F.size(acc) - 1),
+    )
+
+
+def _running_sum(xs: Column) -> Column:
+    return _scan(xs, F.lit(0), lambda a, x: a + x)
+
+
+def _block_features(ts: Column) -> Column:
+    """(text, n_words, link_density, depth) of every non-empty part."""
+    depths = _running_sum(F.transform(ts, lambda t: _depth_delta(t["tag"])))
+    blocks = F.zip_with(
+        ts,
+        depths,
+        lambda t, d: F.struct(
+            t["text"].alias("text"),
+            word_count(t["text"]).alias("n_words"),
+            _link_density(_anchor_chars(t["part"]), t["text"]).alias("link_density"),
+            d.alias("depth"),
+        ),
+    )
+    return F.filter(blocks, lambda b: b["text"] != "")
+
+
 def html_blocks(html: Column) -> Column:
     """Array of per-block feature structs:
     (text, n_words, link_density, depth) — empty blocks dropped, document
     order preserved."""
-    h = F.coalesce(html, F.lit(""))
-    parts = F.split(h, BLOCK_TAG_RE)
-    tags = F.regexp_extract_all(h, F.lit(BLOCK_TAG_RE), 0)
+    return _tokens(F.coalesce(html, F.lit("")), _block_features)
 
-    # running depth computed ONCE per document: each boundary tag's ±1/0
-    # delta is evaluated a single time (one rlike pair per tag, not per
-    # tag×block), then folded into a prefix-sum array. The fold appends one
-    # int per step — flat int copies, no re-evaluated lambdas — so
-    # pathological HTML (10⁴+ boundary tags) stays linear in regex work
-    # where the per-block slice-sum form was quadratic.
-    deltas = F.transform(
-        tags,
-        lambda t: F.when(t.rlike(_DEPTH_OPEN_RE), F.lit(1))
-        .when(t.rlike(_DEPTH_CLOSE_RE), F.lit(-1))
-        .otherwise(F.lit(0)),
-    )
-    # prefix[i] (0-based) = depth before block i; prefix has n_tags+1
-    # entries — exactly as many as `parts`, so it zips with the blocks.
-    # It is passed to zip_with as an ARGUMENT (evaluated once per document),
-    # never referenced inside a lambda body, where higher-order functions
-    # re-evaluate the whole subtree per element.
-    prefix = F.aggregate(
-        deltas,
-        F.array(F.lit(0)),
-        lambda acc, d: F.concat(acc, F.array(F.element_at(acc, -1) + d)),
-    )
 
-    def block_struct(part: Column, depth: Column) -> Column:
-        text = py_strip(F.regexp_replace(part, _TAG_RE, ""))
-        anchor_text = F.array_join(
-            F.transform(
-                F.regexp_extract_all(part, F.lit(_ANCHOR_RE), 1),
-                lambda a: F.regexp_replace(a, _TAG_RE, ""),
-            ),
-            "",
-        )
-        ld = F.when(
-            F.length(text) > 0,
-            F.least(F.length(anchor_text).cast("double") / F.length(text), F.lit(1.0)),
-        ).otherwise(F.lit(0.0))
-        return F.struct(
-            text.alias("text"),
-            word_count(text).alias("n_words"),
-            ld.alias("link_density"),
-            depth.alias("depth"),
-        )
+def _is_content(bs: Column, i: Column) -> Column:
+    """NumWordsRulesClassifier verdict on block ``i`` (0-based) of the
+    bound block array ``bs``; out-of-range neighbours are empty blocks."""
+    prev, nxt = F.get(bs, i - 1), F.get(bs, i + 1)
+    curr_w, curr_ld = F.get(bs, i)["n_words"], F.get(bs, i)["link_density"]
+    prev_w = F.coalesce(prev["n_words"], F.lit(0))
+    prev_ld = F.coalesce(prev["link_density"], F.lit(0.0))
+    next_w = F.coalesce(nxt["n_words"], F.lit(0))
+    return F.when(
+        curr_ld <= _CURR_LD_MAX,
+        F.when(
+            prev_ld <= _PREV_LD_MAX,
+            F.when(
+                curr_w <= 16,
+                F.when(next_w <= 15, prev_w > 4).otherwise(F.lit(True)),
+            ).otherwise(F.lit(True)),
+        ).otherwise(F.when(curr_w <= 40, next_w > 17).otherwise(F.lit(True))),
+    ).otherwise(F.lit(False))
 
-    all_blocks = F.zip_with(parts, prefix, lambda p, d: block_struct(p, d))
-    return F.filter(all_blocks, lambda b: b["text"] != "")
+
+def _flags(bs: Column) -> Column:
+    return F.transform(bs, lambda _, i: _is_content(bs, i))
 
 
 def classify_blocks(blocks: Column) -> Column:
@@ -124,77 +210,77 @@ def classify_blocks(blocks: Column) -> Column:
       else BOILER
 
     Out-of-range neighbors count as empty blocks (0 words, 0 density).
+    ``blocks`` is bound once, so each neighbour read is an O(1) element
+    access, not a re-run of the expression that builds the array."""
+    return let(blocks, _flags)
 
-    Neighbor access is SHIFTED-ZIP, not indexed lookup: an earlier form
-    did ``F.get(blocks, i±1)`` inside the transform lambda, and a lambda
-    body re-evaluates every non-lambda-variable subtree per ELEMENT —
-    O(n²) in block count once ``blocks`` is a real expression. Here
-    ``blocks`` appears only as zip_with/slice ARGUMENTS, each evaluated
-    once per row."""
-    n = F.size(blocks)
-    pad = F.struct(
-        F.lit("").alias("text"),
-        F.lit(0).alias("n_words"),
-        F.lit(0.0).alias("link_density"),
-        F.lit(0).alias("depth"),
-    )
-    # blocks shifted right/left by one, padded with the empty block
-    prev = F.when(n == 0, blocks).otherwise(
-        F.concat(F.array(pad), F.slice(blocks, 1, n - 1))
-    )
-    nxt = F.when(n == 0, blocks).otherwise(
-        F.concat(F.slice(blocks, 2, n - 1), F.array(pad))
-    )
-    curr_prev = F.zip_with(
-        blocks, prev, lambda c, p: F.struct(c.alias("c"), p.alias("p"))
-    )
 
-    def decide(cp: Column, nx: Column) -> Column:
-        curr_w = cp["c"]["n_words"]
-        curr_ld = cp["c"]["link_density"]
-        prev_w = cp["p"]["n_words"]
-        prev_ld = cp["p"]["link_density"]
-        next_w = nx["n_words"]
-        return F.when(
-            curr_ld <= _CURR_LD_MAX,
-            F.when(
-                prev_ld <= _PREV_LD_MAX,
-                F.when(
-                    curr_w <= 16,
-                    F.when(next_w <= 15, prev_w > 4).otherwise(F.lit(True)),
-                ).otherwise(F.lit(True)),
-            ).otherwise(
-                F.when(curr_w <= 40, next_w > 17).otherwise(F.lit(True))
+def _fuse(bs: Column, keep: Column, **extra: Column) -> Column:
+    """Block fusion of the bound blocks ``bs`` by the aligned ``keep``
+    flags → struct(main_text: the kept texts newline-joined, n_blocks,
+    n_content_blocks, boiler_chars: the characters of the others,
+    *extra)."""
+
+    def fused(z: Column) -> Column:
+        boiler = F.filter(z, lambda x: ~x["keep"])
+        return let(
+            F.filter(z, lambda x: x["keep"]),
+            lambda content: F.struct(
+                F.array_join(F.transform(content, lambda x: x["text"]), "\n").alias("main_text"),
+                F.size(z).alias("n_blocks"),
+                F.size(content).alias("n_content_blocks"),
+                F.coalesce(
+                    F.aggregate(boiler, F.lit(0), lambda acc, x: acc + F.length(x["text"])),
+                    F.lit(0),
+                ).alias("boiler_chars"),
+                *[v.alias(k) for k, v in extra.items()],
             ),
-        ).otherwise(F.lit(False))
+        )
 
-    return F.zip_with(curr_prev, nxt, decide)
+    return let(
+        F.zip_with(bs, keep, lambda b, k: F.struct(b["text"].alias("text"), k.alias("keep"))),
+        fused,
+    )
+
+
+def _main_content(html: Column) -> Column:
+    """Boilerpipe over one page → the :func:`_fuse` struct + max_depth."""
+
+    def fused(bs: Column) -> Column:
+        max_depth = F.coalesce(F.array_max(F.transform(bs, lambda b: b["depth"])), F.lit(0))
+        return _fuse(bs, _flags(bs), max_depth=max_depth)
+
+    return let(html_blocks(html), fused)
+
+
+_MAIN_FIELDS = {
+    "main_text": "string",
+    "n_blocks": "int",
+    "n_content_blocks": "int",
+    "max_depth": "int",
+    "boiler_chars": "long",
+}
 
 
 def extract_main_content(html: Column) -> dict[str, Column]:
     """Full pipeline → dict of output columns:
     main_text (fused content blocks), n_blocks, n_content_blocks,
-    max_depth, boiler_chars (chars classified away)."""
-    blocks = html_blocks(html)
-    flags = classify_blocks(blocks)
-    zipped = F.zip_with(blocks, flags, lambda b, f: F.struct(b.alias("b"), f.alias("keep")))
-    content = F.filter(zipped, lambda z: z["keep"])
-    main_text = F.array_join(F.transform(content, lambda z: z["b"]["text"]), "\n")
-    boiler = F.filter(zipped, lambda z: ~z["keep"])
-    return {
-        "main_text": main_text,
-        "n_blocks": F.size(blocks),
-        "n_content_blocks": F.size(content),
-        "max_depth": F.coalesce(
-            F.array_max(F.transform(blocks, lambda b: b["depth"])), F.lit(0)
-        ),
-        "boiler_chars": F.coalesce(
-            F.aggregate(
-                boiler, F.lit(0), lambda acc, z: acc + F.length(z["b"]["text"])
-            ),
-            F.lit(0),
-        ),
-    }
+    max_depth, boiler_chars (chars classified away). Each is a field of
+    one struct expression, so a select of several evaluates it once per
+    field: :func:`extract_html_documents` selects the struct once."""
+    m = _main_content(html)
+    return {k: m[k] for k in _MAIN_FIELDS}
+
+
+def _select_fields(
+    docs: DataFrame, id_col: str, m: Column, types: dict[str, str], keep_cols: tuple
+) -> DataFrame:
+    """(id_col, the fields of struct ``m`` cast to ``types``, *keep_cols).
+    ``m`` is selected once, in a projection of its own that the optimizer
+    keeps apart because the next one reads it more than once."""
+    keep = [F.col(c) for c in keep_cols]
+    fields = [F.col("_m")[k].cast(t).alias(k) for k, t in types.items()]
+    return docs.select(F.col(id_col), m.alias("_m"), *keep).select(F.col(id_col), *fields, *keep)
 
 
 def extract_html_documents(
@@ -207,16 +293,7 @@ def extract_html_documents(
     max_depth, boiler_chars). ``keep_cols`` pass through untouched — how
     :func:`extraction_ensemble` chains all three extractors in ONE narrow
     pass instead of three scans + doc_id joins."""
-    cols = extract_main_content(F.col(html_col))
-    return docs.select(
-        F.col(id_col),
-        cols["main_text"].alias("main_text"),
-        cols["n_blocks"].cast("int").alias("n_blocks"),
-        cols["n_content_blocks"].cast("int").alias("n_content_blocks"),
-        cols["max_depth"].cast("int").alias("max_depth"),
-        cols["boiler_chars"].cast("long").alias("boiler_chars"),
-        *[F.col(c) for c in keep_cols],
-    )
+    return _select_fields(docs, id_col, _main_content(F.col(html_col)), _MAIN_FIELDS, keep_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -231,16 +308,16 @@ def extract_html_documents(
 # the article.  Public algorithm (Arc90 readability.js); the reference
 # repo has no HTML path.
 #
-# Spark plan shape: everything is per-row Column expressions — the only
-# non-local structure, the open-container stack, is ONE linear
-# F.aggregate fold per document (push on open, pop on close) producing
-# the stack-before-each-block; candidate scoring folds reference the
-# materialized `bs`/`tags` COLUMNS (cheap row-value reads), never an
-# expression subtree, so nothing re-evaluates per candidate.  The DuckDB
-# oracle derives the same stacks in closed form (an open tag j is still
-# open before block i iff the running depth never dips below its level:
-# min(D[j..i-1]) >= D[j]) — an independent formulation that must agree
-# bit-for-bit, including on malformed HTML with unmatched close tags.
+# Spark plan shape: one per-row expression over the tokenized page — the
+# only non-local structure, the open-container stack, is ONE linear
+# prefix fold per document (push on open, pop on close) producing the
+# stack-before-each-block; candidate scoring folds read the let-bound
+# block array and tokens, never an expression subtree, so nothing
+# re-evaluates per candidate.  The DuckDB oracle derives the same stacks
+# in closed form (an open tag j is still open before block i iff the
+# running depth never dips below its level: min(D[j..i-1]) >= D[j]) — an
+# independent formulation that must agree bit-for-bit, including on
+# malformed HTML with unmatched close tags.
 
 READABILITY_POSITIVE_RE = (
     r"(?i)article|body|content|entry|hentry|main|page|pagination|post|text|blog|story"
@@ -249,27 +326,19 @@ READABILITY_NEGATIVE_RE = (
     r"(?i)combx|comment|com-|contact|foot|footer|footnote|masthead|media|meta|"
     r"outbrain|promo|related|scroll|shoutbox|sidebar|sponsor|shopping|tags|tool|widget"
 )
-# script/style/comment strip happens BEFORE block split (readability.js
-# removeScripts/prepDocument); no backreferences — the oracle's RE2 has none
-SCRIPT_RE = r"(?is)<script\b[^>]*>.*?</script>"
-STYLE_RE = r"(?is)<style\b[^>]*>.*?</style>"
-HTML_COMMENT_RE = r"(?s)<!--.*?-->"
 _CLASS_ATTR_RE = r'(?i)\bclass\s*=\s*"([^"]*)"'
 _ID_ATTR_RE = r'(?i)\bid\s*=\s*"([^"]*)"'
 MIN_PARA_CHARS = 25  # readability.js: paragraphs under 25 chars don't score
 
 
-def _readability_block(part: Column, stack: Column) -> Column:
+def _no_ints() -> Column:
+    return F.array().cast("array<int>")
+
+
+def _readability_block(t: Column, stack: Column) -> Column:
     """Per-block struct: text, chars, anchor chars, paragraph score, and
     the enclosing-container stack (innermost last, as open-tag indices)."""
-    text = py_strip(F.regexp_replace(part, _TAG_RE, ""))
-    anchor_text = F.array_join(
-        F.transform(
-            F.regexp_extract_all(part, F.lit(_ANCHOR_RE), 1),
-            lambda a: F.regexp_replace(a, _TAG_RE, ""),
-        ),
-        "",
-    )
+    text = t["text"]
     chars = F.length(text)
     commas = F.size(F.split(text, ",")) - 1
     pscore = F.when(chars < MIN_PARA_CHARS, F.lit(0)).otherwise(
@@ -278,7 +347,7 @@ def _readability_block(part: Column, stack: Column) -> Column:
     return F.struct(
         text.alias("text"),
         chars.alias("chars"),
-        F.length(anchor_text).alias("anchor"),
+        _anchor_chars(t["part"]).alias("anchor"),
         pscore.alias("pscore"),
         F.when(F.size(stack) > 0, F.element_at(stack, -1)).alias("owner"),
         F.when(F.size(stack) > 1, F.element_at(stack, -2)).alias("parent"),
@@ -301,6 +370,130 @@ def _class_weight(tag: Column) -> Column:
     return w
 
 
+def _rb_blocks(ts: Column) -> Column:
+    """Non-empty blocks with their container stacks. Part i is opened by
+    tag i (1-based; part 0 by none), so the stack fold runs over the
+    parts: stacks[i] = the containers still open before part i."""
+
+    def push_pop(st: Column, s: Column) -> Column:
+        return (
+            F.when(s["d"] == 1, F.concat(st, F.array(s["j"])))
+            .when((s["d"] == -1) & (F.size(st) > 0), F.slice(st, 1, F.size(st) - 1))
+            .otherwise(st)
+        )
+
+    steps = F.transform(ts, lambda t, i: F.struct(_depth_delta(t["tag"]).alias("d"), i.alias("j")))
+    stacks = _scan(steps, _no_ints(), push_pop)
+    return F.filter(F.zip_with(ts, stacks, _readability_block), lambda b: b["text"] != "")
+
+
+def _rb_candidate(ts: Column, bs: Column, c: Column) -> Column:
+    """(c, score, parent) of container ``c`` (its open tag's index)."""
+
+    def total(matches, value) -> Column:
+        return F.aggregate(
+            bs,
+            F.lit(0).cast("long"),
+            lambda a, b: a + F.when(matches(b), b[value]).otherwise(0),
+        )
+
+    def inside(b: Column) -> Column:
+        return F.array_contains(b["stack"], c)
+
+    own = total(lambda b: b["owner"] == c, "pscore")
+    half = total(lambda b: b["parent"] == c, "pscore")
+    sub_chars, sub_anchor = total(inside, "chars"), total(inside, "anchor")
+    ld = F.when(
+        sub_chars > 0,
+        F.least(sub_anchor.cast("double") / sub_chars.cast("double"), F.lit(1.0)),
+    ).otherwise(F.lit(0.0))
+    cw = _class_weight(F.get(ts, c)["tag"])
+    score = (
+        cw.cast("double") + own.cast("double") + half.cast("double") * F.lit(0.5)
+    ) * (F.lit(1.0) - ld)
+
+    # the container enclosing c = the element just below c in any stack
+    # that contains c (fixed at push time, so any such block works);
+    # candidates that own no blocks directly (grandparents) still have
+    # at least one block whose stack passes through them
+    def parent_in(fb: Column) -> Column:
+        pos = F.array_position(fb, c)
+        return F.when(pos > 1, F.element_at(fb, (pos - 1).cast("int")))
+
+    parent = let(F.get(F.filter(bs, inside), 0)["stack"], parent_in)
+    return F.struct(c.alias("c"), score.alias("score"), parent.alias("parent"))
+
+
+def _rb_article(bs: Column, cands: Column) -> Column:
+    """The winner (top score, lowest index), the siblings sharing its
+    parent that score ≥ max(10, 20% of it), and the text of the blocks
+    inside the selection (every block when nothing scored)."""
+
+    def selection(top: Column, w: Column) -> Column:
+        sibs = F.transform(
+            F.filter(
+                cands,
+                lambda d: (d["c"] != w["c"])
+                & d["parent"].eqNullSafe(w["parent"])
+                & (d["score"] >= F.greatest(F.lit(10.0), top * F.lit(0.2))),
+            ),
+            lambda d: d["c"],
+        )
+        sel = F.when(w["c"].isNotNull(), F.concat(F.array(w["c"]), sibs)).otherwise(_no_ints())
+        return let(
+            sel,
+            lambda sel: F.struct(
+                F.array_join(
+                    F.transform(
+                        F.when(
+                            F.size(sel) > 0,
+                            F.filter(bs, lambda b: F.arrays_overlap(b["stack"], sel)),
+                        ).otherwise(bs),  # readability's body fallback
+                        lambda b: b["text"],
+                    ),
+                    "\n",
+                ).alias("main_text"),
+                F.coalesce(w["c"], F.lit(-1)).alias("top_candidate"),
+                F.coalesce(top, F.lit(0.0)).alias("top_score"),
+                F.size(cands).alias("n_candidates"),
+                F.size(sel).alias("n_selected"),
+            ),
+        )
+
+    return let(
+        F.array_max(F.transform(cands, lambda x: x["score"])),
+        lambda top: let(
+            F.array_min(F.filter(cands, lambda x: x["score"] == top)),
+            lambda w: selection(top, w),
+        ),
+    )
+
+
+def _readability(ts: Column) -> Column:
+    def scored(bs: Column) -> Column:
+        # candidates: each scoring paragraph registers its parent (owner)
+        # AND grandparent container (readability.js scores both)
+        cand_ids = F.array_distinct(
+            F.filter(
+                F.flatten(
+                    F.transform(
+                        bs,
+                        lambda b: F.when(
+                            b["pscore"] > 0, F.array(b["owner"], b["parent"])
+                        ).otherwise(_no_ints()),
+                    )
+                ),
+                lambda x: x.isNotNull(),
+            )
+        )
+        return let(
+            F.transform(cand_ids, lambda c: _rb_candidate(ts, bs, c)),
+            lambda cands: _rb_article(bs, cands),
+        )
+
+    return let(_rb_blocks(ts), scored)
+
+
 def readability_extract(
     docs: DataFrame,
     html_col: str = "html",
@@ -313,181 +506,15 @@ def readability_extract(
     ``top_candidate`` is the winning container's open-tag index (1-based
     in the document's boundary-tag stream; -1 when no container scored),
     ``n_selected`` counts the winner plus included siblings."""
-    h = F.coalesce(F.col(html_col), F.lit(""))
-    clean = F.regexp_replace(
-        F.regexp_replace(F.regexp_replace(h, SCRIPT_RE, ""), STYLE_RE, ""),
-        HTML_COMMENT_RE,
-        "",
-    )
-    df = docs.select(
-        F.col(id_col),
-        F.split(clean, BLOCK_TAG_RE).alias("parts"),
-        F.regexp_extract_all(clean, F.lit(BLOCK_TAG_RE), 0).alias("tags"),
-        *[F.col(c) for c in keep_cols],
-    )
-
-    # one linear fold per document: stack of open container tag-indices
-    # before each block (stacks[i] aligns with parts[i])
-    deltas = F.transform(
-        F.col("tags"),
-        lambda t: F.when(t.rlike(_DEPTH_OPEN_RE), F.lit(1))
-        .when(t.rlike(_DEPTH_CLOSE_RE), F.lit(-1))
-        .otherwise(F.lit(0)),
-    )
-    idx = F.when(F.size("tags") > 0, F.sequence(F.lit(1), F.size("tags"))).otherwise(
-        F.array().cast("array<int>")
-    )
-    steps = F.zip_with(deltas, idx, lambda d, j: F.struct(d.alias("d"), j.alias("j")))
-    stacks = F.aggregate(
-        steps,
-        F.array(F.array().cast("array<int>")),
-        lambda acc, s: F.concat(
-            acc,
-            F.array(
-                F.when(
-                    s["d"] == 1, F.concat(F.element_at(acc, -1), F.array(s["j"]))
-                )
-                .when(
-                    (s["d"] == -1) & (F.size(F.element_at(acc, -1)) > 0),
-                    F.slice(
-                        F.element_at(acc, -1), 1, F.size(F.element_at(acc, -1)) - 1
-                    ),
-                )
-                .otherwise(F.element_at(acc, -1))
-            ),
-        ),
-    )
-    df = df.withColumn("stacks", stacks)
-    df = df.withColumn(
-        "bs",
-        F.filter(
-            F.zip_with(F.col("parts"), F.col("stacks"), _readability_block),
-            lambda b: b["text"] != "",
-        ),
-    )
-    # candidates: each scoring paragraph registers its parent (owner) AND
-    # grandparent container (readability.js scores both)
-    df = df.withColumn(
-        "cand_ids",
-        F.array_distinct(
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        F.col("bs"),
-                        lambda b: F.when(
-                            b["pscore"] > 0, F.array(b["owner"], b["parent"])
-                        ).otherwise(F.array().cast("array<int>")),
-                    )
-                ),
-                lambda x: x.isNotNull(),
-            )
-        ),
-    )
-
-    def _cand(c: Column) -> Column:
-        bs = F.col("bs")
-        own = F.aggregate(
-            bs,
-            F.lit(0).cast("long"),
-            lambda a, b: a + F.when(b["owner"] == c, b["pscore"]).otherwise(0),
-        )
-        half = F.aggregate(
-            bs,
-            F.lit(0).cast("long"),
-            lambda a, b: a + F.when(b["parent"] == c, b["pscore"]).otherwise(0),
-        )
-        sub_chars = F.aggregate(
-            bs,
-            F.lit(0).cast("long"),
-            lambda a, b: a + F.when(F.array_contains(b["stack"], c), b["chars"]).otherwise(0),
-        )
-        sub_anchor = F.aggregate(
-            bs,
-            F.lit(0).cast("long"),
-            lambda a, b: a + F.when(F.array_contains(b["stack"], c), b["anchor"]).otherwise(0),
-        )
-        ld = F.when(
-            sub_chars > 0,
-            F.least(sub_anchor.cast("double") / sub_chars.cast("double"), F.lit(1.0)),
-        ).otherwise(F.lit(0.0))
-        cw = _class_weight(F.element_at(F.col("tags"), c))
-        score = (
-            cw.cast("double") + own.cast("double") + half.cast("double") * F.lit(0.5)
-        ) * (F.lit(1.0) - ld)
-        # the container enclosing c = the element just below c in any stack
-        # that contains c (fixed at push time, so any such block works);
-        # candidates that own no blocks directly (grandparents) still have
-        # at least one block whose stack passes through them
-        fb = F.element_at(
-            F.filter(bs, lambda b: F.array_contains(b["stack"], c)), 1
-        )["stack"]
-        pos = F.array_position(fb, c)
-        parent = F.when(pos > 1, F.element_at(fb, (pos - 1).cast("int")))
-        return F.struct(c.alias("c"), score.alias("score"), parent.alias("parent"))
-
-    df = df.withColumn("cands", F.transform(F.col("cand_ids"), _cand))
-    df = df.withColumn(
-        "top_score", F.array_max(F.transform(F.col("cands"), lambda x: x["score"]))
-    )
-    df = df.withColumn(
-        "top_c",
-        F.array_min(
-            F.transform(
-                F.filter(F.col("cands"), lambda x: x["score"] == F.col("top_score")),
-                lambda x: x["c"],
-            )
-        ),
-    )
-    df = df.withColumn(
-        "top_parent",
-        F.element_at(
-            F.transform(
-                F.filter(F.col("cands"), lambda x: x["c"] == F.col("top_c")),
-                lambda x: x["parent"],
-            ),
-            1,
-        ),
-    )
-    sibs = F.transform(
-        F.filter(
-            F.col("cands"),
-            lambda d: (d["c"] != F.col("top_c"))
-            & d["parent"].eqNullSafe(F.col("top_parent"))
-            & (d["score"] >= F.greatest(F.lit(10.0), F.col("top_score") * F.lit(0.2))),
-        ),
-        lambda d: d["c"],
-    )
-    df = df.withColumn(
-        "sel",
-        F.when(
-            F.col("top_c").isNotNull(), F.concat(F.array(F.col("top_c")), sibs)
-        ).otherwise(F.array().cast("array<int>")),
-    )
-    main = F.when(
-        F.size(F.col("sel")) > 0,
-        F.array_join(
-            F.transform(
-                F.filter(
-                    F.col("bs"),
-                    lambda b: F.arrays_overlap(b["stack"], F.col("sel")),
-                ),
-                lambda b: b["text"],
-            ),
-            "\n",
-        ),
-    ).otherwise(
-        # no scoring container anywhere: readability's body fallback
-        F.array_join(F.transform(F.col("bs"), lambda b: b["text"]), "\n")
-    )
-    return df.select(
-        F.col(id_col),
-        main.alias("main_text"),
-        F.coalesce(F.col("top_c"), F.lit(-1)).cast("int").alias("top_candidate"),
-        F.coalesce(F.col("top_score"), F.lit(0.0)).alias("top_score"),
-        F.size(F.col("cands")).cast("int").alias("n_candidates"),
-        F.size(F.col("sel")).cast("int").alias("n_selected"),
-        *[F.col(c) for c in keep_cols],
-    )
+    types = {
+        "main_text": "string",
+        "top_candidate": "int",
+        "top_score": "double",
+        "n_candidates": "int",
+        "n_selected": "int",
+    }
+    m = _tokens(_clean_html(F.col(html_col)), _readability)
+    return _select_fields(docs, id_col, m, types, keep_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -522,9 +549,9 @@ def readability_extract(
 #     good) or the unchanged preceding neighbour (run going bad) — i.e.
 #     the whole run is good iff EITHER flanking strict neighbour is good.
 #
-# Each scan is ONE linear F.aggregate prefix fold per document (same
-# pattern as html_blocks' depth prefix): the class array is the fold's
-# ARGUMENT, evaluated once per row, never re-evaluated per element.
+# Each scan is ONE linear prefix fold per document (:func:`_scan`, the
+# fold of the depth prefix): the class array is let-bound and read once
+# by the fold, never re-evaluated per element.
 
 JT_LENGTH_LOW = 70
 JT_LENGTH_HIGH = 200
@@ -609,31 +636,21 @@ def justext_stoplist_for(lang: Column, default: str = "en") -> Column:
     return out.otherwise(F.array(*[F.lit(w) for w in JUSTEXT_STOPLISTS[default]]))
 
 
-def _jt_block(part: Column, stopwords: list[str] | Column) -> Column:
+def _jt_block(t: Column, stoplist: Column) -> Column:
     """Per-block features: text, chars, link chars, word count, stop count."""
-    text = py_strip(F.regexp_replace(part, _TAG_RE, ""))
-    anchor_text = F.array_join(
-        F.transform(
-            F.regexp_extract_all(part, F.lit(_ANCHOR_RE), 1),
-            lambda a: F.regexp_replace(a, _TAG_RE, ""),
-        ),
-        "",
-    )
+    text = t["text"]
     words = F.when(text == "", F.array().cast("array<string>")).otherwise(
         F.split(text, r"(?U)\s+")
     )
-    stoplist = (
-        stopwords
-        if isinstance(stopwords, Column)
-        else F.array(*[F.lit(w) for w in stopwords])
-    )
-    n_stop = F.size(F.filter(words, lambda w: F.array_contains(stoplist, F.lower(w))))
-    return F.struct(
-        text.alias("text"),
-        F.length(text).alias("chars"),
-        F.length(anchor_text).alias("link_chars"),
-        F.size(words).alias("n_words"),
-        n_stop.alias("n_stop"),
+    return let(
+        words,
+        lambda ws: F.struct(
+            text.alias("text"),
+            F.length(text).alias("chars"),
+            _anchor_chars(t["part"]).alias("link_chars"),
+            F.size(ws).alias("n_words"),
+            F.size(F.filter(ws, lambda w: F.array_contains(stoplist, F.lower(w)))).alias("n_stop"),
+        ),
     )
 
 
@@ -664,24 +681,71 @@ def _jt_cf_class(b: Column) -> Column:
     )
 
 
-def _jt_scan_prev(cls: Column, keep: tuple[int, ...]) -> Column:
-    """out[i] = nearest PRIOR class in ``keep`` (document start → BAD).
-    One linear prefix fold; ``cls`` is referenced only as fold argument."""
-    folded = F.aggregate(
-        cls,
-        F.array(F.lit(JT_BAD)),
-        lambda acc, c: F.concat(
-            acc,
-            F.array(F.when(c.isin(*keep), c).otherwise(F.element_at(acc, -1))),
+def _jt_nearest(cls: Column, keep: tuple[int, ...]) -> Column:
+    """struct(p, n): p[i] / n[i] = the nearest class in ``keep`` at or
+    before / at or after i (BAD past either end of the document)."""
+
+    def step(prev: Column, c: Column) -> Column:
+        return F.when(c.isin(*keep), c).otherwise(prev)
+
+    return F.struct(
+        _scan(cls, F.lit(JT_BAD), step).alias("p"),
+        F.reverse(_scan(F.reverse(cls), F.lit(JT_BAD), step)).alias("n"),
+    )
+
+
+def _jt_final_classes(cls: Column) -> Column:
+    """The two revision passes over the bound context-free classes."""
+    strict = (JT_BAD, JT_GOOD)
+    loose = (JT_BAD, JT_NEARGOOD, JT_GOOD)
+
+    # the nearest neighbours strictly before / after block i
+    def before(s: Column, i: Column) -> Column:
+        return F.coalesce(F.get(s["p"], i - 1), F.lit(JT_BAD))
+
+    def after(s: Column, i: Column) -> Column:
+        return F.coalesce(F.get(s["n"], i + 1), F.lit(JT_BAD))
+
+    # SHORT pass (batch, reads the context-free classes):
+    #   both strict neighbours good → good; both bad → bad; mixed → good
+    #   iff a near-good sits between the short and its bad-side strict
+    #   neighbour, else bad.
+    def short_rule(s: Column, lo: Column, c: Column, i: Column) -> Column:
+        p, n = before(s, i), after(s, i)
+        return F.when(c != JT_SHORT, c).otherwise(
+            F.when((p == JT_GOOD) & (n == JT_GOOD), F.lit(JT_GOOD))
+            .when((p == JT_BAD) & (n == JT_BAD), F.lit(JT_BAD))
+            .when(
+                ((p == JT_BAD) & (before(lo, i) == JT_NEARGOOD))
+                | ((n == JT_BAD) & (after(lo, i) == JT_NEARGOOD)),
+                F.lit(JT_GOOD),
+            )
+            .otherwise(F.lit(JT_BAD))
+        )
+
+    # NEAR-GOOD pass (closed form of the sequential loop — see module
+    # comment): good iff either flanking strict neighbour is good.
+    def near_good_rule(s: Column, c: Column, i: Column) -> Column:
+        return F.when(c != JT_NEARGOOD, c).otherwise(
+            F.when(
+                (before(s, i) == JT_GOOD) | (after(s, i) == JT_GOOD), F.lit(JT_GOOD)
+            ).otherwise(F.lit(JT_BAD))
+        )
+
+    short_pass = let(
+        _jt_nearest(cls, strict),
+        lambda s: let(
+            _jt_nearest(cls, loose),
+            lambda lo: F.transform(cls, lambda c, i: short_rule(s, lo, c, i)),
         ),
     )
-    n = F.size(cls)
-    return F.when(n == 0, cls).otherwise(F.slice(folded, 1, n))
-
-
-def _jt_scan_next(cls: Column, keep: tuple[int, ...]) -> Column:
-    """out[i] = nearest FOLLOWING class in ``keep`` (document end → BAD)."""
-    return F.reverse(_jt_scan_prev(F.reverse(cls), keep))
+    return let(
+        short_pass,
+        lambda cls2: let(
+            _jt_nearest(cls2, strict),
+            lambda s: F.transform(cls2, lambda c, i: near_good_rule(s, c, i)),
+        ),
+    )
 
 
 def justext_extract(
@@ -700,104 +764,28 @@ def justext_extract(
     per-language stoplists — lowercase word lists of the same shape as
     the English default). Pass a COLUMN (see
     :func:`justext_stoplist_for`) for per-row language dispatch over a
-    mixed corpus; it is materialized once per row before the per-block
-    lambda so the stoplist CASE never re-evaluates per block."""
+    mixed corpus; it is bound once per row before the per-block lambda
+    so the stoplist CASE never re-evaluates per block."""
     if stopwords is None:
         stopwords = JUSTEXT_STOPLIST_EN
-    if isinstance(stopwords, Column):
-        docs = docs.withColumn("_jt_stop", stopwords)
-        stopwords = F.col("_jt_stop")
-    h = F.coalesce(F.col(html_col), F.lit(""))
-    clean = F.regexp_replace(
-        F.regexp_replace(F.regexp_replace(h, SCRIPT_RE, ""), STYLE_RE, ""),
-        HTML_COMMENT_RE,
-        "",
-    )
-    df = docs.select(
-        F.col(id_col),
-        F.filter(
-            F.transform(
-                F.split(clean, BLOCK_TAG_RE), lambda p: _jt_block(p, stopwords)
+    if not isinstance(stopwords, Column):
+        stopwords = F.array(*[F.lit(w) for w in stopwords])
+
+    def extract(ts: Column, stoplist: Column) -> Column:
+        blocks = F.filter(
+            F.transform(ts, lambda t: _jt_block(t, stoplist)), lambda b: b["text"] != ""
+        )
+        return let(
+            blocks,
+            lambda bs: let(
+                _jt_final_classes(F.transform(bs, _jt_cf_class)),
+                lambda cls: _fuse(bs, F.transform(cls, lambda c: c == JT_GOOD)),
             ),
-            lambda b: b["text"] != "",
-        ).alias("b"),
-        *[F.col(c) for c in keep_cols],
-    )
-    df = df.withColumn("cls", F.transform(F.col("b"), _jt_cf_class))
-
-    strict = (JT_BAD, JT_GOOD)
-    loose = (JT_BAD, JT_NEARGOOD, JT_GOOD)
-    df = (
-        df.withColumn("ps", _jt_scan_prev(F.col("cls"), strict))
-        .withColumn("ns", _jt_scan_next(F.col("cls"), strict))
-        .withColumn("pl", _jt_scan_prev(F.col("cls"), loose))
-        .withColumn("nl", _jt_scan_next(F.col("cls"), loose))
-    )
-
-    # SHORT pass (batch, reads the context-free classes):
-    #   both strict neighbours good → good; both bad → bad; mixed → good
-    #   iff a near-good sits between the short and its bad-side strict
-    #   neighbour, else bad.
-    def _short_rule(z: Column) -> Column:
-        c, p, n, pl, nl = z["cls"], z["ps"], z["ns"], z["pl"], z["nl"]
-        return F.when(c != JT_SHORT, c).otherwise(
-            F.when((p == JT_GOOD) & (n == JT_GOOD), F.lit(JT_GOOD))
-            .when((p == JT_BAD) & (n == JT_BAD), F.lit(JT_BAD))
-            .when(
-                ((p == JT_BAD) & (pl == JT_NEARGOOD))
-                | ((n == JT_BAD) & (nl == JT_NEARGOOD)),
-                F.lit(JT_GOOD),
-            )
-            .otherwise(F.lit(JT_BAD))
         )
 
-    df = df.withColumn(
-        "cls2",
-        F.transform(
-            F.arrays_zip(
-                F.col("cls"), F.col("ps"), F.col("ns"), F.col("pl"), F.col("nl")
-            ),
-            _short_rule,
-        ),
-    )
-
-    # NEAR-GOOD pass (closed form of the sequential loop — see module
-    # comment): good iff either flanking strict neighbour is good.
-    df = (
-        df.withColumn("ps2", _jt_scan_prev(F.col("cls2"), strict))
-        .withColumn("ns2", _jt_scan_next(F.col("cls2"), strict))
-    )
-    df = df.withColumn(
-        "cls3",
-        F.transform(
-            F.arrays_zip(F.col("cls2"), F.col("ps2"), F.col("ns2")),
-            lambda z: F.when(z["cls2"] != JT_NEARGOOD, z["cls2"]).otherwise(
-                F.when(
-                    (z["ps2"] == JT_GOOD) | (z["ns2"] == JT_GOOD), F.lit(JT_GOOD)
-                ).otherwise(F.lit(JT_BAD))
-            ),
-        ),
-    )
-
-    zipped = F.zip_with(
-        F.col("b"), F.col("cls3"), lambda b, c: F.struct(b.alias("b"), c.alias("c"))
-    )
-    good = F.filter(zipped, lambda z: z["c"] == JT_GOOD)
-    main = F.array_join(F.transform(good, lambda z: z["b"]["text"]), "\n")
-    boiler = F.filter(zipped, lambda z: z["c"] != JT_GOOD)
-    return df.select(
-        F.col(id_col),
-        main.alias("main_text"),
-        F.size(F.col("b")).cast("int").alias("n_blocks"),
-        F.size(good).cast("int").alias("n_content_blocks"),
-        F.coalesce(
-            F.aggregate(
-                boiler, F.lit(0).cast("long"), lambda a, z: a + z["b"]["chars"]
-            ),
-            F.lit(0).cast("long"),
-        ).alias("boiler_chars"),
-        *[F.col(c) for c in keep_cols],
-    )
+    m = let(stopwords, lambda sw: _tokens(_clean_html(F.col(html_col)), lambda ts: extract(ts, sw)))
+    types = {k: t for k, t in _MAIN_FIELDS.items() if k != "max_depth"}
+    return _select_fields(docs, id_col, m, types, keep_cols)
 
 
 # --- CETR: Content Extraction via Tag Ratios (Weninger, Hsu, Han — WWW 2010) -
@@ -1274,131 +1262,82 @@ def html_to_spans(
     * ``offset`` = span position × ``stride`` (the span_corpus
       convention).
 
-    One narrow expression pass — classification flags and unit features
-    materialize once per row as columns (never re-evaluated inside the
-    per-element lambdas), every fold is linear; no UDF, no shuffle, exact
-    DuckDB twin (`oracle_sql()['html_spans']`)."""
+    One narrow expression pass over one tokenization: the text units are
+    classified from the same (n_words, link_density) features as
+    :func:`html_blocks` — they are its blocks — and every array read
+    more than once is let-bound; no UDF, no shuffle, exact DuckDB twin
+    (`oracle_sql()['html_spans']`)."""
     from ocr_spark.operators.links import tag_attr
 
-    h = F.coalesce(F.col(html_col), F.lit(""))
-    clean = F.regexp_replace(
-        F.regexp_replace(F.regexp_replace(h, SCRIPT_RE, ""), STYLE_RE, ""),
-        HTML_COMMENT_RE,
-        "",
-    )
-
-    def unit_of(part: Column) -> Column:
-        text = py_strip(F.regexp_replace(part, _TAG_RE, ""))
+    def unit(t: Column) -> Column:
         imgs = F.filter(
             F.transform(
-                F.regexp_extract_all(part, F.lit(_IMG_TAG_RE), 0),
-                lambda t: tag_attr(t, "src"),
+                F.regexp_extract_all(t["part"], F.lit(_IMG_TAG_RE), 0),
+                lambda tag: tag_attr(tag, "src"),
             ),
             lambda s: s != "",
         )
-        return F.struct(text.alias("text"), imgs.alias("imgs"))
+        return F.struct(
+            t["text"].alias("text"),
+            imgs.alias("imgs"),
+            word_count(t["text"]).alias("n_words"),
+            _link_density(_anchor_chars(t["part"]), t["text"]).alias("link_density"),
+        )
 
-    d0 = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(
-            F.transform(F.split(clean, BLOCK_TAG_RE), unit_of),
-            lambda u: (u["text"] != "") | (F.size(u["imgs"]) > 0),
-        ).alias("units"),
-        classify_blocks(html_blocks(clean)).alias("flags"),
-    )
-    # prefix count of TEXT units before each unit (linear fold of flat int
-    # appends — the html_blocks depth-prefix discipline); tidx[i] (0-based
-    # entry i) = how many text units precede unit i+1
-    deltas = F.transform(
-        F.col("units"),
-        lambda u: F.when(u["text"] != "", F.lit(1)).otherwise(F.lit(0)),
-    )
-    prefix = F.aggregate(
-        deltas,
-        F.array(F.lit(0)),
-        lambda acc, d: F.concat(acc, F.array(F.element_at(acc, -1) + d)),
-    )
-    d1 = d0.withColumn(
-        "tidx", F.slice(prefix, 1, F.size(F.col("units")))
-    )
-    # kept[i]: unit i is a text unit whose aligned classifier flag is true
-    kept = F.zip_with(
-        F.col("units"),
-        F.col("tidx"),
-        lambda u, t: (u["text"] != "")
-        & F.coalesce(F.element_at(F.col("flags"), t + 1), F.lit(False)),
-    )
-    d2 = d1.withColumn("kept", kept)
-    n = F.size(F.col("kept"))
-    prev_kept = F.when(n == 0, F.col("kept")).otherwise(
-        F.concat(F.array(F.lit(False)), F.slice(F.col("kept"), 1, n - 1))
-    )
-    next_kept = F.when(n == 0, F.col("kept")).otherwise(
-        F.concat(F.slice(F.col("kept"), 2, n - 1), F.array(F.lit(False)))
-    )
-    d3 = d2.withColumn(
-        "media_ok",
-        F.zip_with(
-            F.zip_with(
-                F.col("kept"),
-                prev_kept,
-                lambda k, p: F.struct(k.alias("k"), p.alias("p")),
+    def kept_of(us: Column) -> Column:
+        # kept[i]: unit i is a text unit the classifier keeps. A text unit
+        # with k text units at or before it is block k-1 of ``tu``.
+        is_text = F.transform(us, lambda u: F.when(u["text"] != "", F.lit(1)).otherwise(F.lit(0)))
+        return let(
+            F.filter(us, lambda u: u["text"] != ""),
+            lambda tu: F.zip_with(
+                us,
+                _running_sum(is_text),
+                lambda u, k: (u["text"] != "") & _is_content(tu, k - 1),
             ),
-            next_kept,
-            lambda kp, nx: kp["k"] | nx | kp["p"],
-        ),
-    )
-    # media_ok is own-or-neighbour kept; restrict neighbour credit to
-    # IMG-ONLY units at emission time (a boilerplate TEXT unit never emits
-    # its images even next to content)
-    empty_span = F.array().cast(
-        "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    )
+        )
 
-    def emit(i: Column) -> Column:
-        u = F.element_at(F.col("units"), i)
-        own = F.element_at(F.col("kept"), i)
-        mok = F.element_at(F.col("media_ok"), i)
-        media_keep = own | ((u["text"] == "") & mok)
-        media = F.when(
-            media_keep,
-            F.transform(
-                u["imgs"],
-                lambda s: F.struct(
-                    F.lit("media").alias("kind"),
-                    F.lit("").alias("text"),
-                    s.alias("media_ref"),
-                    F.lit(-1).alias("offset"),
-                ),
-            ),
-        ).otherwise(empty_span)
-        text = F.when(
-            own,
-            F.array(
-                F.struct(
-                    F.lit("text").alias("kind"),
-                    u["text"].alias("text"),
-                    F.lit("").alias("media_ref"),
-                    F.lit(-1).alias("offset"),
-                )
-            ),
-        ).otherwise(empty_span)
-        return F.concat(media, text)
+    def span(kind: str, text: Column, ref: Column) -> Column:
+        return F.struct(F.lit(kind).alias("kind"), text.alias("text"), ref.alias("media_ref"))
 
-    idx = F.when(n > 0, F.sequence(F.lit(1), n)).otherwise(
-        F.array().cast("array<int>")
+    no_spans = F.array().cast("array<struct<kind:string,text:string,media_ref:string>>")
+
+    def spans_of(us: Column, kept: Column) -> Column:
+        # a unit's images go out with its own kept text, or — IMG-ONLY
+        # units — next to a kept neighbour (a boilerplate TEXT unit never
+        # emits its images, even next to content)
+        def emit(u: Column, i: Column) -> Column:
+            own = F.get(kept, i)
+            near = F.coalesce(F.get(kept, i - 1), F.lit(False)) | F.coalesce(
+                F.get(kept, i + 1), F.lit(False)
+            )
+            media = F.when(
+                own | ((u["text"] == "") & near),
+                F.transform(u["imgs"], lambda s: span("media", F.lit(""), s)),
+            ).otherwise(no_spans)
+            text = F.when(own, F.array(span("text", u["text"], F.lit("")))).otherwise(no_spans)
+            return F.concat(media, text)
+
+        return F.transform(
+            F.flatten(F.transform(us, emit)),
+            lambda s, i: F.struct(
+                s["kind"].alias("kind"),
+                s["text"].alias("text"),
+                s["media_ref"].alias("media_ref"),
+                (i * stride).cast("int").alias("offset"),
+            ),
+        )
+
+    def units_of(ts: Column) -> Column:
+        return F.filter(
+            F.transform(ts, unit), lambda u: (u["text"] != "") | (F.size(u["imgs"]) > 0)
+        )
+
+    spans = _tokens(
+        _clean_html(F.col(html_col)),
+        lambda ts: let(units_of(ts), lambda us: let(kept_of(us), lambda kept: spans_of(us, kept))),
     )
-    flat = F.flatten(F.transform(idx, emit))
-    spans = F.transform(
-        flat,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            (i * stride).cast("int").alias("offset"),
-        ),
-    )
-    return d3.select("doc_id", spans.alias("spans"))
+    return docs.select(F.col(id_col).alias("doc_id"), spans.alias("spans"))
 
 
 # --- HTML structure extraction: tables and heading outline -------------------
@@ -1607,7 +1546,7 @@ def html_sections(
     ``text`` newline-joins the section's non-empty blocks; sections with
     neither heading nor text drop (a preamble-less page starts at 1).
 
-    Mechanics mirror :func:`html_to_spans`: one block split, a linear
+    Mechanics mirror :func:`html_to_spans`: one tokenization, a linear
     prefix fold assigning each block its section id (count of heading
     blocks at-or-before it — a part is a heading iff its OPENING boundary
     tag is ``<hN>``), then a per-section fold; no UDF, no shuffle, one
@@ -1615,82 +1554,49 @@ def html_sections(
     n_blocks)."""
     from ocr_spark.operators.links import xml_unescape
 
-    h = F.coalesce(F.col(html_col), F.lit(""))
-    clean = F.regexp_replace(
-        F.regexp_replace(F.regexp_replace(h, SCRIPT_RE, ""), STYLE_RE, ""),
-        HTML_COMMENT_RE,
-        "",
-    )
-    parts = F.split(clean, BLOCK_TAG_RE)
-    tags = F.regexp_extract_all(clean, F.lit(BLOCK_TAG_RE), 0)
-    # opener[i] = the boundary tag right before part i ('' for part 0)
-    openers = F.concat(F.array(F.lit("")), tags)
-
-    def unit(p: Column, o: Column) -> Column:
-        lvl = F.regexp_extract(o, _H_OPEN_RE, 1)
-        return F.struct(
-            xml_unescape(py_strip(F.regexp_replace(p, _TAG_RE, ""))).alias(
-                "text"
+    def unit(t: Column) -> Column:
+        return let(
+            F.regexp_extract(t["tag"], _H_OPEN_RE, 1),
+            lambda lvl: F.struct(
+                xml_unescape(t["text"]).alias("text"),
+                (lvl != "").alias("is_h"),
+                F.coalesce(lvl.try_cast("int"), F.lit(0)).alias("level"),
             ),
-            (lvl != "").alias("is_h"),
-            F.coalesce(lvl.try_cast("int"), F.lit(0)).alias("level"),
         )
 
-    units0 = F.zip_with(parts, openers, unit)
-    d0 = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(units0, lambda u: u["text"] != "").alias("units"),
-    )
-    # sid[i] = number of heading units at-or-before unit i (linear fold)
-    deltas = F.transform(
-        F.col("units"),
-        lambda u: F.when(u["is_h"], F.lit(1)).otherwise(F.lit(0)),
-    )
-    # fold the TAIL (slice is 1-based: start 2 = everything after the
-    # first element) onto the first delta — sid[i] = headings at-or-before
-    sids = F.aggregate(
-        F.slice(deltas, 2, F.greatest(F.size(deltas) - 1, F.lit(0))),
-        F.array(F.get(deltas, 0)),
-        lambda acc, d: F.concat(acc, F.array(F.element_at(acc, -1) + d)),
-    )
-    d1 = d0.withColumn(
-        "sids", F.when(F.size("units") == 0, F.array().cast("array<int>")).otherwise(sids)
-    )
-    n_h = F.coalesce(F.element_at(F.col("sids"), -1), F.lit(0))
+    def section(zu: Column, s: Column) -> Column:
+        def of(sec: Column) -> Column:
+            head = F.get(F.filter(sec, lambda z: z["u"]["is_h"]), F.lit(0))
+            body = F.filter(sec, lambda z: ~z["u"]["is_h"])
+            return F.struct(
+                s.cast("int").alias("section_idx"),
+                F.coalesce(head["u"]["level"], F.lit(0)).alias("level"),
+                F.coalesce(head["u"]["text"], F.lit("")).alias("heading"),
+                F.array_join(F.transform(body, lambda z: z["u"]["text"]), "\n").alias("text"),
+                F.size(body).cast("int").alias("n_blocks"),
+            )
 
-    # (unit, sid) pairs materialized ONCE per row as a column — the
-    # per-section lambda below sees a cheap bound reference, not a
-    # re-evaluated zip_with subtree (H sections x n units stays O(H*n)
-    # array scans, no expression re-execution)
-    d1 = d1.withColumn(
-        "zu",
-        F.zip_with(
-            F.col("units"),
-            F.col("sids"),
-            lambda u, i: F.struct(u.alias("u"), i.alias("i")),
-        ),
-    )
+        return let(F.filter(zu, lambda z: z["i"] == s), of)
 
-    def section(s: Column) -> Column:
-        head = F.get(
-            F.filter(F.col("zu"), lambda z: z["u"]["is_h"] & (z["i"] == s)),
-            F.lit(0),
-        )
-        body = F.filter(F.col("zu"), lambda z: ~z["u"]["is_h"] & (z["i"] == s))
-        text = F.array_join(F.transform(body, lambda z: z["u"]["text"]), "\n")
-        return F.struct(
-            s.cast("int").alias("section_idx"),
-            F.coalesce(head["u"]["level"], F.lit(0)).alias("level"),
-            F.coalesce(head["u"]["text"], F.lit("")).alias("heading"),
-            text.alias("text"),
-            F.size(body).cast("int").alias("n_blocks"),
-        )
+    def sections(us: Column) -> Column:
+        # sid[i] = number of heading units at-or-before unit i
+        sids = _running_sum(F.transform(us, lambda u: F.when(u["is_h"], F.lit(1)).otherwise(F.lit(0))))
+        zipped = F.zip_with(us, sids, lambda u, i: F.struct(u.alias("u"), i.alias("i")))
 
-    secs = F.filter(
-        F.transform(F.sequence(F.lit(0), n_h), section),
-        lambda x: (x["heading"] != "") | (x["text"] != ""),
+        def of(zu: Column) -> Column:
+            n_h = F.coalesce(F.get(zu, F.size(zu) - 1)["i"], F.lit(0))
+            return F.filter(
+                F.transform(F.sequence(F.lit(0), n_h), lambda s: section(zu, s)),
+                lambda x: (x["heading"] != "") | (x["text"] != ""),
+            )
+
+        return let(zipped, of)
+
+    secs = _tokens(
+        _clean_html(F.col(html_col)),
+        lambda ts: let(F.filter(F.transform(ts, unit), lambda u: u["text"] != ""), sections),
     )
-    out = d1.select("doc_id", F.explode(secs).alias("s"))
+    out = docs.select(F.col(id_col).alias("doc_id"), F.explode(secs).alias("s"))
     return out.select(
         "doc_id",
         F.col("s.section_idx").alias("section_idx"),

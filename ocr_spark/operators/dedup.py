@@ -25,16 +25,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_spark import config
+from ocr_spark.functions.text import let
 from ocr_spark.operators.textstats import words_of
 
 # --- shingling ---------------------------------------------------------------
 
 
 def shingles(text: Column, k: int = config.SHINGLE_SIZE) -> Column:
-    """Distinct word k-gram shingles of the lowered text. Word array
-    bind_once-bound (textstats) — an inline reference would re-split per
+    """Distinct word k-gram shingles of the lowered text. The word array
+    is bound once with ``let`` — an inline reference would re-split per
     shingle, O(n²)/doc."""
-    from ocr_spark.operators.textstats import bind_once
 
     def grams_of(w: Column) -> Column:
         n = F.size(w)
@@ -46,7 +46,7 @@ def shingles(text: Column, k: int = config.SHINGLE_SIZE) -> Column:
             F.transform(idx, lambda i: F.array_join(F.slice(w, i, k), " "))
         )
 
-    return bind_once(words_of(text), grams_of)
+    return let(words_of(text), grams_of)
 
 
 def _md5_int(c: Column, salt: int) -> Column:

@@ -127,14 +127,15 @@ def is_clear_side_by_side(text: Column) -> Column:
     return _side_by_side(_stripped_lines(text))
 
 
-def _language_bucket_columns(lines: Column, confidence: float) -> Column:
-    """G1 (pdf_processor.py:415-488 / :537-608): bucket the non-empty
-    stripped ``lines`` by per-line language; ru column left, en column
-    right."""
-    tagged = F.transform(
-        F.filter(lines, lambda l: l != ""),
-        lambda l: F.struct(l.alias("l"), line_language(l).alias("lang")),
-    )
+def _tagged(lines: Column) -> Column:
+    """Each line with its language, tagged once: (l, lang) structs."""
+    return F.transform(lines, lambda l: F.struct(l.alias("l"), line_language(l).alias("lang")))
+
+
+def _language_bucket_columns(tagged: Column, confidence: float) -> Column:
+    """G1 (pdf_processor.py:415-488 / :537-608): bucket the ``tagged``
+    stripped lines by language (an empty line is 'mixed' and joins
+    neither); ru column left, en column right."""
 
     def bucket(ts: Column, lang: str) -> Column:
         return F.transform(F.filter(ts, lambda t: t["lang"] == lang), lambda t: t["l"])
@@ -159,7 +160,7 @@ def analyze_text_columns(text: Column) -> Column:
         _stripped_lines(text),
         lambda lines: F.when(
             _side_by_side(lines),
-            _language_bucket_columns(lines, config.SBS_CONFIDENCE),
+            _language_bucket_columns(_tagged(lines), config.SBS_CONFIDENCE),
         ).otherwise(_empty_columns()),
     )
 
@@ -167,31 +168,36 @@ def analyze_text_columns(text: Column) -> Column:
 # --- secondary text-path detectors (kept for parity; not on the live path) --
 
 
+def _bilingual(langs: Column) -> Column:
+    """W9 gate over the bound per-line languages: ≥3 consecutive
+    opposite-script pairs, ≥6 raw lines. An empty line is 'mixed', so
+    pairs need no emptiness test of their own."""
+    n = F.greatest(F.size(langs) - 1, F.lit(0))
+    pairs = F.zip_with(
+        F.slice(langs, 1, n),
+        F.slice(langs, 2, n),
+        lambda a, b: (((a == "ru") & (b == "en")) | ((a == "en") & (b == "ru"))).cast("int"),
+    )
+    cnt = F.aggregate(pairs, F.lit(0), lambda acc, x: acc + x)
+    return (F.size(langs) >= config.BILINGUAL_MIN_LINES) & (cnt >= config.BILINGUAL_MIN_PAIRS)
+
+
 def has_clear_bilingual_structure(text: Column) -> Column:
-    """W9 (pdf_processor.py:490-535): ≥3 consecutive opposite-script pairs,
-    ≥6 raw lines. An empty line is 'mixed', so pairs need no emptiness
-    test of their own."""
-    langs = F.transform(_stripped_lines(text), line_language)
-
-    def count(ls: Column) -> Column:
-        n = F.greatest(F.size(ls) - 1, F.lit(0))
-        pairs = F.zip_with(
-            F.slice(ls, 1, n),
-            F.slice(ls, 2, n),
-            lambda a, b: (((a == "ru") & (b == "en")) | ((a == "en") & (b == "ru"))).cast("int"),
-        )
-        cnt = F.aggregate(pairs, F.lit(0), lambda acc, x: acc + x)
-        return (F.size(ls) >= config.BILINGUAL_MIN_LINES) & (cnt >= config.BILINGUAL_MIN_PAIRS)
-
-    return let(langs, count)
+    """W9 (pdf_processor.py:490-535)."""
+    return let(F.transform(_stripped_lines(text), line_language), _bilingual)
 
 
 def create_bilingual_columns(text: Column) -> Column:
-    """pdf_processor.py:537-608 — language buckets at confidence 0.9."""
-    return F.when(
-        has_clear_bilingual_structure(text),
-        _language_bucket_columns(_stripped_lines(text), config.BILINGUAL_CONFIDENCE),
-    ).otherwise(_empty_columns())
+    """pdf_processor.py:537-608 — language buckets at confidence 0.9, when
+    the W9 gate fires; lines split, stripped and tagged once for both."""
+
+    def columns(ts: Column) -> Column:
+        return F.when(
+            let(F.transform(ts, lambda t: t["lang"]), _bilingual),
+            _language_bucket_columns(ts, config.BILINGUAL_CONFIDENCE),
+        ).otherwise(_empty_columns())
+
+    return let(_tagged(_stripped_lines(text)), columns)
 
 
 def _block_lang(t: Column) -> Column:
@@ -203,54 +209,61 @@ def detect_language_split(text: Column) -> Column:
 
     Non-empty stripped lines, ≥4 raw lines, ≥2 ru + ≥2 en lines, language
     sequence strictly alternating ('mixed' is a wildcard), even→left /
-    odd→right, size ratio > 0.2. Confidence 0.8.
+    odd→right, size ratio > 0.2. Confidence 0.8. The lines are split,
+    stripped and tagged with their language once.
     """
-    raw = F.split(F.coalesce(text, F.lit("")), "\n")
-    items = F.filter(F.transform(raw, py_strip), lambda l: l != "")
-    langs = F.transform(items, line_language)
-    n_ru = F.size(F.filter(langs, lambda x: x == "ru"))
-    n_en = F.size(F.filter(langs, lambda x: x == "en"))
-    # alternating pattern over the sequence (pdf_processor.py:877-914)
-    idx = F.transform(langs, lambda _, i: i)
-    ru_en = F.aggregate(
-        F.zip_with(langs, idx, lambda l, i: F.struct(l.alias("l"), i.alias("i"))),
-        F.lit(True),
-        lambda acc, x: acc
-        & F.when(x["l"] == "mixed", F.lit(True))
-        .when(x["i"] % 2 == 0, x["l"] == "ru")
-        .otherwise(x["l"] == "en"),
-    )
-    en_ru = F.aggregate(
-        F.zip_with(langs, idx, lambda l, i: F.struct(l.alias("l"), i.alias("i"))),
-        F.lit(True),
-        lambda acc, x: acc
-        & F.when(x["l"] == "mixed", F.lit(True))
-        .when(x["i"] % 2 == 0, x["l"] == "en")
-        .otherwise(x["l"] == "ru"),
-    )
-    alternating = (F.size(langs) >= config.ALTERNATING_MIN_LINES) & (ru_en | en_ru)
-    left = F.filter(F.zip_with(items, idx, lambda l, i: F.struct(l.alias("l"), i.alias("i"))), lambda s: s["i"] % 2 == 0)
-    right = F.filter(F.zip_with(items, idx, lambda l, i: F.struct(l.alias("l"), i.alias("i"))), lambda s: s["i"] % 2 == 1)
-    left_text = F.array_join(F.transform(left, lambda s: s["l"]), "\n")
-    right_text = F.array_join(F.transform(right, lambda s: s["l"]), "\n")
-    ratio = F.least(F.length(left_text), F.length(right_text)) / F.greatest(
-        F.length(left_text), F.length(right_text), F.lit(1)
-    )
 
-    cols = F.array(
-        _column_struct(left_text, F.lit("left"), _block_lang(left_text), F.size(left), F.lit(config.ALTERNATING_CONFIDENCE)),
-        _column_struct(right_text, F.lit("right"), _block_lang(right_text), F.size(right), F.lit(config.ALTERNATING_CONFIDENCE)),
+    # alternating pattern over the sequence (pdf_processor.py:877-914)
+    def alternates(ts: Column, even: str, odd: str) -> Column:
+        return F.forall(
+            F.transform(
+                ts,
+                lambda t, i: F.when(t["lang"] == "mixed", F.lit(True))
+                .when(i % 2 == 0, t["lang"] == even)
+                .otherwise(t["lang"] == odd),
+            ),
+            lambda ok: ok,
+        )
+
+    def side(ts: Column, parity: int) -> Column:
+        return F.transform(F.filter(ts, lambda t, i: i % 2 == parity), lambda t: t["l"])
+
+    def split_of(n_raw: Column, ts: Column) -> Column:
+        n_ru = F.size(F.filter(ts, lambda t: t["lang"] == "ru"))
+        n_en = F.size(F.filter(ts, lambda t: t["lang"] == "en"))
+        alternating = (F.size(ts) >= config.ALTERNATING_MIN_LINES) & (
+            alternates(ts, "ru", "en") | alternates(ts, "en", "ru")
+        )
+
+        def columns(left: Column, right: Column) -> Column:
+            left_text, right_text = F.array_join(left, "\n"), F.array_join(right, "\n")
+            ratio = F.least(F.length(left_text), F.length(right_text)) / F.greatest(
+                F.length(left_text), F.length(right_text), F.lit(1)
+            )
+            conf = F.lit(config.ALTERNATING_CONFIDENCE)
+            cols = F.array(
+                _column_struct(left_text, F.lit("left"), _block_lang(left_text), F.size(left), conf),
+                _column_struct(right_text, F.lit("right"), _block_lang(right_text), F.size(right), conf),
+            )
+            ok = (
+                (n_raw >= config.ALTERNATING_MIN_LINES)
+                & (n_ru >= 2)
+                & (n_en >= 2)
+                & alternating
+                & (F.size(left) > 0)
+                & (F.size(right) > 0)
+                & (ratio > config.ALTERNATING_SIZE_RATIO)
+            )
+            return F.when(ok, cols).otherwise(_empty_columns())
+
+        return let(side(ts, 0), lambda left: let(side(ts, 1), lambda right: columns(left, right)))
+
+    return let(
+        _stripped_lines(text),
+        lambda lines: let(
+            _tagged(F.filter(lines, lambda l: l != "")), lambda ts: split_of(F.size(lines), ts)
+        ),
     )
-    ok = (
-        (F.size(raw) >= config.ALTERNATING_MIN_LINES)
-        & (n_ru >= 2)
-        & (n_en >= 2)
-        & alternating
-        & (F.size(left) > 0)
-        & (F.size(right) > 0)
-        & (ratio > config.ALTERNATING_SIZE_RATIO)
-    )
-    return F.when(ok, cols).otherwise(_empty_columns())
 
 
 def detect_column_patterns_split(text: Column) -> Column:

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_spark import config
-from ocr_spark.functions.text import py_strip
+from ocr_spark.functions.text import let, py_strip
 
 _LINK_RE = r"<a[^>]*>.*?</a>"
 
@@ -776,7 +776,7 @@ INTERLEAVE_MIN_WORDS = 10
 def _interleave_features(ss: Column) -> dict[str, Column]:
     """(n_spans, n_media, words, max_media_run) off a sorted
     (offset, kind, text) struct array — works on a materialized column or
-    a bind_once-bound lambda variable alike."""
+    a let-bound lambda variable alike."""
     n_spans = F.size(ss).cast("long")
     n_media = F.size(F.filter(ss, lambda s: s["kind"] == "media")).cast("long")
     words = F.aggregate(
@@ -842,9 +842,8 @@ def interleave_keep_expr(
     """:func:`filter_interleaved_docs`'s keep verdict as ONE per-row
     boolean expression — the gating form a pipeline uses in a filter()
     with no join and no second pass over the corpus (extract_job
-    --interleave-gate). The sorted span array is bind_once-bound so the
-    sort never re-runs per fold. Empty span arrays gate to False."""
-    from ocr_spark.operators.textstats import bind_once
+    --interleave-gate). The sorted span array is bound once with ``let``
+    so the sort never re-runs per fold. Empty span arrays gate to False."""
 
     def keep(ss: Column) -> Column:
         f = _interleave_features(ss)
@@ -852,7 +851,7 @@ def interleave_keep_expr(
             f, max_media, max_media_run, min_words
         )
 
-    return bind_once(_sorted_spans(F.col(spans_col)), keep)
+    return let(_sorted_spans(F.col(spans_col)), keep)
 
 
 def filter_interleaved_docs(

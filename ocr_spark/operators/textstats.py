@@ -13,7 +13,7 @@ from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 from ocr_spark import config
-from ocr_spark.functions.text import py_strip, text_quality_score  # noqa: F401  (re-export)
+from ocr_spark.functions.text import let, py_strip, text_quality_score  # noqa: F401  (re-export)
 
 FNV_MOD = 1_000_000_007  # polynomial-hash modulus (fits all folds in int64)
 CHAR_BASE = 131
@@ -37,18 +37,6 @@ def words_of(text: Column) -> Column:
     """Whitespace tokens of the lowered text (empty array for blank)."""
     s = py_strip(F.lower(F.coalesce(text, F.lit(""))))
     return F.when(s == "", F.array().cast("array<string>")).otherwise(F.split(s, r"(?U)\s+"))
-
-
-def bind_once(arr: Column, fn) -> Column:
-    """The let-expression Catalyst lacks: evaluate ``arr`` ONCE and hand it
-    to ``fn`` as a BOUND lambda variable (O(1) reference). An expression
-    referenced inside a higher-order-function lambda re-evaluates per
-    element — Catalyst does not CSE through lambdas — so e.g. a split
-    array sliced per gram turns O(n) per doc into O(n²)
-    (tools/megadoc_fold_bench.py; measured 62× on ngrams_of at 16k-char
-    docs). Column-in/Column-out helpers that cannot materialize a real
-    column use this instead."""
-    return F.get(F.transform(F.array(arr), fn), 0)
 
 
 def language_id(text: Column) -> Column:
@@ -601,8 +589,9 @@ def split_by_cluster(
 def ngrams_of(text: Column, n: int) -> Column:
     """Sliding word n-grams of the lowered text, space-joined (empty
     array when the document has fewer than n words). The word array is
-    :func:`bind_once`-bound so the split never re-runs per gram."""
-    return bind_once(
+    bound once with :func:`~ocr_spark.functions.text.let`, so the split
+    never re-runs per gram."""
+    return let(
         words_of(text),
         lambda w: F.when(
             F.size(w) >= n,
@@ -3012,9 +3001,9 @@ def keyword_tags(
 
     Spark-first shape: instead of an executor-side Aho–Corasick automaton
     (opaque to Catalyst, rebuilt per task), the corpus explodes to
-    (doc, pos, gram) rows for each n ≤ max_n — :func:`bind_once`-bound, so
-    tokenize runs once — and the dictionary equi-joins on the gram. The
-    dictionary side broadcasts only when a cheap distinct-count sketch
+    (doc, pos, gram) rows for each n ≤ max_n (:func:`ngrams_of`, whose
+    word array is let-bound, so tokenize runs once) — and the dictionary
+    equi-joins on the gram. The dictionary side broadcasts only when a cheap distinct-count sketch
     says it fits (the dedup-vocabulary lesson: an unconditional hint dies
     at 10^7+ phrases); otherwise it falls back to a shuffle join keyed on
     the gram, which AQE skew-splits if one phrase is Zipf-hot.
@@ -3109,7 +3098,7 @@ def cooccur_ppmi(
     int64 (a literal ``c_xy·T`` product would at corpus scale) and
     hash-matches the oracle.
 
-    Plan shape: pair generation is EXPRESSION-LEVEL (a bind_once'd nested
+    Plan shape: pair generation is EXPRESSION-LEVEL (a let-bound nested
     transform flatten per document — no positional self-join, no shuffle
     until the pair-count aggregation), then two count aggregations and a
     count-row join on the Zipf-headed term keys (AQE skew-split
@@ -3140,7 +3129,7 @@ def cooccur_ppmi(
 
     ex = docs.select(
         F.explode(
-            bind_once(
+            let(
                 words_of(F.col(text_col)),
                 lambda ws: F.when(F.size(ws) >= 2, pairs_of(ws)).otherwise(
                     F.array().cast(pair_t)

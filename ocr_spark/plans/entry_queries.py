@@ -263,12 +263,20 @@ def _sql_line_items(text_e: str) -> str:
     )
 
 
-def _sql_line_lang(l: str) -> str:
-    cyr, lat = _cyr(l), _lat(l)
+def _sql_script_balance(e: str) -> str:
+    """text.script_balance twin: Cyrillic minus Latin letters over the
+    reference's exact per-line letter sets (no lowering, so uppercase 'Ё'
+    is neither script and 'İ' and the Kelvin sign are Latin)."""
     return (
-        f"(CASE WHEN {cyr} > {lat} AND {cyr} > 0 THEN 'ru' "
-        f"WHEN {lat} > {cyr} AND {lat} > 0 THEN 'en' ELSE 'mixed' END)"
+        f"(length(translate({e}, '{T._PDF_LATIN}', '')) "
+        f"- length(translate({e}, '{T._PDF_CYRILLIC}', '')))"
     )
+
+
+def _sql_line_lang(l: str) -> str:
+    """text.line_language twin: the sign of the script balance."""
+    d = _sql_script_balance(l)
+    return f"(CASE WHEN {d} > 0 THEN 'ru' WHEN {d} < 0 THEN 'en' ELSE 'mixed' END)"
 
 
 def _sql_ocr_lang(l: str) -> str:
@@ -5789,12 +5797,8 @@ SELECT doc_id,
   {_sql_is_sbs('ltext')} AS is_sbs,
   (SELECT len(ls) >= {config.BILINGUAL_MIN_LINES} AND
      coalesce(list_sum(list_transform(range(1, len(ls)), i ->
-       CASE WHEN {_strip('ls[i]')} != '' AND {_strip('ls[i+1]')} != ''
-                 AND (({_cyr(_strip('ls[i]'))} > {_lat(_strip('ls[i]'))} AND {_cyr(_strip('ls[i]'))} > 0
-                       AND {_lat(_strip('ls[i+1]'))} > {_cyr(_strip('ls[i+1]'))} AND {_lat(_strip('ls[i+1]'))} > 0)
-                   OR ({_lat(_strip('ls[i]'))} > {_cyr(_strip('ls[i]'))} AND {_lat(_strip('ls[i]'))} > 0
-                       AND {_cyr(_strip('ls[i+1]'))} > {_lat(_strip('ls[i+1]'))} AND {_cyr(_strip('ls[i+1]'))} > 0))
-       THEN 1 ELSE 0 END)), 0) >= {config.BILINGUAL_MIN_PAIRS}
+       CASE WHEN {_sql_line_lang(_strip('ls[i]'))} || {_sql_line_lang(_strip('ls[i+1]'))}
+                 IN ('ruen', 'enru') THEN 1 ELSE 0 END)), 0) >= {config.BILINGUAL_MIN_PAIRS}
    FROM (SELECT string_split(coalesce(ltext, ''), chr(10)) AS ls)) AS has_bilingual,
   {_sql_alt_ok()} AS alt_split,
   {_SQL_PATTERN_OK} AS pattern_split
@@ -5862,12 +5866,12 @@ la3 AS (
   FROM la2 WHERE {_sql_alt_ok()}
 )
 SELECT doc_id, 0::BIGINT AS pos, lt AS text, 'left' AS side,
-       CASE WHEN {_cyr('lt')} > {_lat('lt')} THEN 'ru' ELSE 'en' END AS language,
+       CASE WHEN {_sql_script_balance('lt')} > 0 THEN 'ru' ELSE 'en' END AS language,
        ln AS items_count, {config.ALTERNATING_CONFIDENCE}::DOUBLE AS confidence_avg
 FROM la3
 UNION ALL
 SELECT doc_id, 1::BIGINT AS pos, rt AS text, 'right' AS side,
-       CASE WHEN {_cyr('rt')} > {_lat('rt')} THEN 'ru' ELSE 'en' END AS language,
+       CASE WHEN {_sql_script_balance('rt')} > 0 THEN 'ru' ELSE 'en' END AS language,
        rn AS items_count, {config.ALTERNATING_CONFIDENCE}::DOUBLE AS confidence_avg
 FROM la3""",
 )
@@ -9337,9 +9341,11 @@ _SQL_SPANS_UNIT = (
 )
 
 
-@_q(
-    "html_spans",
-    f"""
+def _sql_html_spans(src: str = _SQL_SPANS_HTML_SRC) -> str:
+    """html_to_spans oracle over any (doc_id, html) source SQL —
+    parameterized like :func:`_sql_html_extract` so the fuzz-parity suite
+    can feed adversarial HTML through the same oracle SQL."""
+    return f"""
 WITH {{BP}},
 hu AS (
   SELECT doc_id, flags,
@@ -9380,9 +9386,11 @@ hsp AS (
 SELECT doc_id, sp[i].kind AS kind, sp[i].text AS text,
        sp[i].media_ref AS media_ref, ((i - 1) * 16)::INT AS "offset"
 FROM hsp, UNNEST(range(1, len(sp) + 1)) AS t(i)""".replace(
-        "{BP}", _sql_bp_flag_ctes(_SQL_SPANS_HTML_SRC)
-    ),
-)
+        "{BP}", _sql_bp_flag_ctes(src)
+    )
+
+
+@_q("html_spans", _sql_html_spans())
 def q_html_spans(spark: SparkSession, sf: str) -> DataFrame:
     """Crawl path → the north-rule interleaved corpus shape
     (boilerplate.html_to_spans): Boilerpipe-CONTENT text blocks become

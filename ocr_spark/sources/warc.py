@@ -429,6 +429,22 @@ def responses(parsed: DataFrame) -> DataFrame:
     )
 
 
+def _html_pages(parsed: DataFrame, respect_noindex: bool) -> DataFrame:
+    """(doc_id, html) of the 200-OK text/html and xhtml responses, doc_id =
+    xxhash64 of the target URI; with ``respect_noindex``, pages whose
+    robots meta says noindex (or none) are dropped first."""
+    ct = F.lower(F.coalesce(F.col("http_content_type"), F.lit("")))
+    r = responses(parsed).filter(
+        (F.col("http_status") == 200)
+        & (ct.startswith("text/html") | ct.startswith("application/xhtml+xml"))
+    )
+    if respect_noindex:
+        from ocr_spark.operators.links import robots_meta_directive
+
+        r = r.filter(~robots_meta_directive(F.col("html"), "noindex"))
+    return r.select(F.xxhash64("target_uri").alias("doc_id"), F.col("html"))
+
+
 def warc_documents(
     parsed: DataFrame,
     extractor: str = "boilerpipe",
@@ -452,18 +468,7 @@ def warc_documents(
     contract (the outlink half, nofollow + robots.txt gating, lives in
     jobs/links_job.py); a narrow filter ahead of the heavy
     boilerplate pass, so excluded pages cost one regexp scan."""
-    ct = F.lower(F.coalesce(F.col("http_content_type"), F.lit("")))
-    r = responses(parsed).filter(
-        (F.col("http_status") == 200)
-        & (ct.startswith("text/html") | ct.startswith("application/xhtml+xml"))
-    )
-    if respect_noindex:
-        from ocr_spark.operators.links import robots_meta_directive
-
-        r = r.filter(~robots_meta_directive(F.col("html"), "noindex"))
-    keyed = r.select(
-        F.xxhash64("target_uri").alias("doc_id"), F.col("html")
-    )
+    keyed = _html_pages(parsed, respect_noindex)
     if extractor == "readability":
         from ocr_spark.operators.boilerplate import readability_extract
 
@@ -496,14 +501,5 @@ def warc_span_corpus(
     crawled WARC drop flows straight into ``assemble_spans`` /
     ``extract_documents`` and every span_corpus operator unchanged."""
     from ocr_spark.operators.boilerplate import html_to_spans
-    from ocr_spark.operators.links import robots_meta_directive
 
-    ct = F.lower(F.coalesce(F.col("http_content_type"), F.lit("")))
-    r = responses(parsed).filter(
-        (F.col("http_status") == 200)
-        & (ct.startswith("text/html") | ct.startswith("application/xhtml+xml"))
-    )
-    if respect_noindex:
-        r = r.filter(~robots_meta_directive(F.col("html"), "noindex"))
-    keyed = r.select(F.xxhash64("target_uri").alias("doc_id"), F.col("html"))
-    return html_to_spans(keyed)
+    return html_to_spans(_html_pages(parsed, respect_noindex))

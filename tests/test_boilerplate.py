@@ -895,3 +895,17 @@ def test_cetr_single_line_page(spark):
     # no density CONTRAST has no separable main content under CETR
     r = _cetr(spark, "<p>only one line of words here</p>")
     assert r.n_lines == 1 and r.main_text == ""
+
+
+@pytest.mark.parametrize(
+    "extract", [BP.html_to_spans, BP.extract_html_documents], ids=lambda f: f.__name__
+)
+def test_page_is_split_on_block_tags_once(spark, extract):
+    """One tokenization per page: the optimized plan holds one split on
+    the block tags and one extraction of them. Spark does no common-
+    subexpression elimination inside higher-order functions, so a block
+    array built inline at each of its reads re-splits the page per read."""
+    df = spark.createDataFrame([(1, "<p>x</p>")], "doc_id long, html string")
+    plan = extract(df)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count(f"{BP.BLOCK_TAG_RE}, -1)") == 1
+    assert plan.count(f"{BP.BLOCK_TAG_RE}, 0)") == 1

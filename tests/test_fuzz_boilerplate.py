@@ -458,3 +458,65 @@ def test_fuzz_justext_matches_duckdb_oracle_and_sequential_model(spark, seed):
     assert set(got) == set(want)
     mismatches = [(k, got[k], want[k]) for k in got if got[k] != want[k]]
     assert not mismatches, mismatches[:3]
+
+
+# --- HTML → interleaved spans fuzz parity -------------------------------------
+
+_IMGS = [
+    '<img src="/a{n}.png">',
+    "<img alt='x' src='/b{n}.jpg'>",
+    '<IMG SRC="/C{n}.GIF">',
+    "<IMG SRC='/d{n}.png' width=2>",
+    '<img src="">',
+    "<p><img src=\"/fig{n}.png\"></p>",                  # image-only unit
+    "<br><IMG SRC='/fig{n}.png'><img src=\"/g{n}.png\"><br>",  # two-image unit
+]
+
+
+def _gen_html_spans(rng: random.Random) -> str:
+    """`_gen_html` fragments with `<img>` tags between them: inline in a
+    text block (an illustrated paragraph), or alone in their own unit
+    between kept and dropped blocks (a standalone figure)."""
+    out = []
+    for _ in range(rng.randint(1, 4)):
+        out.append(_gen_html(rng))
+        if rng.random() < 0.7:
+            out.append(rng.choice(_IMGS).format(n=rng.randint(0, 99)))
+    return "".join(out)
+
+
+@pytest.mark.parametrize("seed", [20260820])
+def test_fuzz_html_to_spans_matches_duckdb_oracle(spark, seed):
+    from ocr_spark.operators.boilerplate import html_to_spans
+    from ocr_spark.plans.entry_queries import _sql_html_spans
+
+    rng = random.Random(seed)
+    rows = [(i, _gen_html_spans(rng)) for i in range(200)]
+    rows += [
+        (200, ""),
+        (201, None),
+        (202, '<img src="/only.png">'),
+        (203, "<p>" + _words(rng, 30) + "</p><p><IMG SRC='/between.png'></p>"
+              "<div><a href='/n'>nav nav nav</a></div>"),
+    ]
+
+    df = spark.createDataFrame(rows, "doc_id long, html string")
+    got = {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+        for r in html_to_spans(df).collect()
+    }
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE fuzz_html(doc_id BIGINT, html VARCHAR)")
+    con.executemany("INSERT INTO fuzz_html VALUES (?, ?)", rows)
+    sql = _sql_html_spans("SELECT doc_id, coalesce(html, '') AS html FROM fuzz_html")
+    want = {k: [] for k, _ in rows}
+    for doc_id, kind, text, media_ref, offset in sorted(
+        con.execute(sql).fetchall(), key=lambda r: (r[0], r[4])
+    ):
+        want[doc_id].append((kind, text, media_ref, offset))
+
+    assert set(got) == set(want)
+    assert sum(s[0] == "media" for v in got.values() for s in v) > 50
+    mismatches = [(k, got[k], want[k]) for k in got if got[k] != want[k]]
+    assert not mismatches, mismatches[:3]

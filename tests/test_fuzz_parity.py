@@ -294,3 +294,38 @@ def test_fuzz_chunk_documents_invariants(spark):
         for _, s, e in rows:
             assert 0 <= s < e <= n  # no empty/overhanging chunks
             assert e - s <= size
+
+
+def test_line_language_oracle_matches_engine(spark):
+    """The DuckDB twins of the per-line and per-block language count the
+    reference's exact letter sets: uppercase 'Ё' is neither script (its
+    lowercase lies past 'я'), 'İ' and the Kelvin sign are Latin."""
+    import duckdb
+
+    from ocr_spark.operators.layout import _block_lang
+    from ocr_spark.plans.entry_queries import _sql_line_lang, _sql_script_balance
+
+    lines = [
+        "Ё", "ЁЁЁ", "Ёж", "ЁЁЁ ab", "ё", "ёЁ x", "İ", "İİ ж", "K", "KK жж",
+        "Kelvin K", "ДОГОВОР", "AGREEMENT", "смешанная mixed", "ab вг", "abc вг",
+        "Ёлка и ЁЖ", "", " ", "123", "straße", "Çа", "ЙЙ", "ÀÉ",
+    ]
+    rows = list(enumerate(lines))
+    got = {
+        r["i"]: (r["lang"], r["block"])
+        for r in spark.createDataFrame(rows, "i int, l string")
+        .select("i", T.line_language(F.col("l")).alias("lang"), _block_lang(F.col("l")).alias("block"))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE lines(i INTEGER, l VARCHAR)")
+    con.executemany("INSERT INTO lines VALUES (?, ?)", rows)
+    want = {
+        i: (lang, block)
+        for i, lang, block in con.execute(
+            f"SELECT i, {_sql_line_lang('l')}, "
+            f"CASE WHEN {_sql_script_balance('l')} > 0 THEN 'ru' ELSE 'en' END FROM lines"
+        ).fetchall()
+    }
+    assert got == want
+    assert {i: got[i][0] for i in got} == {i: R.line_language(l) for i, l in rows}

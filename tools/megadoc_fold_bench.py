@@ -77,7 +77,25 @@ def text_docs(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     )
 
 
+def html_docs(corpus: DataFrame) -> DataFrame:
+    """Render the span corpus as HTML pages: one ``<p>`` per text span, one
+    ``<img src>`` per media span, in span order."""
+    return corpus.select(
+        "doc_id",
+        F.array_join(
+            F.transform(
+                F.col("spans"),
+                lambda s: F.when(
+                    s["kind"] == "media", F.concat(F.lit('<img src="'), s["media_ref"], F.lit('">'))
+                ).otherwise(F.concat(F.lit("<p>"), s["text"], F.lit("</p>"))),
+            ),
+            "",
+        ).alias("html"),
+    )
+
+
 def ops():
+    from ocr_spark.operators import boilerplate as BP
     from ocr_spark.operators import dedup as DD
     from ocr_spark.operators import spans as SP
     from ocr_spark.operators import textstats as TS
@@ -91,6 +109,9 @@ def ops():
         "spans_to_markdown": lambda sp, c, t: SP.spans_to_markdown(c),
         "span_kind_transitions": lambda sp, c, t: SP.span_kind_transitions(c),
         "filter_interleaved_docs": lambda sp, c, t: SP.filter_interleaved_docs(c),
+        # HTML-shaped (the span corpus rendered as pages)
+        "html_to_spans": lambda sp, c, t: BP.html_to_spans(html_docs(c)),
+        "extract_html_documents": lambda sp, c, t: BP.extract_html_documents(html_docs(c)),
         # text-shaped (take the flattened docs)
         "winnow_fingerprints": lambda sp, c, t: DD.winnow_fingerprints(t),
         "gopher_repetition": lambda sp, c, t: TS.gopher_repetition(t),
