@@ -6397,6 +6397,16 @@ def _sql_bp_wordcount(e: str) -> str:
     return f"(CASE WHEN {s} = '' THEN 0 ELSE len(regexp_split_to_array({s}, '{_WS}+')) END)"
 
 
+def _sql_clean_html(e: str) -> str:
+    """boilerplate._clean_html twin: ``e`` without its script, style and
+    comment bodies, stripped with the engine's own patterns."""
+    from ocr_spark.operators.boilerplate import HTML_COMMENT_RE, SCRIPT_RE, STYLE_RE
+
+    for pat in (SCRIPT_RE, STYLE_RE, HTML_COMMENT_RE):
+        e = f"regexp_replace({e}, '{pat}', '', 'g')"
+    return e
+
+
 def _sql_bp_flag_ctes(src: str) -> str:
     """The shared Boilerpipe oracle CTE chain over any (doc_id, html)
     source SQL: hsrc -> hsplit (parts+tags) -> hfeat (feature blocks b)
@@ -6663,11 +6673,7 @@ WITH hsrc AS (
   {src}
 ),
 hclean AS (
-  SELECT doc_id,
-         regexp_replace(regexp_replace(regexp_replace(coalesce(html, ''),
-           '(?is)<script\\b[^>]*>.*?</script>', '', 'g'),
-           '(?is)<style\\b[^>]*>.*?</style>', '', 'g'),
-           '(?s)<!--.*?-->', '', 'g') AS html
+  SELECT doc_id, {_sql_clean_html("coalesce(html, '')")} AS html
   FROM hsrc
 ),
 hsplit AS (
@@ -6842,11 +6848,7 @@ WITH hsrc AS (
   {src}
 ),
 hclean AS (
-  SELECT doc_id{thread},
-         regexp_replace(regexp_replace(regexp_replace(html,
-           '(?is)<script\\b[^>]*>.*?</script>', '', 'g'),
-           '(?is)<style\\b[^>]*>.*?</style>', '', 'g'),
-           '(?s)<!--.*?-->', '', 'g') AS html
+  SELECT doc_id{thread}, {_sql_clean_html("html")} AS html
   FROM hsrc
 ),
 hraw AS (
@@ -9344,7 +9346,10 @@ _SQL_SPANS_UNIT = (
 def _sql_html_spans(src: str = _SQL_SPANS_HTML_SRC) -> str:
     """html_to_spans oracle over any (doc_id, html) source SQL —
     parameterized like :func:`_sql_html_extract` so the fuzz-parity suite
-    can feed adversarial HTML through the same oracle SQL."""
+    can feed adversarial HTML through the same oracle SQL. Like the engine
+    (and unlike :func:`extract_html_documents`), it splits the page
+    without its script, style and comment bodies."""
+    clean = _sql_clean_html("coalesce(html, '')")
     return f"""
 WITH {{BP}},
 hu AS (
@@ -9386,7 +9391,7 @@ hsp AS (
 SELECT doc_id, sp[i].kind AS kind, sp[i].text AS text,
        sp[i].media_ref AS media_ref, ((i - 1) * 16)::INT AS "offset"
 FROM hsp, UNNEST(range(1, len(sp) + 1)) AS t(i)""".replace(
-        "{BP}", _sql_bp_flag_ctes(src)
+        "{BP}", _sql_bp_flag_ctes(f"SELECT doc_id, {clean} AS html FROM ({src})")
     )
 
 

@@ -89,6 +89,19 @@ _SHOW_RE = _re.compile(
 )
 _ARRAY_STR_RE = _re.compile(rb"\(((?:[^()\\]|\\.)*)\)|<([0-9A-Fa-f\s]*)>")
 _ESC_RE = _re.compile(rb"\\([0-7]{1,3}|\r\n|\n|\r|.)")
+_LENGTH_RE = _re.compile(rb"/Length\s+(\d+)(\s+\d+\s+R)?")
+_ENDSTREAM_RE = _re.compile(rb"\r?\n?endstream")
+_FILTER_RE = _re.compile(rb"/Filter\s*(?:\[\s*)?/(\w+)")
+_DECODE_PARMS_RE = _re.compile(rb"/DecodeParms\s*(?:\[\s*)?<<(.*?)>>", _re.S)
+_EARLY_CHANGE_RE = _re.compile(rb"/EarlyChange\s+(\d+)")
+_PREDICTOR_RE = _re.compile(rb"/Predictor\s+(\d+)")
+_COLUMNS_RE = _re.compile(rb"/Columns\s+(\d+)")
+_OBJSTM_N_RE = _re.compile(rb"/N\s+(\d+)")
+_OBJSTM_FIRST_RE = _re.compile(rb"/First\s+(\d+)")
+_ROOT_REF_RE = _re.compile(rb"/Root\s+(\d+)\s+\d+\s+R")
+_PAGES_REF_RE = _re.compile(rb"/Pages\s+(\d+)\s+\d+\s+R")
+_KIDS_RE = _re.compile(rb"/Kids\s*\[(.*?)\]", _re.DOTALL)
+_CONTENTS_RE = _re.compile(rb"/Contents\s*(\[[^\]]*\]|\d+\s+\d+\s+R)")
 _ESC_MAP = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f"}
 
 
@@ -174,7 +187,7 @@ class _MiniPdf:
             pos = end + 6 if end != -1 else raw_start + length
 
     def _stream_length(self, head: bytes, data: bytes, raw_start: int) -> int:
-        lm = _re.search(rb"/Length\s+(\d+)(\s+\d+\s+R)?", head)
+        lm = _LENGTH_RE.search(head)
         if lm and not lm.group(2):
             return int(lm.group(1))
         if lm:  # indirect /Length — resolve if the target already scanned,
@@ -184,7 +197,7 @@ class _MiniPdf:
                     return int(self.objs[ref][0].strip())
                 except ValueError:
                     pass
-        em = _re.compile(rb"\r?\n?endstream").search(data, raw_start)
+        em = _ENDSTREAM_RE.search(data, raw_start)
         return (em.start() if em else len(data)) - raw_start
 
     # -- stream decode -----------------------------------------------------
@@ -196,19 +209,17 @@ class _MiniPdf:
 
     @staticmethod
     def _decode(head: bytes, raw: bytes) -> bytes:
-        fm = _re.search(rb"/Filter\s*(?:\[\s*)?/(\w+)", head)
+        fm = _FILTER_RE.search(head)
         if not fm:
             return raw
         # filter parameters live only in the /DecodeParms sub-dictionary; a
         # same-named key elsewhere in the stream dictionary is not one
-        dm = _re.search(rb"/DecodeParms\s*(?:\[\s*)?<<(.*?)>>", head, _re.S)
+        dm = _DECODE_PARMS_RE.search(head)
         parms = dm.group(1) if dm else b""
         if fm.group(1) == b"FlateDecode":
-            import zlib
-
-            data = zlib.decompress(raw)
+            data = _zlib.decompress(raw)
         elif fm.group(1) == b"LZWDecode":
-            em = _re.search(rb"/EarlyChange\s+(\d+)", parms)
+            em = _EARLY_CHANGE_RE.search(parms)
             data = _lzw_decode(raw, early=int(em.group(1)) if em else 1)
         else:
             raise NotImplementedError(
@@ -216,9 +227,9 @@ class _MiniPdf:
                 "install pypdf for general PDFs (the built-in reader handles "
                 "uncompressed, /FlateDecode, and /LZWDecode streams)"
             )
-        pm = _re.search(rb"/Predictor\s+(\d+)", parms)
+        pm = _PREDICTOR_RE.search(parms)
         if pm and int(pm.group(1)) >= 10:
-            cm = _re.search(rb"/Columns\s+(\d+)", parms)
+            cm = _COLUMNS_RE.search(parms)
             data = _png_unpredict(data, int(cm.group(1)) if cm else 1)
         return data
 
@@ -228,8 +239,8 @@ class _MiniPdf:
             head = self.objs[num][0]
             if b"/ObjStm" not in head:
                 continue
-            nm = _re.search(rb"/N\s+(\d+)", head)
-            fm = _re.search(rb"/First\s+(\d+)", head)
+            nm = _OBJSTM_N_RE.search(head)
+            fm = _OBJSTM_FIRST_RE.search(head)
             if not (nm and fm):
                 continue
             data = self.stream_bytes(num)
@@ -241,17 +252,18 @@ class _MiniPdf:
                 self.objs.setdefault(onum, (data[first + off : first + end], None))
 
     # -- document structure ------------------------------------------------
-    def _ref(self, body: bytes, key: bytes) -> int | None:
-        m = _re.search(key + rb"\s+(\d+)\s+\d+\s+R", body)
+    @staticmethod
+    def _ref(body: bytes, key_ref: _re.Pattern) -> int | None:
+        m = key_ref.search(body)
         return int(m.group(1)) if m else None
 
     def page_ids(self) -> list[int]:
         """Leaf /Page object numbers in page-tree order (nested /Kids
         walked depth-first; cycle-guarded)."""
-        root = self._ref(self.data, rb"/Root")
+        root = self._ref(self.data, _ROOT_REF_RE)
         pages_ref = None
         if root is not None and root in self.objs:
-            pages_ref = self._ref(self.objs[root][0], rb"/Pages")
+            pages_ref = self._ref(self.objs[root][0], _PAGES_REF_RE)
         if pages_ref is None:  # damaged trailer/catalog: first /Kids found
             for num, (body, _raw) in sorted(self.objs.items()):
                 if b"/Kids" in body:
@@ -267,7 +279,7 @@ class _MiniPdf:
                 return
             seen.add(num)
             body = self.objs[num][0]
-            km = _re.search(rb"/Kids\s*\[(.*?)\]", body, _re.DOTALL)
+            km = _KIDS_RE.search(body)
             if km:
                 for rm in _REF_RE.finditer(km.group(1)):
                     walk(int(rm.group(1)))
@@ -283,11 +295,14 @@ class _MiniPdf:
         """Concatenated decoded content streams of one page (/Contents as a
         single ref or an array of refs)."""
         body = self.objs[page_num][0]
-        cm = _re.search(rb"/Contents\s*(\[[^\]]*\]|\d+\s+\d+\s+R)", body)
+        cm = _CONTENTS_RE.search(body)
         if not cm:
             return b""
         refs = [int(m.group(1)) for m in _REF_RE.finditer(cm.group(1))]
         return b"\n".join(self.stream_bytes(r) for r in refs if r in self.objs)
+
+
+_LZW_BASE = {i: bytes([i]) for i in range(256)}
 
 
 def _lzw_decode(data: bytes, early: int = 1) -> bytes:
@@ -299,8 +314,7 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
     LZW PDFs on the direct-text path (`pdf_processor.py:168-184`); without
     this, a born-digital LZW PDF pays the 100-1000× rasterize+OCR branch
     unnecessarily."""
-    base = {i: bytes([i]) for i in range(256)}
-    table = dict(base)
+    table = dict(_LZW_BASE)
     next_code, width = 258, 9
     out = bytearray()
     prev: bytes | None = None
@@ -314,7 +328,7 @@ def _lzw_decode(data: bytes, early: int = 1) -> bytes:
             buf &= (1 << nbits) - 1  # drop consumed bits — bounded bigint,
             # else decode is O(n²) in stream length (measured 16.8 s at 274 KB)
             if code == 256:
-                table = dict(base)
+                table = dict(_LZW_BASE)
                 next_code, width = 258, 9
                 prev = None
                 continue

@@ -2,7 +2,8 @@
 HTML through the Spark expression pipeline must match the DuckDB oracle —
 the same comparison the driver's correctness gate runs, on nastier inputs
 than the wrapped documents corpus (nested containers, stray close tags,
-anchors straddling word-count thresholds, unicode whitespace, tag soup)."""
+anchors straddling word-count thresholds, unicode whitespace, tag soup,
+script/style/comment bodies that hold block tags)."""
 
 from __future__ import annotations
 
@@ -26,6 +27,19 @@ _WS = [" ", "  ", "\t", "\n", " ", "　"]
 
 def _words(rng: random.Random, n: int) -> str:
     return rng.choice(_WS).join(rng.choice(_WORDS) for _ in range(n))
+
+
+def _decoy(rng: random.Random) -> str:
+    """A script, style or comment body holding block tags and enough words
+    to be content: the engine strips the body before it splits the page,
+    so none of it may reach a block."""
+    body = f"<div><p>{_words(rng, rng.choice([5, 20, 45]))}</p>\n<br>{_words(rng, 18)}</div>"
+    return rng.choice([
+        f"<script>var a = '{body}';</script>",
+        f"<SCRIPT type='text/javascript'>\n{body}\n</Script>",
+        f"<style>/* {body} */ .x {{ color: red }}</style>",
+        f"<!-- {body} -->",
+    ])
 
 
 def _gen_html(rng: random.Random) -> str:
@@ -54,6 +68,8 @@ def _gen_html(rng: random.Random) -> str:
             )
         if rng.random() < 0.3:
             out.append(rng.choice(_WS))
+        if rng.random() < 0.1:
+            out.append(_decoy(rng))
     return "".join(out)
 
 
