@@ -265,10 +265,11 @@ def extract_fields_spans(
     pipeline keeps next to structured data (a doc-level map says WHAT was
     extracted, this says WHERE). Returns one row per (text span, found
     field): (doc_id, span_ord, field, value, is_first) with span_ord the
-    span's position among ALL spans in offset order (the span-sequence
-    order contract) and is_first marking the document-level winner — the
-    lowest-ord occurrence, mirroring first-match semantics of the
-    full-text extractor (data_extractor.py:79-146).
+    span's position among ALL spans in canonical order (the span-sequence
+    order contract, ``operators/spans``) and is_first marking the
+    document-level winner — the lowest-ord occurrence, mirroring
+    first-match semantics of the full-text extractor
+    (data_extractor.py:79-146).
 
     Plan shape: sort + posexplode is narrow per document; the regex stack
     is the same folded literal chain as extract_fields_map; the only
@@ -276,19 +277,12 @@ def extract_fields_spans(
     tiny (≤ spans-per-doc rows). Skew bounded by document size."""
     from pyspark.sql import DataFrame, Window  # local: fields.py is Column-only elsewhere
 
+    from ocr_spark.operators.spans import span_order
+
     assert isinstance(docs, DataFrame)
-    spans = F.array_sort(
-        F.transform(
-            F.col(spans_col),
-            lambda s: F.struct(
-                s["offset"].alias("offset"),
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-            ),
-        )
-    )
     d1 = docs.select(
-        F.col(id_col).alias("doc_id"), F.posexplode(spans).alias("span_ord", "s")
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(span_order(F.col(spans_col))).alias("span_ord", "s"),
     )
     d2 = d1.filter(F.col("s.kind") == "text").select(
         "doc_id",

@@ -144,11 +144,6 @@ def all_metrics(extracted: Column, ground_truth: Column) -> dict[str, Column]:
     return out
 
 
-def all_metrics_struct(extracted: Column, ground_truth: Column) -> Column:
-    """M7 as a single struct column."""
-    return F.struct(*[c.alias(k) for k, c in all_metrics(extracted, ground_truth).items()])
-
-
 def noise_metrics(extracted: Column, ground_truth: Column) -> dict[str, Column]:
     """M9 (metrics_calculator.py:255-278): M7 + noise_cer/noise_wer aliases."""
     out = all_metrics(extracted, ground_truth)

@@ -1,7 +1,8 @@
 """Scalar text functions (SURVEY.md §2.3 T1–T5) as pure Column expressions.
 
-No Python in the hot path, and everything but :func:`let` (which
-:func:`line_language` uses) stays inside whole-stage codegen.
+No Python in the hot path, and everything but the higher-order helpers
+:func:`let` (which :func:`line_language` uses), :func:`scan` and
+:func:`nearest` stays inside whole-stage codegen.
 Semantics follow the reference exactly (citations inline); the pure-Python
 twin lives in ``tests/reference_impl.py``.
 """
@@ -74,6 +75,35 @@ def let(value: Column, body) -> Column:
     holds everywhere: its lambda variable is the value, computed once,
     and a ``when``/``coalesce`` in ``body`` stays lazy."""
     return F.transform(F.array(value), body)[0]
+
+
+def scan(xs: Column, zero: Column, step) -> Column:
+    """Inclusive prefix fold: out[i] = step(out[i-1], xs[i]), out[-1] =
+    ``zero``. One ``aggregate`` that reads ``xs`` once and runs ``step``
+    once per element (each append copies the flat states so far, cheap
+    next to the per-element work of its callers); a per-element fold over
+    a slice would re-run ``step`` quadratically often."""
+    return F.aggregate(
+        xs,
+        F.array(zero),
+        lambda acc, x: F.concat(acc, F.array(step(F.element_at(acc, -1), x))),
+        lambda acc: F.slice(acc, 2, F.size(acc) - 1),
+    )
+
+
+def nearest(xs: Column, zero: Column, pick) -> Column:
+    """struct(p, n): p[i] / n[i] = ``pick`` of the nearest element at or
+    before / at or after i whose ``pick`` is not null (``zero`` past either
+    end). For an element whose own ``pick`` is null, that is the nearest
+    one strictly before / after it. Two :func:`scan` passes."""
+
+    def step(prev: Column, x: Column) -> Column:
+        return F.coalesce(pick(x), prev)
+
+    return F.struct(
+        scan(xs, zero, step).alias("p"),
+        F.reverse(scan(F.reverse(xs), zero, step)).alias("n"),
+    )
 
 
 def split_words(col: Column) -> Column:

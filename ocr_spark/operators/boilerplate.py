@@ -18,13 +18,13 @@ Shallow Text Features", WSDM 2010):
    (newline-joined, in document order).
 
 Every block extractor here (Boilerpipe, Readability, jusText, the span
-bridge and the sectioner) reads one tokenizer, :func:`_tokens`: the page
-(for all but :func:`html_blocks`, first cleaned of script, style and
-comment bodies by :func:`_clean_html`) is split on the block tags once,
-and each part carries its opening tag and its stripped text. The features
-on top of it exist once each: anchor characters and link density
-(:func:`_anchor_chars`, :func:`_link_density`), the depth delta of a tag
-(:func:`_depth_delta`) and the prefix fold (:func:`_scan`).
+bridge and the sectioner) reads one tokenizer, :func:`_tokens`: the page,
+without its script, style and comment bodies, is split on the block tags
+once, and each part carries its opening tag and its stripped text. The
+features on top of it exist once each: anchor characters and link density
+(:func:`_anchor_chars`, :func:`_link_density`) and the depth delta of a tag
+(:func:`_depth_delta`); the prefix folds are
+:func:`~ocr_spark.functions.text.scan` and its ``nearest`` form.
 
 Spark runs higher-order functions (``transform``, ``filter``,
 ``zip_with``, ``aggregate``) interpreted, with no common-subexpression
@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ocr_spark.functions.text import let, py_strip
+from ocr_spark.functions.text import let, nearest, py_strip, scan
 from ocr_spark.operators.spans import word_count
 
 # block-level boundary tags; (?i) works identically in Java regex and RE2
@@ -72,16 +72,9 @@ _CURR_LD_MAX = 0.333333
 _PREV_LD_MAX = 0.555556
 
 
-def _clean_html(html: Column) -> Column:
-    """The page without its script, style and comment bodies (null → '')."""
-    h = F.coalesce(html, F.lit(""))
-    for pat in (SCRIPT_RE, STYLE_RE, HTML_COMMENT_RE):
-        h = F.regexp_replace(h, pat, "")
-    return h
-
-
 def _tokens(html: Column, body) -> Column:
-    """``body(ts)``, ``ts`` bound to the page's parts: ``html`` split on
+    """``body(ts)``, ``ts`` bound to the page's parts: ``html`` (null →
+    ''), without its script, style and comment bodies, split on
     BLOCK_TAG_RE once, each part a (part, tag, text) struct — the raw
     part, the boundary tag that opens it ('' for the first) and its
     tag-stripped, `str.strip()`ed text."""
@@ -90,8 +83,11 @@ def _tokens(html: Column, body) -> Column:
         text = py_strip(F.regexp_replace(part, _TAG_RE, ""))
         return F.struct(part.alias("part"), tag.alias("tag"), text.alias("text"))
 
+    clean = F.coalesce(html, F.lit(""))
+    for pat in (SCRIPT_RE, STYLE_RE, HTML_COMMENT_RE):
+        clean = F.regexp_replace(clean, pat, "")
     return let(
-        html,
+        clean,
         lambda h: let(
             F.zip_with(
                 F.split(h, BLOCK_TAG_RE),
@@ -129,22 +125,8 @@ def _depth_delta(tag: Column) -> Column:
     )
 
 
-def _scan(xs: Column, zero: Column, step) -> Column:
-    """Inclusive prefix fold: out[i] = step(out[i-1], xs[i]), out[-1] =
-    ``zero``. One ``aggregate`` that reads ``xs`` once and runs ``step``
-    once per element (each append copies the flat states so far, cheap
-    next to the regex work per part); a per-element fold over a slice
-    would re-run ``step`` quadratically often."""
-    return F.aggregate(
-        xs,
-        F.array(zero),
-        lambda acc, x: F.concat(acc, F.array(step(F.element_at(acc, -1), x))),
-        lambda acc: F.slice(acc, 2, F.size(acc) - 1),
-    )
-
-
 def _running_sum(xs: Column) -> Column:
-    return _scan(xs, F.lit(0), lambda a, x: a + x)
+    return scan(xs, F.lit(0), lambda a, x: a + x)
 
 
 def _block_features(ts: Column) -> Column:
@@ -167,12 +149,28 @@ def html_blocks(html: Column) -> Column:
     """Array of per-block feature structs:
     (text, n_words, link_density, depth) — empty blocks dropped, document
     order preserved."""
-    return _tokens(F.coalesce(html, F.lit("")), _block_features)
+    return _tokens(html, _block_features)
 
 
 def _is_content(bs: Column, i: Column) -> Column:
     """NumWordsRulesClassifier verdict on block ``i`` (0-based) of the
-    bound block array ``bs``; out-of-range neighbours are empty blocks."""
+    bound block array ``bs`` (true = main content), over (prev, curr,
+    next).
+
+    Tree (WSDM 2010):
+      curr.ld <= 1/3:
+        prev.ld <= 0.5556:
+          curr.words <= 16: next.words <= 15: (prev.words <= 4 → BOILER,
+                                               else CONTENT)
+                            else CONTENT
+          else CONTENT
+        else: curr.words <= 40: (next.words <= 17 → BOILER, else CONTENT)
+              else CONTENT
+      else BOILER
+
+    Out-of-range neighbours count as empty blocks (0 words, 0 density).
+    ``bs`` is bound, so each neighbour read is an O(1) element access,
+    not a re-run of the expression that builds the array."""
     prev, nxt = F.get(bs, i - 1), F.get(bs, i + 1)
     curr_w, curr_ld = F.get(bs, i)["n_words"], F.get(bs, i)["link_density"]
     prev_w = F.coalesce(prev["n_words"], F.lit(0))
@@ -192,27 +190,6 @@ def _is_content(bs: Column, i: Column) -> Column:
 
 def _flags(bs: Column) -> Column:
     return F.transform(bs, lambda _, i: _is_content(bs, i))
-
-
-def classify_blocks(blocks: Column) -> Column:
-    """NumWordsRulesClassifier over (prev, curr, next) — returns a boolean
-    array aligned with ``blocks`` (true = main content).
-
-    Tree (WSDM 2010):
-      curr.ld <= 1/3:
-        prev.ld <= 0.5556:
-          curr.words <= 16: next.words <= 15: (prev.words <= 4 → BOILER,
-                                               else CONTENT)
-                            else CONTENT
-          else CONTENT
-        else: curr.words <= 40: (next.words <= 17 → BOILER, else CONTENT)
-              else CONTENT
-      else BOILER
-
-    Out-of-range neighbors count as empty blocks (0 words, 0 density).
-    ``blocks`` is bound once, so each neighbour read is an O(1) element
-    access, not a re-run of the expression that builds the array."""
-    return let(blocks, _flags)
 
 
 def _fuse(bs: Column, keep: Column, **extra: Column) -> Column:
@@ -383,7 +360,7 @@ def _rb_blocks(ts: Column) -> Column:
         )
 
     steps = F.transform(ts, lambda t, i: F.struct(_depth_delta(t["tag"]).alias("d"), i.alias("j")))
-    stacks = _scan(steps, _no_ints(), push_pop)
+    stacks = scan(steps, _no_ints(), push_pop)
     return F.filter(F.zip_with(ts, stacks, _readability_block), lambda b: b["text"] != "")
 
 
@@ -513,7 +490,7 @@ def readability_extract(
         "n_candidates": "int",
         "n_selected": "int",
     }
-    m = _tokens(_clean_html(F.col(html_col)), _readability)
+    m = _tokens(F.col(html_col), _readability)
     return _select_fields(docs, id_col, m, types, keep_cols)
 
 
@@ -549,9 +526,9 @@ def readability_extract(
 #     good) or the unchanged preceding neighbour (run going bad) — i.e.
 #     the whole run is good iff EITHER flanking strict neighbour is good.
 #
-# Each scan is ONE linear prefix fold per document (:func:`_scan`, the
-# fold of the depth prefix): the class array is let-bound and read once
-# by the fold, never re-evaluated per element.
+# Each scan is ONE linear prefix fold per document (the ``nearest`` form
+# of :func:`~ocr_spark.functions.text.scan`): the class array is let-bound
+# and read once by the fold, never re-evaluated per element.
 
 JT_LENGTH_LOW = 70
 JT_LENGTH_HIGH = 200
@@ -684,14 +661,7 @@ def _jt_cf_class(b: Column) -> Column:
 def _jt_nearest(cls: Column, keep: tuple[int, ...]) -> Column:
     """struct(p, n): p[i] / n[i] = the nearest class in ``keep`` at or
     before / at or after i (BAD past either end of the document)."""
-
-    def step(prev: Column, c: Column) -> Column:
-        return F.when(c.isin(*keep), c).otherwise(prev)
-
-    return F.struct(
-        _scan(cls, F.lit(JT_BAD), step).alias("p"),
-        F.reverse(_scan(F.reverse(cls), F.lit(JT_BAD), step)).alias("n"),
-    )
+    return nearest(cls, F.lit(JT_BAD), lambda c: F.when(c.isin(*keep), c))
 
 
 def _jt_final_classes(cls: Column) -> Column:
@@ -783,7 +753,7 @@ def justext_extract(
             ),
         )
 
-    m = let(stopwords, lambda sw: _tokens(_clean_html(F.col(html_col)), lambda ts: extract(ts, sw)))
+    m = let(stopwords, lambda sw: _tokens(F.col(html_col), lambda ts: extract(ts, sw)))
     types = {k: t for k, t in _MAIN_FIELDS.items() if k != "max_depth"}
     return _select_fields(docs, id_col, m, types, keep_cols)
 
@@ -1334,7 +1304,7 @@ def html_to_spans(
         )
 
     spans = _tokens(
-        _clean_html(F.col(html_col)),
+        F.col(html_col),
         lambda ts: let(units_of(ts), lambda us: let(kept_of(us), lambda kept: spans_of(us, kept))),
     )
     return docs.select(F.col(id_col).alias("doc_id"), spans.alias("spans"))
@@ -1593,7 +1563,7 @@ def html_sections(
         return let(zipped, of)
 
     secs = _tokens(
-        _clean_html(F.col(html_col)),
+        F.col(html_col),
         lambda ts: let(F.filter(F.transform(ts, unit), lambda u: u["text"] != ""), sections),
     )
     out = docs.select(F.col(id_col).alias("doc_id"), F.explode(secs).alias("s"))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark import config
 from ocr_spark.functions.text import let
+from ocr_spark.operators.spans import span_rank, span_rows
 from ocr_spark.operators.textstats import words_of
 
 # --- shingling ---------------------------------------------------------------
@@ -1104,20 +1105,6 @@ def apply_line_dedup(
 # --- interleaved span-level dedup (the north-rule corpus shape) ---------------
 
 
-def _span_rows(docs: DataFrame, id_col: str = "doc_id", spans_col: str = "spans") -> DataFrame:
-    """Explode the interleaved corpus shape (doc_id, spans array<struct<
-    kind,text,media_ref,offset>>) into one row per span."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(spans_col).alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
-
-
 def _span_norm() -> Column:
     return F.trim(F.coalesce(F.col("text"), F.lit("")))
 
@@ -1137,7 +1124,7 @@ def dup_span_index(
     Globally-unique spans are absent, so the index scales with the
     duplicated-span vocabulary and is broadcast-able at real dup rates;
     materialize once before a bucket loop for resumable runs."""
-    rows = _span_rows(docs, id_col, spans_col).filter(F.col("kind") != "media")
+    rows = span_rows(docs, id_col, spans_col).filter(F.col("kind") != "media")
     rows = rows.withColumn("norm", _span_norm())
     return (
         rows.filter(F.col("norm") != "")
@@ -1162,8 +1149,8 @@ def dedup_spans_corpus(
     text span duplicated anywhere in the corpus survives only at its
     canonical (min doc_id, min offset) occurrence; media spans and blank
     text spans are structural and always kept, and surviving spans are
-    re-ranked per document so the output is again a dense (kind, text,
-    media_ref, order) sequence. This is C4 line-dedup lifted to the span
+    re-ranked per document in canonical order (``operators/spans``) so the
+    output is again a dense (kind, text, media_ref, order) sequence. This is C4 line-dedup lifted to the span
     shape: cross-page boilerplate that survives extraction (cookie
     banners, share bars) is removed WITHOUT flattening documents to text,
     so downstream interleaved packing still sees the media refs in
@@ -1171,7 +1158,7 @@ def dedup_spans_corpus(
 
     Returns exploded kept spans (doc_id, kind, text, media_ref, ord)."""
     idx = dup_span_index(docs, id_col, spans_col)
-    rows = _span_rows(docs, id_col, spans_col).withColumn("norm", _span_norm())
+    rows = span_rows(docs, id_col, spans_col).withColumn("norm", _span_norm())
     joined = rows.join(idx, F.md5(F.col("norm")) == idx.span_md5, "left")
     keep = (
         (F.col("kind") == "media")
@@ -1183,14 +1170,7 @@ def dedup_spans_corpus(
         )
     )
     kept = joined.filter(keep)
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    return kept.select(
-        "doc_id",
-        "kind",
-        "text",
-        "media_ref",
-        (F.row_number().over(w) - 1).cast("long").alias("ord"),
-    )
+    return kept.select("doc_id", "kind", "text", "media_ref", span_rank().alias("ord"))
 
 
 # --- per-host template-line removal (site boilerplate) ------------------------

@@ -18,8 +18,11 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ocr_spark.functions.text import nearest, py_strip
+from ocr_spark.operators.spans import is_boilerplate, span_order, span_rows
 
 DECODE_SCHEMA = (
     "doc_id string, media_ref string, format string, width int, height int, "
@@ -109,11 +112,7 @@ def frame_sample(decoded: DataFrame, max_frames: int = 8) -> DataFrame:
 def media_spans_to_table(docs: DataFrame) -> DataFrame:
     """Pull media spans out of the interleaved corpus into a flat media
     table (doc_id, media_ref, offset) — narrow explode+filter."""
-    return (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "media")
-        .select("doc_id", F.col("s.media_ref").alias("media_ref"), F.col("s.offset").alias("offset"))
-    )
+    return span_rows(docs).filter(F.col("kind") == "media").select("doc_id", "media_ref", "offset")
 
 
 # --- audio -------------------------------------------------------------------
@@ -215,9 +214,9 @@ def media_ref_integrity(docs: DataFrame, media: DataFrame) -> DataFrame:
     side joins on its distinct refs only."""
     ids = docs.select("doc_id")
     refs = (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "media")
-        .groupBy("doc_id", F.col("s.media_ref").alias("media_ref"))
+        span_rows(docs)
+        .filter(F.col("kind") == "media")
+        .groupBy("doc_id", "media_ref")
         .agg(F.count(F.lit(1)).alias("n_spans"))
     )
     m = media.select("media_ref").distinct().withColumn("resolved", F.lit(1))
@@ -249,12 +248,7 @@ def orphan_media(media: DataFrame, docs: DataFrame) -> DataFrame:
     after a dedup sweep drops documents). LEFT ANTI join on the distinct
     referenced refs; same media_ref shuffle key as media_ref_integrity,
     so a combined audit job reuses one exchange."""
-    refs = (
-        docs.select(F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "media")
-        .select(F.col("s.media_ref").alias("media_ref"))
-        .distinct()
-    )
+    refs = span_rows(docs).filter(F.col("kind") == "media").select("media_ref").distinct()
     return media.join(refs, "media_ref", "left_anti")
 
 
@@ -271,15 +265,13 @@ def media_captions(docs: DataFrame) -> DataFrame:
     either side is NULL when no qualifying text exists on that side.
 
     Plan shape at 10^12 docs: per-document array expressions only — spans
-    sort by offset, two linear prefix folds carry the nearest qualifying
-    text forward/backward (same scan discipline as the jusText revision
-    passes), and the media rows explode at the end. The corpus is never
-    shuffled; one narrow pass.
+    sort in canonical order (``operators/spans``), two linear prefix folds
+    carry the nearest qualifying text forward/backward (same scan
+    discipline as the jusText revision passes), and the media rows
+    explode at the end. The corpus is never shuffled; one narrow pass.
 
     Output: (doc_id, media_ref, offset, caption_before, caption_after,
     caption) — one row per media span."""
-    from ocr_spark.functions.text import py_strip
-    from ocr_spark.operators.spans import is_boilerplate
 
     def ok(s: Column) -> Column:
         return (
@@ -288,28 +280,10 @@ def media_captions(docs: DataFrame) -> DataFrame:
             & ~is_boilerplate(s["text"])
         )
 
-    def scan_prev(sp: Column) -> Column:
-        folded = F.aggregate(
-            sp,
-            F.array(F.lit(None).cast("string")),
-            lambda acc, s: F.concat(
-                acc,
-                F.array(F.when(ok(s), s["text"]).otherwise(F.element_at(acc, -1))),
-            ),
-        )
-        n = F.size(sp)
-        return F.when(
-            n == 0, F.array().cast("array<string>")
-        ).otherwise(F.slice(folded, 1, n))
-
-    df = docs.select(
-        "doc_id",
-        F.array_sort(
-            F.col("spans"), lambda a, b: a["offset"] - b["offset"]
-        ).alias("sp"),
-    )
-    df = df.withColumn("pv", scan_prev(F.col("sp")))
-    df = df.withColumn("nx", F.reverse(scan_prev(F.reverse(F.col("sp")))))
+    # pv / nx: the nearest qualifying text before / after each media span
+    near = nearest(F.col("sp"), F.lit(None).cast("string"), lambda s: F.when(ok(s), s["text"]))
+    df = docs.select("doc_id", span_order(F.col("spans")).alias("sp"))
+    df = df.select("doc_id", "sp", near["p"].alias("pv"), near["n"].alias("nx"))
     z = F.filter(
         F.arrays_zip(F.col("sp"), F.col("pv"), F.col("nx")),
         lambda x: x["sp"]["kind"] == "media",

@@ -1,4 +1,21 @@
-"""Span pipeline core (north_rule): tokenize/classify → salted assembly.
+"""Span pipeline core (north_rule): the span format, tokenize/classify →
+salted assembly, and the span operators over the interleaved shape.
+
+The span format, owned here (every other module calls the helpers below):
+    an interleaved document is ``(doc_id, spans array<struct<kind, text,
+    media_ref, offset>>)`` (:data:`SPANS_TYPE`). The canonical span order
+    is the tuple (offset, kind, text, media_ref), null fields first — a
+    total order, so spans that share an offset still order the same way
+    in every operator and on every input order. The helpers:
+    :func:`span_key` (a span as the struct whose natural order is the
+    canonical one), :func:`span_order` (an array sorted by it),
+    :func:`span_window` and :func:`span_rank` (the same order over span
+    rows, and the dense 0-based re-rank), :func:`span_rows` (the one
+    explode of a span array into span rows) and :func:`spans_or_empty`
+    (null → empty array). Operators that emit assembled documents give
+    ``array<struct<kind, text, media_ref, order>>``, order the 0-based
+    canonical position (:func:`_numbered`). The streaming twin,
+    ``streaming/spans._emit``, sorts with the same rule in pandas.
 
 Stage 1 — tokenize/classify (NARROW, JVM expressions):
     explode the span array → one row per span; compute per-span features
@@ -28,15 +45,70 @@ deterministic):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ocr_spark import config
-from ocr_spark.functions.text import let, py_strip
+from ocr_spark.functions.text import let, nearest, py_strip
 
 _LINK_RE = r"<a[^>]*>.*?</a>"
 
+SPANS_TYPE = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 _OUT_SPAN_TYPE = "array<struct<kind:string,text:string,media_ref:string,order:int>>"
+# the canonical span order: the sort key's fields, most significant first
+SPAN_ORDER = ("offset", "kind", "text", "media_ref")
+
+
+def spans_or_empty(spans: Column) -> Column:
+    """The span array, null → an empty one."""
+    return F.coalesce(spans, F.array().cast(SPANS_TYPE))
+
+
+def span_key(s: Column | None = None) -> Column:
+    """The span struct ``s`` — or, with no argument, the current span
+    row's columns — as the struct whose natural order is the canonical
+    span order."""
+    return F.struct(*[(F.col(f) if s is None else s[f]).alias(f) for f in SPAN_ORDER])
+
+
+def span_order(spans: Column) -> Column:
+    """A span array in canonical order, each span as its :func:`span_key`."""
+    return F.sort_array(F.transform(spans, lambda s: span_key(s)))
+
+
+def span_window() -> WindowSpec:
+    """The span rows of one document (``doc_id``) in canonical order."""
+    return Window.partitionBy("doc_id").orderBy(*SPAN_ORDER)
+
+
+def span_rank() -> Column:
+    """A span row's dense 0-based position in its document, in canonical
+    order (a BIGINT ``ord``)."""
+    return (F.row_number().over(span_window()) - 1).cast("long")
+
+
+def span_rows(docs: DataFrame, id_col: str = "doc_id", spans_col: str = "spans") -> DataFrame:
+    """One row per span of the span array: (doc_id, kind, text, media_ref,
+    offset). A null or empty array gives no rows."""
+    # no alias on a column already named doc_id: it would stay in the plan
+    doc_id = F.col(id_col) if id_col == "doc_id" else F.col(id_col).alias("doc_id")
+    return docs.select(doc_id, F.explode(spans_col).alias("span")).select(
+        "doc_id", "span.kind", "span.text", "span.media_ref", "span.offset"
+    )
+
+
+def _numbered(ordered: Column) -> Column:
+    """Ordered spans → the output spans, each with its 0-based position
+    as ``order``."""
+    return F.transform(
+        ordered,
+        lambda s, i: F.struct(
+            s["kind"].alias("kind"),
+            s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"),
+            i.cast("int").alias("order"),
+        ),
+    ).cast(_OUT_SPAN_TYPE)
 
 
 def link_density(text: Column) -> Column:
@@ -73,10 +145,7 @@ def classify_spans(docs: DataFrame) -> DataFrame:
     Input:  (doc_id, spans array<struct<kind,text,media_ref,offset>>)
     Output: (doc_id, kind, text, media_ref, offset, is_boilerplate)
     """
-    exploded = docs.select("doc_id", F.explode("spans").alias("span")).select(
-        "doc_id", "span.kind", "span.text", "span.media_ref", "span.offset"
-    )
-    return exploded.withColumn(
+    return span_rows(docs).withColumn(
         "is_boilerplate",
         F.when(F.col("kind") == "media", F.lit(False)).otherwise(is_boilerplate(F.col("text"))),
     )
@@ -167,37 +236,11 @@ def assemble_spans(
     return _assemble_salted(kept, salt_chunk)
 
 
-def _span_key() -> Column:
-    """A span row as the struct whose natural order is the canonical span
-    order (offset, kind, text, media_ref)."""
-    return F.struct(
-        F.col("offset").alias("offset"),
-        F.col("kind").alias("kind"),
-        F.col("text").alias("text"),
-        F.col("media_ref").alias("media_ref"),
-    )
-
-
-def _numbered(ordered: Column) -> Column:
-    """Ordered spans → the output spans, each with its 0-based position
-    as ``order``."""
-    return F.transform(
-        ordered,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("order"),
-        ),
-    ).cast(_OUT_SPAN_TYPE)
-
-
 def _assemble_single_phase(kept: DataFrame) -> DataFrame:
-    """One shuffle: groupBy(doc_id) + sort inside the aggregation. Tie
-    order for duplicate offsets is the full (offset, kind, text, media_ref)
-    tuple — identical to the chunked path."""
+    """One shuffle: groupBy(doc_id) + sort inside the aggregation, in
+    canonical order — identical to the chunked path."""
     merged = kept.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list(_span_key())).alias("ordered")
+        F.sort_array(F.collect_list(span_key())).alias("ordered")
     )
     return merged.select(
         "doc_id",
@@ -210,7 +253,7 @@ def _assemble_salted(kept: DataFrame, salt_chunk: int) -> DataFrame:
         kept.withColumn("salt", (F.col("offset") / F.lit(salt_chunk)).cast("long"))
         .groupBy("doc_id", "salt")
         .agg(
-            F.sort_array(F.collect_list(_span_key())).alias("chunk")
+            F.sort_array(F.collect_list(span_key())).alias("chunk")
         )
     )
 
@@ -254,18 +297,10 @@ def span_language_runs(
     text = space-joined run text)."""
     from ocr_spark.functions.text import line_language
 
-    rows = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(spans_col).alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.offset").alias("offset"),
-    )
-    txt = rows.filter(F.col("kind") != "media").withColumn(
+    txt = span_rows(docs, id_col, spans_col).filter(F.col("kind") != "media").withColumn(
         "lang", line_language(F.col("text"))
     )
-    w = Window.partitionBy("doc_id").orderBy("offset")
+    w = span_window()
     flagged = txt.withColumn(
         "chg",
         F.when(
@@ -285,10 +320,7 @@ def span_language_runs(
         F.max("offset").cast("long").alias("last_offset"),
         F.concat_ws(
             " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("offset", "text"))),
-                lambda s: s["text"],
-            ),
+            F.transform(F.sort_array(F.collect_list(span_key())), lambda s: s["text"]),
         ).alias("text"),
     )
 
@@ -301,24 +333,13 @@ def spans_to_markdown(
     paragraphs (blank-line separated), media spans become image links
     (``![media](ref)``) at their exact interleave position, so the
     document reads top-to-bottom exactly as extracted. Pure array
-    expressions over the span array — no explode, no shuffle; ordering is
-    the spans' own offset order (assembly already sorted them).
+    expressions over the span array — no explode, no shuffle; spans render
+    in canonical order.
 
     Returns (doc_id, markdown, n_text, n_media)."""
     spans = F.col(spans_col)
-    sorted_spans = F.array_sort(
-        F.transform(
-            spans,
-            lambda s: F.struct(
-                s["offset"].alias("offset"),
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-            ),
-        )
-    )
     rendered = F.transform(
-        sorted_spans,
+        span_order(spans),
         lambda s: F.when(
             s["kind"] == "media",
             F.concat(F.lit("!["), s["kind"], F.lit("]("),
@@ -371,18 +392,6 @@ def filter_spans_quality(
     document size like every span operator.
 
     Returns exploded kept spans (doc_id, kind, text, media_ref, ord)."""
-    spans = F.col(spans_col)
-    ss = F.array_sort(
-        F.transform(
-            spans,
-            lambda s: F.struct(
-                s["offset"].alias("offset"),
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-            ),
-        )
-    )
 
     def passes(t: Column) -> Column:
         t = F.coalesce(t, F.lit(""))
@@ -404,32 +413,13 @@ def filter_spans_quality(
         .otherwise(F.lit(0)),
     )
 
-    def scan_nearest(cls_col: Column) -> Column:
-        """prefix array: state of the nearest non-media element BEFORE
-        each position (-1 when none) — one linear fold."""
-        init = F.struct(
-            F.array().cast("array<int>").alias("arr"), F.lit(-1).alias("last")
-        )
-        return F.aggregate(
-            cls_col,
-            init,
-            lambda acc, c: F.struct(
-                F.concat(acc["arr"], F.array(acc["last"])).alias("arr"),
-                F.when(c != 2, c).otherwise(acc["last"]).alias("last"),
-            ),
-            lambda acc: acc["arr"],
-        )
-
-    d1 = docs.select(F.col(id_col).alias("doc_id"), ss.alias("ss")).select(
-        "doc_id", "ss", cls.alias("cls")
-    )
-    d2 = d1.select(
-        "doc_id",
-        "ss",
-        "cls",
-        scan_nearest(F.col("cls")).alias("prev"),
-        F.reverse(scan_nearest(F.reverse(F.col("cls")))).alias("nxt"),
-    )
+    # prev / nxt: the class of the nearest text span before / after each
+    # media span (-1 when none)
+    near = nearest(F.col("cls"), F.lit(-1), lambda c: F.when(c != 2, c))
+    d1 = docs.select(
+        F.col(id_col).alias("doc_id"), span_order(F.col(spans_col)).alias("ss")
+    ).select("doc_id", "ss", cls.alias("cls"))
+    d2 = d1.select("doc_id", "ss", "cls", near["p"].alias("prev"), near["n"].alias("nxt"))
     keep = F.transform(
         F.col("ss"),
         lambda s, i: F.when(F.col("cls")[i] == 1, F.lit(True))
@@ -471,8 +461,7 @@ def coalesce_spans(
     Input:  (id_col, spans array<struct<kind,text,media_ref,offset>>)
     Output: (id_col, spans array<struct<kind,text,media_ref,order>>)
 
-    Canonical span order is (offset, kind, text, media_ref) — the same
-    total order as :func:`assemble_spans`' tie rule.
+    Spans merge in canonical order.
 
     Plan: hybrid on ``size(spans)``, routed NARROWLY (the array length is
     already in the row — no count pre-pass, unlike assemble_spans):
@@ -494,28 +483,12 @@ def coalesce_spans(
     Both paths produce identical sequences (pytest crosses them on the
     same input). Duplicate (offset, kind, text, media_ref) tuples are
     merged in canonical order on both paths."""
-    spans = F.coalesce(
-        F.col(spans_col),
-        F.array().cast(
-            "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-        ),
-    )
+    spans = spans_or_empty(F.col(spans_col))
     n_spans = F.size(spans)
 
     # --- small path: pure expressions, no shuffle --------------------------
-    ordered = F.sort_array(
-        F.transform(
-            spans,
-            lambda s: F.struct(
-                s["offset"].alias("offset"),
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-            ),
-        )
-    )
     kept_arr = F.filter(
-        ordered,
+        span_order(spans),
         lambda s: (s["kind"] == "media") | (py_strip(s["text"]) != ""),
     )
     merged_arr = F.aggregate(
@@ -563,13 +536,10 @@ def coalesce_spans(
     big_docs = docs.filter(n_spans > big_doc_spans).select(
         F.col(id_col).alias("doc_id")
     )
-    ex = (
-        docs.filter(n_spans > big_doc_spans)
-        .select(F.col(id_col).alias("doc_id"), F.explode(spans_col).alias("s"))
-        .select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
-        .filter((F.col("kind") == "media") | (py_strip(F.col("text")) != ""))
+    ex = span_rows(docs.filter(n_spans > big_doc_spans), id_col, spans_col).filter(
+        (F.col("kind") == "media") | (py_strip(F.col("text")) != "")
     )
-    w = Window.partitionBy("doc_id").orderBy("offset", "kind", "text", "media_ref")
+    w = span_window()
     runs = (
         ex.withColumn(
             "__st",
@@ -591,15 +561,7 @@ def coalesce_spans(
         runs.groupBy("doc_id", "__run")
         .agg(
             F.min("kind").alias("kind"),
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("offset").alias("offset"),
-                        F.col("text").alias("text"),
-                        F.col("media_ref").alias("media_ref"),
-                    )
-                )
-            ).alias("__parts"),
+            F.sort_array(F.collect_list(span_key())).alias("__parts"),
         )
         .select(
             "doc_id",
@@ -635,8 +597,8 @@ def truncate_spans(
     Token accounting is pack_interleaved's: text spans cost their BPE-ish
     sub-token count, media spans a fixed ``media_tokens`` budget.
 
-    One narrow expression chain per document: sort the spans array by the
-    canonical (offset, kind, text, media_ref) key, one LINEAR fold
+    One narrow expression chain per document: sort the spans array in
+    canonical order, one LINEAR fold
     carries (running total, kept-prefix length) — the running total is
     monotone, so the kept count is a prefix property and never needs a
     second pass — then slice. No explode, no shuffle.
@@ -646,23 +608,7 @@ def truncate_spans(
     FIRST span already exceeds the budget emit no rows."""
     from ocr_spark.operators.textstats import token_count_bpe
 
-    spans = F.coalesce(
-        F.col(spans_col),
-        F.array().cast(
-            "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-        ),
-    )
-    ordered = F.sort_array(
-        F.transform(
-            spans,
-            lambda s: F.struct(
-                s["offset"].alias("offset"),
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-            ),
-        )
-    )
+    ordered = span_order(spans_or_empty(F.col(spans_col)))
 
     def cost(s):
         return (
@@ -727,17 +673,7 @@ def span_kind_transitions(
     floor((n*1000)/total outgoing from src): milli-probabilities stay
     BIGINT, never IEEE, so the row is engine-portable by construction."""
     spans = F.col(spans_col)
-    kinds = F.transform(
-        F.array_sort(
-            F.transform(
-                spans,
-                lambda s: F.struct(
-                    s["offset"].alias("offset"), s["kind"].alias("kind")
-                ),
-            )
-        ),
-        lambda s: s["kind"],
-    )
+    kinds = F.transform(span_order(spans), lambda s: s["kind"])
     ks = F.concat(F.array(F.lit("BOS")), kinds, F.array(F.lit("EOS")))
     pairs = F.zip_with(
         F.slice(ks, 1, F.size(ks) - 1),
@@ -774,9 +710,9 @@ INTERLEAVE_MIN_WORDS = 10
 
 
 def _interleave_features(ss: Column) -> dict[str, Column]:
-    """(n_spans, n_media, words, max_media_run) off a sorted
-    (offset, kind, text) struct array — works on a materialized column or
-    a let-bound lambda variable alike."""
+    """(n_spans, n_media, words, max_media_run) off a canonical-ordered
+    span array — works on a materialized column or a let-bound lambda
+    variable alike."""
     n_spans = F.size(ss).cast("long")
     n_media = F.size(F.filter(ss, lambda s: s["kind"] == "media")).cast("long")
     words = F.aggregate(
@@ -820,19 +756,6 @@ def _interleave_keep(
     )
 
 
-def _sorted_spans(spans: Column) -> Column:
-    return F.array_sort(
-        F.transform(
-            spans,
-            lambda s: F.struct(
-                s["offset"].alias("offset"),
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-            ),
-        )
-    )
-
-
 def interleave_keep_expr(
     spans_col: str = "spans",
     max_media: int = INTERLEAVE_MAX_MEDIA,
@@ -851,7 +774,7 @@ def interleave_keep_expr(
             f, max_media, max_media_run, min_words
         )
 
-    return let(_sorted_spans(F.col(spans_col)), keep)
+    return let(span_order(F.col(spans_col)), keep)
 
 
 def filter_interleaved_docs(
@@ -880,7 +803,7 @@ def filter_interleaved_docs(
     """
     spans = F.col(spans_col)
     d = docs.filter(F.size(spans) > 0).select(
-        F.col(id_col).alias("doc_id"), _sorted_spans(spans).alias("ss")
+        F.col(id_col).alias("doc_id"), span_order(spans).alias("ss")
     )
     f = _interleave_features(F.col("ss"))
     out = d.select(

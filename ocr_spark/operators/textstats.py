@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ocr_spark import config
 from ocr_spark.functions.text import let, py_strip, text_quality_score  # noqa: F401  (re-export)
+from ocr_spark.operators.spans import span_rank, span_rows
 
 FNV_MOD = 1_000_000_007  # polynomial-hash modulus (fits all folds in int64)
 CHAR_BASE = 131
@@ -674,8 +675,8 @@ def decontaminate_spans(
     (doc_id, offset) key set anti-joins back onto the span rows keyed
     (doc_id, offset, kind) — kind in the key keeps a media span safe even
     if it shares an offset with a contaminated text span. One keyed
-    shuffle for the anti-join, one window for the dense re-rank, both on
-    doc keys.
+    shuffle for the anti-join, one window for the dense re-rank in
+    canonical span order (``operators/spans``), both on doc keys.
 
     Returns exploded kept spans (doc_id, kind, text, media_ref, ord)."""
     eval_grams = (
@@ -684,9 +685,7 @@ def decontaminate_spans(
         )
         .distinct()
     )
-    rows = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(spans_col).alias("s")
-    ).select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
+    rows = span_rows(docs, id_col, spans_col)
     bad = (
         rows.filter(F.col("kind") == "text")
         .select(
@@ -699,14 +698,7 @@ def decontaminate_spans(
         .distinct()
     )
     kept = rows.join(bad, ["doc_id", "offset", "kind"], "left_anti")
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    return kept.select(
-        "doc_id",
-        "kind",
-        "text",
-        "media_ref",
-        (F.row_number().over(w) - 1).cast("long").alias("ord"),
-    )
+    return kept.select("doc_id", "kind", "text", "media_ref", span_rank().alias("ord"))
 
 
 def pack_sequences(

@@ -1747,7 +1747,7 @@ def q_sentences(spark: SparkSession, sf: str) -> DataFrame:
     return TS.split_sentences(_sentenced_docs(spark, sf))
 
 
-def _sql_readability() -> str:
+def _sql_readability_scores() -> str:
     """readability_scores oracle over the sentenced wrap: words/sentences
     from the shared CTEs, the syllable heuristic as a list lambda, each
     fractional term floored independently with // — all integer."""
@@ -1780,7 +1780,7 @@ SELECT doc_id, n_words, n_sentences, n_syllables,
 FROM rsyl JOIN rsen USING (doc_id)"""
 
 
-@_q("readability_scores", _sql_readability())
+@_q("readability_scores", _sql_readability_scores())
 def q_readability_scores(spark: SparkSession, sf: str) -> DataFrame:
     """Flesch Reading Ease + Flesch-Kincaid grade in exact milli-units
     (textstats.readability_scores) over the sentenced wrap — the classic
@@ -6398,8 +6398,9 @@ def _sql_bp_wordcount(e: str) -> str:
 
 
 def _sql_clean_html(e: str) -> str:
-    """boilerplate._clean_html twin: ``e`` without its script, style and
-    comment bodies, stripped with the engine's own patterns."""
+    """The twin of ``boilerplate._tokens``' strip: ``e`` without its
+    script, style and comment bodies, stripped with the engine's own
+    patterns."""
     from ocr_spark.operators.boilerplate import HTML_COMMENT_RE, SCRIPT_RE, STYLE_RE
 
     for pat in (SCRIPT_RE, STYLE_RE, HTML_COMMENT_RE):
@@ -6409,9 +6410,11 @@ def _sql_clean_html(e: str) -> str:
 
 def _sql_bp_flag_ctes(src: str) -> str:
     """The shared Boilerpipe oracle CTE chain over any (doc_id, html)
-    source SQL: hsrc -> hsplit (parts+tags) -> hfeat (feature blocks b)
-    -> hflag (b + NumWordsRules flags). Used by the html_extract family
-    AND the html_spans oracle, so the classifier tree exists exactly once."""
+    source SQL: hsrc (the page without script, style and comment bodies,
+    like the engine's ``_tokens``) -> hsplit (parts+tags) -> hfeat
+    (feature blocks b) -> hflag (b + NumWordsRules flags). Used by the
+    html_extract family AND the html_spans oracle, so the classifier tree
+    exists exactly once."""
     strip_tags = "regexp_replace(p, '(?s)<[^>]*>', '', 'g')"
     text_of = _strip(strip_tags)
     # DuckDB array_to_string([]) is NULL, and least(NULL, 1.0) = 1.0 —
@@ -6449,7 +6452,7 @@ def _sql_bp_flag_ctes(src: str) -> str:
         END
       ELSE FALSE END"""
     return f"""hsrc AS (
-  {src}
+  SELECT doc_id, {_sql_clean_html("coalesce(html, '')")} AS html FROM ({src})
 ),
 hsplit AS (
   SELECT doc_id,
@@ -9346,10 +9349,7 @@ _SQL_SPANS_UNIT = (
 def _sql_html_spans(src: str = _SQL_SPANS_HTML_SRC) -> str:
     """html_to_spans oracle over any (doc_id, html) source SQL —
     parameterized like :func:`_sql_html_extract` so the fuzz-parity suite
-    can feed adversarial HTML through the same oracle SQL. Like the engine
-    (and unlike :func:`extract_html_documents`), it splits the page
-    without its script, style and comment bodies."""
-    clean = _sql_clean_html("coalesce(html, '')")
+    can feed adversarial HTML through the same oracle SQL."""
     return f"""
 WITH {{BP}},
 hu AS (
@@ -9391,7 +9391,7 @@ hsp AS (
 SELECT doc_id, sp[i].kind AS kind, sp[i].text AS text,
        sp[i].media_ref AS media_ref, ((i - 1) * 16)::INT AS "offset"
 FROM hsp, UNNEST(range(1, len(sp) + 1)) AS t(i)""".replace(
-        "{BP}", _sql_bp_flag_ctes(f"SELECT doc_id, {clean} AS html FROM ({src})")
+        "{BP}", _sql_bp_flag_ctes(src)
     )
 
 

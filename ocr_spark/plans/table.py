@@ -1504,20 +1504,6 @@ def refresh_view(
 # ---------------------------------------------------------------------------
 
 
-def refresh_manifest(
-    spark: SparkSession,
-    path: str,
-    partition_cols: tuple[str, ...] = ("lang",),
-    stats_col: str = "doc_id",
-) -> dict:
-    """Rebuild and atomically commit the snapshot manifest from ALL files
-    currently on disk.  Full-table repair pass for a table whose
-    manifest was lost — NOT for rewritten tables (it would resurrect
-    dead file groups); normal commits are incremental."""
-    files = _stat_files(spark, path, path, partition_cols, stats_col)
-    return _commit_files(path, files, partition_cols, stats_col, "refresh")
-
-
 def append_batch(
     df: DataFrame,
     path: str,

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ocr_spark.operators.spans import is_boilerplate
+from ocr_spark.operators.spans import is_boilerplate, span_rows
 
 FLUSH_MS = 30_000
 
@@ -41,11 +41,12 @@ STATE_SCHEMA = (
 
 
 def _emit(doc_id: int, kinds, texts, refs, offsets, finalized: bool) -> pd.DataFrame:
-    # Tie-break duplicate offsets by the full tuple — identical to the batch
-    # twin's sort_array over (offset, kind, text, media_ref) structs. Arrival
-    # index would be nondeterministic across micro-batch boundaries/retries.
-    # Spark's ascending struct ordering puts null fields FIRST; mirror that
-    # with (is-not-null, value) sub-keys.
+    # The canonical span order (operators/spans.SPAN_ORDER, owned there) in
+    # pandas: the full (offset, kind, text, media_ref) tuple, so duplicate
+    # offsets tie-break the same way as the batch twin's sort_array over
+    # span_key structs. Arrival index would be nondeterministic across
+    # micro-batch boundaries/retries. Spark's ascending struct ordering puts
+    # null fields FIRST; mirror that with (is-not-null, value) sub-keys.
     def _nf(v):  # null-first ordering of an optional string, Spark-style
         return (v is not None, v if v is not None else "")
 
@@ -134,13 +135,7 @@ def run_stream_assembly(corpus: DataFrame, work_dir: str, n_batches: int = 2) ->
     from pyspark.sql import functions as SF
 
     spark = corpus.sparkSession
-    rows = corpus.select("doc_id", SF.explode("spans").alias("s")).select(
-        "doc_id",
-        "s.kind",
-        "s.text",
-        "s.media_ref",
-        SF.col("s.offset").cast("long").alias("offset"),
-    )
+    rows = span_rows(corpus).withColumn("offset", SF.col("offset").cast("long"))
     eofs = corpus.select(
         "doc_id",
         SF.lit("eof").alias("kind"),

@@ -87,6 +87,18 @@ def test_null_and_empty_html(spark):
         assert rows[i]["boiler_chars"] == 0
 
 
+def test_boilerpipe_drops_script_bodies_before_the_split(spark):
+    """A script body holding block tags is stripped before the block split,
+    as in every other extractor, so none of its words reach main_text."""
+    words = lambda tag, n: " ".join(f"{tag}{i}" for i in range(n))  # noqa: E731
+    first, last = words("lead", 30), words("body", 30) + " end"
+    html = f"<p>{first}</p><script>var a = '<p>{words('script', 20)}</p>';</script><p>{last}</p>"
+    r = _extract(spark, html)
+    assert "script" not in r["main_text"]
+    assert r["main_text"] == f"{first}\n{last}"
+    assert r["n_blocks"] == 2
+
+
 # --- Readability (Arc90) candidate scoring ---------------------------------
 
 

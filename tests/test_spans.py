@@ -659,3 +659,82 @@ def test_extract_job_interleave_gate(spark, tmp_path, monkeypatch):
 
     assert run(str(tmp_path / "gated"), "--interleave-gate") == {1}
     assert run(str(tmp_path / "plain")) == {1, 2}
+
+
+# --- tie order: every span operator reads the canonical span order -----------
+
+_TIED_DOCS = [
+    # text/text tied at offset 0, media/text tied at offset 16
+    (
+        1,
+        [
+            _span("text", "Привет мир строка", "", 0),
+            _span("text", "beta more words. Дата: 01.02.2023", "", 0),
+            _span("media", "", "img-1", 16),
+            _span("text", "gamma caption words here.", "", 16),
+        ],
+    ),
+    # media/text tied at offset 0 and at offset 8; the first text repeats
+    # doc 1's, so span dedup has a duplicate to drop
+    (
+        2,
+        [
+            _span("text", "beta more words. Дата: 01.02.2023", "", 0),
+            _span("media", "", "img-2", 0),
+            _span("text", "Телефон: +7 (905) 123-45-67 call now", "", 8),
+            _span("media", None, "img-3", 8),
+        ],
+    ),
+]
+
+
+def _tie_ops():
+    from ocr_spark.functions.fields import extract_fields_spans
+    from ocr_spark.operators import spans as S
+    from ocr_spark.operators.dedup import dedup_spans_corpus
+    from ocr_spark.operators.media import media_captions
+    from ocr_spark.operators.textstats import decontaminate_spans
+
+    def decontaminate(df):
+        evals = df.sparkSession.createDataFrame([("gamma caption words",)], "text string")
+        return decontaminate_spans(df, evals, n=2)
+
+    return {
+        "spans_to_markdown": S.spans_to_markdown,
+        "filter_spans_quality": S.filter_spans_quality,
+        "truncate_spans": lambda df: S.truncate_spans(df, max_tokens=12, media_tokens=2),
+        "span_kind_transitions": S.span_kind_transitions,
+        "span_language_runs": S.span_language_runs,
+        "coalesce_spans": S.coalesce_spans,
+        "coalesce_spans_big_path": lambda df: S.coalesce_spans(df, big_doc_spans=0),
+        "filter_interleaved_docs": S.filter_interleaved_docs,
+        "interleave_keep_expr": lambda df: df.select("doc_id", S.interleave_keep_expr().alias("k")),
+        "extract_fields_spans": extract_fields_spans,
+        "decontaminate_spans": decontaminate,
+        "dedup_spans_corpus": dedup_spans_corpus,
+        "media_captions": media_captions,
+    }
+
+
+@pytest.fixture(scope="module")
+def tied_frames(spark):
+    schema = "doc_id long, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    forward = spark.createDataFrame(_TIED_DOCS, schema)
+    reversed_ = spark.createDataFrame([(i, spans[::-1]) for i, spans in _TIED_DOCS], schema)
+    return forward, reversed_
+
+
+@pytest.mark.parametrize("op", sorted(_tie_ops()))
+def test_span_operators_ignore_input_order_on_tied_offsets(tied_frames, op):
+    """Spans that share an offset take the canonical (offset, kind, text,
+    media_ref) order in every operator, so reversing a document's span
+    array changes no output row."""
+    run = _tie_ops()[op]
+    forward, reversed_ = tied_frames
+
+    def rows(df):
+        return sorted((tuple(r) for r in run(df).collect()), key=repr)
+
+    got = rows(forward)
+    assert got, op
+    assert got == rows(reversed_), op
