@@ -1,8 +1,8 @@
 """Scalar text functions (SURVEY.md §2.3 T1–T5) as pure Column expressions.
 
 No Python in the hot path, and everything but the higher-order helpers
-:func:`let` (which :func:`line_language` uses), :func:`scan` and
-:func:`nearest` stays inside whole-stage codegen.
+:func:`let` (which :func:`line_language` uses), :func:`scan`,
+:func:`nearest` and :func:`runs` stays inside whole-stage codegen.
 Semantics follow the reference exactly (citations inline); the pure-Python
 twin lives in ``tests/reference_impl.py``.
 """
@@ -104,6 +104,35 @@ def nearest(xs: Column, zero: Column, pick) -> Column:
         scan(xs, zero, step).alias("p"),
         F.reverse(scan(F.reverse(xs), zero, step)).alias("n"),
     )
+
+
+def runs(xs: Column, same, emit) -> Column:
+    """``emit(run, j)`` for each maximal run of adjacent elements of ``xs``
+    (the ``j``-th, 0-based), where ``same(a, b)`` says that ``b`` continues
+    the run of its predecessor ``a`` (null counts as false).
+
+    ``xs`` and the run starts are each bound once with :func:`let`; a run
+    is the slice from its start to the next one, bound once for ``emit``.
+    The work is linear in ``xs``: no per-element copy of an accumulator
+    (unlike an ``aggregate`` that rewrites its tail) and no window."""
+
+    def over(a: Column) -> Column:
+        starts = F.filter(
+            F.transform(a, lambda _, i: i),
+            lambda i: (i == 0) | ~F.coalesce(same(F.get(a, i - 1), F.get(a, i)), F.lit(False)),
+        )
+        return let(
+            starts,
+            lambda st: F.transform(
+                st,
+                lambda p, j: let(
+                    F.slice(a, p + 1, F.coalesce(F.get(st, j + 1), F.size(a)) - p),
+                    lambda run: emit(run, j),
+                ),
+            ),
+        )
+
+    return let(xs, over)
 
 
 def split_words(col: Column) -> Column:

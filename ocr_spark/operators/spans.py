@@ -9,8 +9,8 @@ The span format, owned here (every other module calls the helpers below):
     in every operator and on every input order. The helpers:
     :func:`span_key` (a span as the struct whose natural order is the
     canonical one), :func:`span_order` (an array sorted by it),
-    :func:`span_window` and :func:`span_rank` (the same order over span
-    rows, and the dense 0-based re-rank), :func:`span_rows` (the one
+    :func:`span_rank` (the same order over span rows, as the dense
+    0-based re-rank), :func:`span_rows` (the one
     explode of a span array into span rows) and :func:`spans_or_empty`
     (null → empty array). Operators that emit assembled documents give
     ``array<struct<kind, text, media_ref, order>>``, order the 0-based
@@ -23,13 +23,22 @@ Stage 1 — tokenize/classify (NARROW, JVM expressions):
     span-level work on span-level rows, so a 10^6-span mega-document is
     balanced across tasks instead of being one giant array in one row.
 
-Stage 2 — span assembly (the one SHUFFLE, salted):
-    groupBy(doc_id, salt) where salt = floor(offset / SPAN_SALT_CHUNK)
-    pre-aggregates offset-contiguous chunks — a mega-document spreads over
-    many reducers (AQE cannot split a skewed aggregation, so we salt
-    explicitly, SURVEY.md §4). The cheap second groupBy(doc_id) merges the
-    few pre-sorted chunks per document: chunks are sorted by salt and
-    flattened — no re-sort of individual spans.
+Stage 2 — span assembly (one SHUFFLE, routed by document size):
+    :func:`classify_and_assemble` routes whole documents on their span
+    count before the explode. A document of up to BIG_DOC_SPANS spans
+    takes a single groupBy(doc_id) that sorts inside the aggregation. A
+    larger one takes the salted path: groupBy(doc_id, salt) where salt =
+    floor(offset / SPAN_SALT_CHUNK) pre-aggregates offset-contiguous
+    chunks, so a mega-document spreads over many reducers (AQE cannot
+    split a skewed aggregation, so we salt explicitly, SURVEY.md §4), and
+    a cheap second groupBy(doc_id) merges the few pre-sorted chunks per
+    document: chunks are sorted by salt and flattened, with no re-sort of
+    individual spans.
+
+Span operators (:func:`coalesce_spans`, :func:`span_language_runs`,
+:func:`filter_spans_quality`, ...) read one row per document and work
+inside its span array, whatever the document's size; only
+:func:`span_kind_transitions` aggregates across documents.
 
 Boilerplate classifier (main-content extraction, Boilerpipe-style
 NumWords/LinkDensity rules — Kohlschütter et al., WSDM 2010 — made
@@ -45,11 +54,11 @@ deterministic):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_spark import config
-from ocr_spark.functions.text import let, nearest, py_strip
+from ocr_spark.functions.text import let, line_language, nearest, py_strip, runs
 
 _LINK_RE = r"<a[^>]*>.*?</a>"
 
@@ -76,15 +85,10 @@ def span_order(spans: Column) -> Column:
     return F.sort_array(F.transform(spans, lambda s: span_key(s)))
 
 
-def span_window() -> WindowSpec:
-    """The span rows of one document (``doc_id``) in canonical order."""
-    return Window.partitionBy("doc_id").orderBy(*SPAN_ORDER)
-
-
 def span_rank() -> Column:
-    """A span row's dense 0-based position in its document, in canonical
-    order (a BIGINT ``ord``)."""
-    return (F.row_number().over(span_window()) - 1).cast("long")
+    """A span row's dense 0-based position in its document (``doc_id``),
+    in canonical order (a BIGINT ``ord``)."""
+    return (F.row_number().over(Window.partitionBy("doc_id").orderBy(*SPAN_ORDER)) - 1).cast("long")
 
 
 def span_rows(docs: DataFrame, id_col: str = "doc_id", spans_col: str = "spans") -> DataFrame:
@@ -288,40 +292,38 @@ def span_language_runs(
     interleave languages mid-stream. Media spans are transparent: they
     neither carry a language nor break a run.
 
-    Plan: explode → per-span language (pure expressions) → gaps-and-
-    islands with two per-document windows (lag-change flag, running sum) —
-    window keys are doc-level, so skew follows document size, which the
-    corpus's mega-doc handling already bounds upstream.
+    Plan: one narrow expression per row — the non-media spans in canonical
+    order, each tagged with its language once, cut into runs by
+    :func:`~ocr_spark.functions.text.runs` — then one explode. No window,
+    no aggregation, no shuffle; a mega-document costs its own array length.
+    Each input row is one document: two rows that share a ``doc_id`` (or
+    whose ``doc_id`` is null) give their runs per row, not merged.
 
     Returns (doc_id, run_id, lang, n_spans, first_offset, last_offset,
     text = space-joined run text)."""
-    from ocr_spark.functions.text import line_language
+    tagged = F.transform(
+        span_order(F.filter(F.col(spans_col), lambda s: s["kind"] != "media")),
+        lambda s: F.struct(
+            s["offset"].alias("offset"),
+            s["text"].alias("text"),
+            line_language(s["text"]).alias("lang"),
+        ),
+    )
 
-    txt = span_rows(docs, id_col, spans_col).filter(F.col("kind") != "media").withColumn(
-        "lang", line_language(F.col("text"))
-    )
-    w = span_window()
-    flagged = txt.withColumn(
-        "chg",
-        F.when(
-            F.lag("lang").over(w).isNull() | (F.lag("lang").over(w) != F.col("lang")),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    ).withColumn(
-        "run_id",
-        F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("long"),
-    )
-    return flagged.groupBy("doc_id", "run_id").agg(
-        # every span in a run shares lang by construction; min() is the
-        # deterministic pick (first() is order-dependent after a shuffle)
-        F.min("lang").alias("lang"),
-        F.count(F.lit(1)).cast("long").alias("n_spans"),
-        F.min("offset").cast("long").alias("first_offset"),
-        F.max("offset").cast("long").alias("last_offset"),
-        F.concat_ws(
-            " ",
-            F.transform(F.sort_array(F.collect_list(span_key())), lambda s: s["text"]),
-        ).alias("text"),
+    def segment(run: Column, j: Column) -> Column:
+        offsets = F.transform(run, lambda s: s["offset"])
+        return F.struct(
+            (j + 1).cast("long").alias("run_id"),
+            run[0]["lang"].alias("lang"),
+            F.size(run).cast("long").alias("n_spans"),
+            F.array_min(offsets).cast("long").alias("first_offset"),
+            F.array_max(offsets).cast("long").alias("last_offset"),
+            F.concat_ws(" ", F.transform(run, lambda s: s["text"])).alias("text"),
+        )
+
+    segments = runs(tagged, lambda a, b: a["lang"] == b["lang"], segment)
+    return docs.select(F.col(id_col).alias("doc_id"), F.explode(segments).alias("r")).select(
+        "doc_id", "r.*"
     )
 
 
@@ -448,138 +450,46 @@ def coalesce_spans(
     id_col: str = "doc_id",
     spans_col: str = "spans",
     joiner: str = "\n",
-    big_doc_spans: int | None = config.BIG_DOC_SPANS,
 ) -> DataFrame:
     """Span-sequence normalization for the interleaved shape: drop
     whitespace-only text spans, merge runs of ADJACENT text spans into one
-    span (texts joined by ``joiner``, media_ref of the first), keep media
-    spans as-is, reindex order 0..n-1 — the canonicalization pass between
-    an extractor (whose DOM walk emits fragmented text nodes) and
+    span (texts joined by ``joiner``, media_ref of the first), keep every
+    other span as-is, reindex order 0..n-1 — the canonicalization pass
+    between an extractor (whose DOM walk emits fragmented text nodes) and
     everything downstream that assumes one span per content block
     (packing, dedup, markdown render).
 
     Input:  (id_col, spans array<struct<kind,text,media_ref,offset>>)
     Output: (id_col, spans array<struct<kind,text,media_ref,order>>)
 
-    Spans merge in canonical order.
+    Spans merge in canonical order; duplicate (offset, kind, text,
+    media_ref) tuples merge like any other adjacent text spans.
 
-    Plan: hybrid on ``size(spans)``, routed NARROWLY (the array length is
-    already in the row — no count pre-pass, unlike assemble_spans):
-
-    - normal docs: one expression chain per row — array_sort → filter →
-      linear fold (F.aggregate) that either appends a span or replaces the
-      accumulator's tail with the concatenated text span. ZERO shuffle;
-      the fold's slice+concat tail-rewrite is O(runs·spans) element copies
-      per doc, fine below the routing threshold.
-    - mega-docs (> ``big_doc_spans`` spans): the quadratic fold and the
-      one-giant-array row are exactly what to avoid, so they explode to
-      span rows, window over (doc_id | order by the canonical key) marks
-      text-run starts (lag(kind)), a running sum assigns run ids, one
-      groupBy(doc_id, run) merges each run, and the existing
-      single-phase assembly rebuilds the array. The per-doc window puts a
-      mega-doc on one task for the flag pass — linear work, the same
-      bound as its final array materialization.
-
-    Both paths produce identical sequences (pytest crosses them on the
-    same input). Duplicate (offset, kind, text, media_ref) tuples are
-    merged in canonical order on both paths."""
-    spans = spans_or_empty(F.col(spans_col))
-    n_spans = F.size(spans)
-
-    # --- small path: pure expressions, no shuffle --------------------------
-    kept_arr = F.filter(
-        span_order(spans),
+    Plan: one narrow expression per row, whatever the document's size —
+    canonical sort → blank filter → :func:`~ocr_spark.functions.text.runs`
+    (a run continues while it and its predecessor are both ``text``) → one
+    merged span per run. Linear in the spans; no explode, no window, no
+    shuffle. Each input row is one document: two rows that share a
+    ``doc_id`` (or whose ``doc_id`` is null) give one output row each, not
+    one merged row."""
+    kept = F.filter(
+        span_order(spans_or_empty(F.col(spans_col))),
         lambda s: (s["kind"] == "media") | (py_strip(s["text"]) != ""),
     )
-    merged_arr = F.aggregate(
-        kept_arr,
-        F.array().cast("array<struct<kind:string,text:string,media_ref:string>>"),
-        lambda acc, s: F.when(
-            (s["kind"] == "text")
-            & (F.size(acc) > 0)
-            & (F.element_at(acc, -1)["kind"] == "text"),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(
-                    F.struct(
-                        F.lit("text").alias("kind"),
-                        F.concat(
-                            F.element_at(acc, -1)["text"], F.lit(joiner), s["text"]
-                        ).alias("text"),
-                        F.element_at(acc, -1)["media_ref"].alias("media_ref"),
-                    )
-                ),
-            ),
-        ).otherwise(
-            F.concat(
-                acc,
-                F.array(
-                    F.struct(
-                        s["kind"].alias("kind"),
-                        s["text"].alias("text"),
-                        s["media_ref"].alias("media_ref"),
-                    )
-                ),
-            )
-        ),
-    )
-    out_spans = _numbered(merged_arr)
 
-    if big_doc_spans is None:
-        return docs.select(F.col(id_col).alias("doc_id"), out_spans.alias("spans"))
-
-    small = docs.filter(n_spans <= big_doc_spans).select(
-        F.col(id_col).alias("doc_id"), out_spans.alias("spans")
-    )
-
-    # --- big path: explode + window + run merge -----------------------------
-    big_docs = docs.filter(n_spans > big_doc_spans).select(
-        F.col(id_col).alias("doc_id")
-    )
-    ex = span_rows(docs.filter(n_spans > big_doc_spans), id_col, spans_col).filter(
-        (F.col("kind") == "media") | (py_strip(F.col("text")) != "")
-    )
-    w = span_window()
-    runs = (
-        ex.withColumn(
-            "__st",
+    def merged(run: Column, _j: Column) -> Column:
+        head = run[0]
+        return F.struct(
+            head["kind"].alias("kind"),
             F.when(
-                (F.col("kind") == "media")
-                | F.lag("kind").over(w).isNull()
-                | (F.lag("kind").over(w) == "media"),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
+                head["kind"] == "text",
+                F.array_join(F.transform(run, lambda s: s["text"]), joiner),
+            ).otherwise(head["text"]).alias("text"),
+            head["media_ref"].alias("media_ref"),
         )
-        .withColumn(
-            "__run",
-            F.sum("__st").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-    )
-    grouped = (
-        runs.groupBy("doc_id", "__run")
-        .agg(
-            F.min("kind").alias("kind"),
-            F.sort_array(F.collect_list(span_key())).alias("__parts"),
-        )
-        .select(
-            "doc_id",
-            "kind",
-            F.array_join(
-                F.transform(F.col("__parts"), lambda p: p["text"]), joiner
-            ).alias("text"),
-            F.col("__parts")[0]["media_ref"].alias("media_ref"),
-            F.col("__parts")[0]["offset"].alias("offset"),
-        )
-    )
-    # a mega-doc whose spans ALL drop still owes an empty-sequence row
-    # (the small path emits one; explode would silently lose the doc)
-    big = big_docs.join(_assemble_single_phase(grouped), "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("spans"), F.array().cast(_OUT_SPAN_TYPE)).alias("spans"),
-    )
-    return small.unionByName(big)
+
+    text_runs = runs(kept, lambda a, b: (a["kind"] == "text") & (b["kind"] == "text"), merged)
+    return docs.select(F.col(id_col).alias("doc_id"), _numbered(text_runs).alias("spans"))
 
 
 def truncate_spans(

@@ -107,14 +107,8 @@ def process_pdfs(text_pages: DataFrame, visual_pages: DataFrame | None = None) -
     )
 
 
-def extract_documents(
-    docs: DataFrame,
-    drop_boilerplate: bool = True,
-    salt_chunk: int = config.SPAN_SALT_CHUNK,
-) -> DataFrame:
-    assembled = S.classify_and_assemble(
-        docs, drop_boilerplate=drop_boilerplate, salt_chunk=salt_chunk
-    )
+def extract_documents(docs: DataFrame, drop_boilerplate: bool = True) -> DataFrame:
+    assembled = S.classify_and_assemble(docs, drop_boilerplate=drop_boilerplate)
 
     text_spans = F.filter(F.col("spans"), lambda s: s["kind"] == "text")
     extracted_text = F.array_join(F.transform(text_spans, lambda s: s["text"]), "\n")

@@ -5428,21 +5428,21 @@ cw AS (
 ck AS (SELECT * FROM cw WHERE kind = 'media' OR {_strip('text')} != ''),
 cf AS (
   SELECT doc_id, kind, text, media_ref, "offset",
-         CASE WHEN kind = 'media' OR lag(kind) OVER w IS NULL
-                   OR lag(kind) OVER w = 'media'
+         row_number() OVER w AS pos,
+         CASE WHEN kind IS DISTINCT FROM 'text'
+                   OR lag(kind) OVER w IS DISTINCT FROM 'text'
               THEN 1 ELSE 0 END AS st
   FROM ck WINDOW w AS (PARTITION BY doc_id ORDER BY "offset", kind, text, media_ref)
 ),
 cr AS (
-  SELECT *, sum(st) OVER (PARTITION BY doc_id
-                          ORDER BY "offset", kind, text, media_ref) AS run_id
+  SELECT *, sum(st) OVER (PARTITION BY doc_id ORDER BY pos) AS run_id
   FROM cf
 ),
 cg AS (
-  SELECT doc_id, run_id, min(kind) AS kind,
-         string_agg(text, chr(10) ORDER BY "offset", text, media_ref) AS text,
-         min(media_ref) AS media_ref,
-         min("offset") AS o
+  SELECT doc_id, run_id, arg_min_null(kind, pos) AS kind,
+         string_agg(text, chr(10) ORDER BY pos) AS text,
+         arg_min_null(media_ref, pos) AS media_ref,
+         min(pos) AS o
   FROM cr GROUP BY doc_id, run_id
 )
 SELECT doc_id, kind, text, media_ref,

@@ -411,10 +411,10 @@ def _minipdf_pages(data: bytes) -> list[str]:
     return pages
 
 
-def _minipdf_info(data: bytes) -> dict[str, str | None]:
-    pdf = _MiniPdf(data)
+def _minipdf_info(pdf: _MiniPdf) -> dict[str, str | None]:
+    """The trailer /Info fields of a parsed PDF (absent → None)."""
     out: dict[str, str | None] = {}
-    im = _re.search(rb"/Info\s+(\d+)\s+\d+\s+R", data)
+    im = _re.search(rb"/Info\s+(\d+)\s+\d+\s+R", pdf.data)
     info_obj = pdf.objs.get(int(im.group(1)), (b"", None))[0] if im else b""
     for key in ("Title", "Author", "Subject", "Creator", "Producer"):
         m = _re.search(
@@ -488,13 +488,15 @@ def extract_metadata(docs: DataFrame, id_col: str = "doc_id", content_col: str =
                         info = {c: getattr(meta, c, None) for c in cols}
                         n_pages = len(reader.pages)
                     else:
-                        info = _minipdf_info(bytes(content))
-                        n_pages = len(_minipdf_pages(bytes(content)))
+                        parsed = _MiniPdf(bytes(content))
+                        info = _minipdf_info(parsed)
+                        # the page count needs the page tree only, not the
+                        # content streams: a corrupt page still counts
+                        n_pages = len(parsed.page_ids())
                 except NotImplementedError:
                     # unsupported structure compression: metadata unreadable
                     # → emit the row with pages=0 / null fields (reference
-                    # degrades to empty metadata, pdf_processor.py:222-257);
-                    # corrupt page streams are absorbed in _minipdf_pages
+                    # degrades to empty metadata, pdf_processor.py:222-257)
                     info, n_pages = {}, 0
                 except Exception:
                     continue

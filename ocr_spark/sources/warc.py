@@ -498,8 +498,9 @@ def warc_span_corpus(
     emitting the canonical span sequence via
     ``boilerplate.html_to_spans`` (content text spans + kept ``<img>``
     media spans, in document order) instead of flattened text — so a
-    crawled WARC drop flows straight into ``assemble_spans`` /
-    ``extract_documents`` and every span_corpus operator unchanged."""
+    crawled WARC drop flows straight into ``spans.classify_and_assemble``
+    / ``pipeline.extract_documents`` and every span_corpus operator
+    unchanged."""
     from ocr_spark.operators.boilerplate import html_to_spans
 
     return html_to_spans(_html_pages(parsed, respect_noindex))

@@ -172,7 +172,7 @@ def test_minipdf_reads_flate_compressed_streams():
         z = synth_pdf_bytes(doc_id, n, compress=True)
         assert z != raw and b"/FlateDecode" in z
         assert pdf._minipdf_pages(z) == pdf._minipdf_pages(raw)
-        assert pdf._minipdf_info(z) == pdf._minipdf_info(raw)
+        assert pdf._minipdf_info(pdf._MiniPdf(z)) == pdf._minipdf_info(pdf._MiniPdf(raw))
 
 
 def test_pdf_fixture_roundtrip(spark):
@@ -185,7 +185,7 @@ def test_pdf_fixture_roundtrip(spark):
         "Page 2 of doc 7",
         "Page 3 of doc 7",
     ]
-    info = pdf._minipdf_info(data)
+    info = pdf._minipdf_info(pdf._MiniPdf(data))
     assert info["title"] == "Doc 7" and info["author"] == PF.PDF_AUTHOR
     # the sniffer accepts it by magic bytes alone (no .pdf extension)
     df = spark.createDataFrame([("blob", bytearray(data))], "path string, content binary")
@@ -510,7 +510,7 @@ def test_minipdf_writer_styles_identical_text():
             for compress in (False, True):
                 data = synth_pdf_bytes(doc_id, n, compress=compress, style=style)
                 pages = pdf._minipdf_pages(data)
-                info = pdf._minipdf_info(data)
+                info = pdf._minipdf_info(pdf._MiniPdf(data))
                 if base_pages is None:
                     base_pages, base_info = pages, info
                 assert pages == base_pages, (style, compress)

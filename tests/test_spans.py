@@ -1,6 +1,6 @@
 """Span-sequence equality (the BASELINE.json correctness gate):
 (kind, text, media_ref, order) per document must be byte-equal to the
-pure-Python golden, including mega-documents crossing salt chunks."""
+pure-Python golden, including mega-documents, on both assembly routes."""
 
 from __future__ import annotations
 
@@ -14,7 +14,8 @@ from tests import reference_impl as ref
 
 @pytest.fixture(scope="module")
 def docs():
-    # 120 docs, 2 mega-docs (5k spans) so assembly crosses many salt chunks
+    # 120 docs, 2 mega-docs (5k spans); test_salted_route_matches_golden
+    # sends the mega-docs through the salted path across many salt chunks
     return corpus.generate_docs(120, seed=7, mega_docs=2, mega_spans=5000)
 
 
@@ -28,8 +29,7 @@ def spark_result(spark, docs, tmp_path_factory):
         pa.Table.from_pylist(docs, schema=corpus.SCHEMA), path + "/part-0.parquet"
     )
     df = spark.read.parquet(path)
-    # tiny salt chunk so even normal docs span multiple chunks
-    out = extract_documents(df, salt_chunk=64)
+    out = extract_documents(df)
     return {r["doc_id"]: r for r in out.collect()}
 
 
@@ -418,13 +418,53 @@ def test_coalesce_spans_matches_golden(spark):
         assert got[doc_id] == py_coalesce(spans), doc_id
 
 
-def test_coalesce_spans_big_path_equals_small_path(spark):
+def test_coalesce_spans_mega_doc_keeps_non_text_kinds(spark):
+    """A document above BIG_DOC_SPANS spans coalesces like any other: only
+    adjacent ``text`` spans merge, so a ``title`` between two text spans
+    stays its own span."""
+    from ocr_spark import config
     from ocr_spark.operators.spans import coalesce_spans
 
-    df = _coalesce_df(spark)
-    small = _rows(coalesce_spans(df))  # all docs under threshold
-    big = _rows(coalesce_spans(df, big_doc_spans=0))  # force windowed path
-    assert small == big
+    pattern = [("text", "a"), ("title", "T"), ("text", "b"), ("text", " "), ("media", "")]
+    spans = []
+    for i in range(config.BIG_DOC_SPANS + 1):
+        kind, text = pattern[i % len(pattern)]
+        spans.append(_span(kind, text, f"r{i}" if kind == "media" else "", 16 * i))
+    df = spark.createDataFrame(
+        [(1, spans)],
+        "doc_id long, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    got = _rows(coalesce_spans(df))[1]
+    assert got[:4] == [
+        ("text", "a", "", 0), ("title", "T", "", 1), ("text", "b", "", 2), ("media", "", "r4", 3),
+    ]
+    assert got == py_coalesce(spans)
+
+
+def test_span_runs_read_one_row_per_document(spark):
+    """Two rows that share a doc_id are two documents to the run
+    operators: each row gives its own runs, none merge across rows."""
+    from ocr_spark.operators.spans import coalesce_spans, span_language_runs
+
+    df = spark.createDataFrame(
+        [
+            (7, [_span("text", "hello english", "", 0), _span("text", "more english", "", 16)]),
+            (7, [_span("text", "привет мир", "", 0), _span("text", "ещё строка", "", 16)]),
+        ],
+        "doc_id long, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    langs = sorted(tuple(r) for r in span_language_runs(df).collect())
+    assert langs == [
+        (7, 1, "en", 2, 0, 16, "hello english more english"),
+        (7, 1, "ru", 2, 0, 16, "привет мир ещё строка"),
+    ]
+    merged = sorted(
+        [(s["kind"], s["text"], s["order"]) for s in r.spans] for r in coalesce_spans(df).collect()
+    )
+    assert merged == [
+        [("text", "hello english\nmore english", 0)],
+        [("text", "привет мир\nещё строка", 0)],
+    ]
 
 
 def test_coalesce_spans_custom_joiner(spark):
@@ -706,7 +746,6 @@ def _tie_ops():
         "span_kind_transitions": S.span_kind_transitions,
         "span_language_runs": S.span_language_runs,
         "coalesce_spans": S.coalesce_spans,
-        "coalesce_spans_big_path": lambda df: S.coalesce_spans(df, big_doc_spans=0),
         "filter_interleaved_docs": S.filter_interleaved_docs,
         "interleave_keep_expr": lambda df: df.select("doc_id", S.interleave_keep_expr().alias("k")),
         "extract_fields_spans": extract_fields_spans,
