@@ -8,9 +8,28 @@ interpreted (`CodegenFallback`) with no common-subexpression elimination,
 so every value read twice is bound once with `text.let`: each pattern
 runs at most once per text, a fallback pattern only when the earlier ones
 miss, and each normalizer reads its input once.
+
+The built-in patterns run behind two gates that skip only work that
+cannot match, so the result is the same with or without them:
+
+- a field whose every pattern needs a literal character
+  (``_REQUIRED_CHAR``: ``@`` for ``email``) runs its patterns only when
+  ``instr(text, char) > 0``; `@` folds to no other character, so a text
+  without it matches neither pattern;
+- a pattern that starts with a label alternation, ``(?:имя|name|…)``,
+  starts with a lookahead over the labels' first letters,
+  ``(?=[иnф])`` (:func:`_label_gate`). Under `(?iU)` Java folds case the
+  same way for a class member and for a literal's letter (``K`` U+212A
+  and ``ſ`` U+017F included), so the lookahead admits exactly the
+  positions where a label can begin, and every other position fails on
+  one class test instead of one test per label.
+
+A caller's ``patterns`` overlay runs exactly as given, with no gate.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -32,15 +51,27 @@ def available_fields(patterns: dict[str, list[str]] | None = None) -> list[str]:
     return sorted(merged)
 
 
-def _patterns_for(field: str, patterns: dict[str, list[str]] | None) -> list[str]:
-    """add_custom_field_pattern analog (data_extractor.py:376-389), Spark
-    style: instead of mutating a registry at runtime, callers pass a
-    pattern OVERLAY that extends/overrides the config table per plan —
-    the dict folds into generated regexp_extract columns at plan build,
-    so executors see only literal patterns (nothing to synchronize)."""
-    if patterns and field in patterns:
-        return patterns[field]
-    return config.FIELD_PATTERNS[field]
+# The gates are built here, not written into config.FIELD_PATTERNS: the
+# reference twin (Python re) and the DuckDB oracles (RE2, no lookaround)
+# read that table as it is.
+# a character every built-in pattern of the field matches literally
+_REQUIRED_CHAR = {"email": "@"}
+# a leading non-capturing group of plain alternatives (no groups, no classes)
+_LABEL = r"(?:[^()\[\]\\|]|\\.)+"
+_LABELS = re.compile(rf"\(\?:({_LABEL}(?:\|{_LABEL})*)\)(?![?*{{])")
+
+
+def _label_gate(pattern: str) -> str:
+    """``pattern`` behind a lookahead over the first letters of its leading
+    label alternation: ``(?:имя|name|фио|ф\\.и\\.о\\.?)…`` →
+    ``(?=[иnф])(?:имя|…)…``. A pattern that does not start with such a
+    group, not optional itself, whose labels each begin with a letter that
+    is not optional either, comes back unchanged."""
+    m = _LABELS.match(pattern)
+    labels = re.findall(_LABEL, m.group(1)) if m else []
+    if not labels or not all(lb[0].isalpha() and lb[1:2] not in ("?", "*", "{") for lb in labels):
+        return pattern
+    return "(?=[" + "".join(dict.fromkeys(lb[0] for lb in labels)) + "])" + pattern
 
 
 def _extract_raw(text: Column, field: str, patterns: dict[str, list[str]] | None = None) -> Column:
@@ -49,7 +80,14 @@ def _extract_raw(text: Column, field: str, patterns: dict[str, list[str]] | None
     Python: `re.findall(p, text, I|M)[0].strip()`, skipping patterns whose
     first match strips to ''. regexp_extract returns '' on no match → null.
     Each stripped match is bound once and the next pattern runs only in
-    the `otherwise` branch of the one before.
+    the `otherwise` branch of the one before. A built-in field's patterns
+    run behind the gates of the module docstring.
+
+    ``patterns`` is the add_custom_field_pattern analog
+    (data_extractor.py:376-389), Spark style: instead of mutating a
+    registry at runtime, callers pass an OVERLAY that extends/overrides the
+    config table per plan; it folds into literal regexp_extract columns at
+    plan build and runs as given, with no gate.
     """
 
     def first(pats: list[str]) -> Column:
@@ -58,7 +96,11 @@ def _extract_raw(text: Column, field: str, patterns: dict[str, list[str]] | None
         m = py_strip(F.regexp_extract(text, _java_ci(pats[0]), 1))
         return let(m, lambda m: F.when(m != "", m).otherwise(first(pats[1:])))
 
-    return first(_patterns_for(field, patterns))
+    if patterns and field in patterns:
+        return first(patterns[field])
+    raw = first([_label_gate(p) for p in config.FIELD_PATTERNS[field]])
+    need = _REQUIRED_CHAR.get(field)
+    return F.when(F.instr(text, need) > 0, raw) if need else raw
 
 
 def normalize_phone(v: Column) -> Column:

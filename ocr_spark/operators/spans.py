@@ -50,6 +50,14 @@ deterministic):
         cookie/privacy/menu prefixes), or
       - it has fewer than BOILERPLATE_MIN_WORDS words AND contains a link.
     media spans are never boilerplate (they are content by definition).
+
+    Evaluation order: ``marker | (ld > 0 & (ld > MAX | words < MIN))``.
+    This is the rule above exactly: ``ld > MAX`` implies ``ld > 0``
+    (MAX >= 0), and the link density, the marker and the word count are
+    never null (a null text reads as ""), so no three-valued case differs.
+    The conjunction stops at ``ld > 0``, so the word count
+    (:func:`word_count`) runs only for spans that contain a link — about
+    one span in nine on the benchmark corpus.
 """
 
 from __future__ import annotations
@@ -127,19 +135,27 @@ def link_density(text: Column) -> Column:
 
 
 def word_count(text: Column) -> Column:
+    """Words of the text, ``len(re.split(r"\\s+", s))`` of the stripped
+    text ``s`` (0 when it is empty), counted as its whitespace runs + 1.
+
+    :func:`py_strip` removes exactly the 25 code points that Java's
+    ``(?U)\\s`` matches, so a stripped text neither starts nor ends with
+    a run and n runs separate n + 1 words. ``regexp_count`` compiles its
+    pattern once per task; ``size(split(...))`` gave the same count but
+    compiled the pattern again on every row (``String.split``)."""
     s = py_strip(text)
-    return F.when(s == "", F.lit(0)).otherwise(F.size(F.split(s, r"(?U)\s+")))
+    return F.when(s == "", F.lit(0)).otherwise(F.regexp_count(s, F.lit(r"(?U)\s+")) + 1)
 
 
 def is_boilerplate(text: Column) -> Column:
-    """Deterministic Boilerpipe-style rule set (module docstring)."""
+    """Deterministic Boilerpipe-style rule set (module docstring), in the
+    evaluation order given there: the word count runs only for a span
+    that holds a link."""
     ld = link_density(text)
-    wc = word_count(text)
     marker = py_strip(text).rlike(config.BOILERPLATE_MARKER_PATTERN)
-    return (
-        (ld > config.BOILERPLATE_MAX_LINK_DENSITY)
-        | marker
-        | ((wc < config.BOILERPLATE_MIN_WORDS) & (ld > 0.0))
+    return marker | (
+        (ld > 0.0)
+        & ((ld > config.BOILERPLATE_MAX_LINK_DENSITY) | (word_count(text) < config.BOILERPLATE_MIN_WORDS))
     )
 
 

@@ -52,6 +52,11 @@ _WS = (
 )
 
 
+# The canonical span order (operators/spans.SPAN_ORDER) as a DuckDB sort
+# key: Spark's ascending order puts nulls first, DuckDB's default last.
+_SPAN_ORDER_SQL = ", ".join(f'"{c}" NULLS FIRST' for c in SP.SPAN_ORDER)
+
+
 def _strip(e: str) -> str:
     """py_strip twin: strip all leading/trailing whitespace (Unicode)."""
     return f"regexp_replace({e}, '^{_WS}+|{_WS}+$', '', 'g')"
@@ -1535,7 +1540,7 @@ dsk AS (
   WHERE dsb.doc_id IS NULL
 )
 SELECT doc_id, kind, text, media_ref,
-       (row_number() OVER (PARTITION BY doc_id ORDER BY "offset") - 1)::BIGINT AS ord
+       (row_number() OVER (PARTITION BY doc_id ORDER BY {_SPAN_ORDER_SQL}) - 1)::BIGINT AS ord
 FROM dsk""",
 )
 def q_decontaminate_spans(spark: SparkSession, sf: str) -> DataFrame:
@@ -4948,7 +4953,7 @@ sdflag AS (
   FROM sdn
 )
 SELECT doc_id, kind, text, media_ref,
-       (row_number() OVER (PARTITION BY doc_id ORDER BY "offset") - 1)::BIGINT AS ord
+       (row_number() OVER (PARTITION BY doc_id ORDER BY {_SPAN_ORDER_SQL}) - 1)::BIGINT AS ord
 FROM (SELECT * FROM sdflag WHERE keep)""",
 )
 def q_dedup_spans(spark: SparkSession, sf: str) -> DataFrame:
@@ -5400,7 +5405,7 @@ skept AS (SELECT * FROM sbp WHERE NOT is_bp)"""
     f"""
 WITH {_SQL_KEPT_SPANS}
 SELECT doc_id, kind, text, media_ref,
-       (row_number() OVER (PARTITION BY doc_id ORDER BY "offset") - 1)::BIGINT AS ord
+       (row_number() OVER (PARTITION BY doc_id ORDER BY {_SPAN_ORDER_SQL}) - 1)::BIGINT AS ord
 FROM skept""",
 )
 def q_spans_assemble(spark: SparkSession, sf: str) -> DataFrame:
@@ -5432,7 +5437,7 @@ cf AS (
          CASE WHEN kind IS DISTINCT FROM 'text'
                    OR lag(kind) OVER w IS DISTINCT FROM 'text'
               THEN 1 ELSE 0 END AS st
-  FROM ck WINDOW w AS (PARTITION BY doc_id ORDER BY "offset", kind, text, media_ref)
+  FROM ck WINDOW w AS (PARTITION BY doc_id ORDER BY {_SPAN_ORDER_SQL})
 ),
 cr AS (
   SELECT *, sum(st) OVER (PARTITION BY doc_id ORDER BY pos) AS run_id
@@ -5498,13 +5503,13 @@ ttc AS (
 ),
 ttr AS (
   SELECT *, sum(cost) OVER (PARTITION BY doc_id
-             ORDER BY "offset", kind, text, media_ref
+             ORDER BY {_SPAN_ORDER_SQL}
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
   FROM ttc
 )
 SELECT doc_id, kind, text, media_ref,
        (row_number() OVER (PARTITION BY doc_id
-          ORDER BY "offset", kind, text, media_ref) - 1)::BIGINT AS ord,
+          ORDER BY {_SPAN_ORDER_SQL}) - 1)::BIGINT AS ord,
        cost::BIGINT AS span_tokens
 FROM ttr WHERE cum <= 512""",
 )
@@ -5523,7 +5528,7 @@ def q_spans_truncate(spark: SparkSession, sf: str) -> DataFrame:
     f"""
 WITH {_SQL_KEPT_SPANS}
 SELECT doc_id, kind, text, media_ref,
-       (row_number() OVER (PARTITION BY doc_id ORDER BY "offset") - 1)::BIGINT AS ord
+       (row_number() OVER (PARTITION BY doc_id ORDER BY {_SPAN_ORDER_SQL}) - 1)::BIGINT AS ord
 FROM skept""",
 )
 def q_spans_assemble_stream(spark: SparkSession, sf: str) -> DataFrame:
@@ -5551,26 +5556,30 @@ def q_spans_assemble_stream(spark: SparkSession, sf: str) -> DataFrame:
     f"""
 WITH {D.SQL_SPAN_CORPUS},
 slr AS (
-  SELECT doc_id, "offset",
+  SELECT doc_id, "offset", kind, media_ref,
          CASE WHEN (doc_id + i) % 3 = 1 THEN 'русский текст номер ' || i::VARCHAR
               ELSE text END AS text
   FROM span_rows WHERE kind != 'media'
 ),
-sll AS (SELECT doc_id, "offset", text, {_sql_line_lang('text')} AS lang FROM slr),
+sll AS (
+  SELECT doc_id, "offset", text, {_sql_line_lang('text')} AS lang,
+         row_number() OVER (PARTITION BY doc_id ORDER BY {_SPAN_ORDER_SQL}) AS pos
+  FROM slr
+),
 slf AS (
-  SELECT doc_id, "offset", text, lang,
+  SELECT doc_id, "offset", text, lang, pos,
          CASE WHEN lag(lang) OVER w IS NULL OR lag(lang) OVER w != lang
               THEN 1 ELSE 0 END AS chg
-  FROM sll WINDOW w AS (PARTITION BY doc_id ORDER BY "offset")
+  FROM sll WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
 ),
 slrun AS (
-  SELECT doc_id, "offset", text, lang,
-         (sum(chg) OVER (PARTITION BY doc_id ORDER BY "offset"))::BIGINT AS run_id
+  SELECT doc_id, "offset", text, lang, pos,
+         (sum(chg) OVER (PARTITION BY doc_id ORDER BY pos))::BIGINT AS run_id
   FROM slf
 )
 SELECT doc_id, run_id, min(lang) AS lang, count(*)::BIGINT AS n_spans,
        min("offset")::BIGINT AS first_offset, max("offset")::BIGINT AS last_offset,
-       string_agg(text, ' ' ORDER BY "offset") AS text
+       string_agg(text, ' ' ORDER BY pos) AS text
 FROM slrun GROUP BY doc_id, run_id""",
 )
 def q_span_lang_runs(spark: SparkSession, sf: str) -> DataFrame:

@@ -24,7 +24,16 @@ _WORD_POOL = [
     "a", "я", "e-mail", "x@y.zz", "+7(999)123-45-67", "©", "copyright", "…",
     "<a href=x>link</a>", "tab\tsep", "№5", "ООО", "OOO", "Тест", "(скобки)",
     "99,5", "руб.", "стр.", "Page", "of", "1.", "2.", "ДОГОВОР", "AGREEMENT",
+    # field labels in mixed case: the label lookaheads of fields._label_gate
+    "Name:", "ДАТА", "тел.", "ИНН", "Паспорт", "Сумма", "адрес:", "Ф.И.О.",
+    "PHONE", "Date:", "e-MAIL:", "ПОЧТА",
+    # texts with an '@' take the email patterns, texts without skip them
+    "ivan.petrov@mail.ru", "@", "user@host", "A.B@X.ORG",
 ]
+# letters Java and Python both fold to a label's letter: K (U+212A) to k,
+# ſ (U+017F) to s. Only the field test draws them: text_quality_score
+# counts ru/en letters only, and both are letters to Python.
+_FOLD_WORDS = ["\u212a", "ſ", "paſſport:", "addreſs", "PAſſPORT", "\u212a\u212a"]
 _SPACERS = [" ", "  ", "\t", "\n", "\r\n", "   ", "   \n\t "]
 
 
@@ -91,16 +100,35 @@ def test_fuzz_text_parity(fuzz_pairs):
         assert out[i]["corr"] == R.correct_ocr_errors(x), (i, repr(x))
 
 
-def test_fuzz_field_extraction_parity(fuzz_pairs):
-    rows, df = fuzz_pairs
-    cols = [FX.extract_field(F.col("a"), f).alias(f) for f in config.DEFAULT_FIELDS]
+def _assert_field_parity(df, col: str, texts: dict) -> None:
+    """Every default field of ``df[col]`` equals the reference's on
+    ``texts`` (id → text; a null text extracts nothing)."""
+    cols = [FX.extract_field(F.col(col), f).alias(f) for f in config.DEFAULT_FIELDS]
     out = {r["id"]: r for r in df.select("id", *cols).collect()}
-    for i, x, _ in rows:
-        want = R.extract_fields(x)
+    for i, x in texts.items():
+        want = R.extract_fields(x) if x is not None else {}
         got = {f: out[i][f] for f in config.DEFAULT_FIELDS if out[i][f] is not None}
         # reference drops blank values (F4); mirror that for the comparison
         got = {k: v for k, v in got.items() if v.strip()}
         assert got == want, (i, repr(x))
+
+
+def test_fuzz_field_extraction_parity(fuzz_pairs):
+    rows, df = fuzz_pairs
+    _assert_field_parity(df, "a", {i: x for i, x, _ in rows})
+
+
+def test_fuzz_field_extraction_case_folds(spark):
+    """The field gates (email's '@', the label lookaheads) on texts that
+    also hold the case-fold specials."""
+    rng = random.Random(20260820)
+    pool = _WORD_POOL + _FOLD_WORDS
+    texts = [
+        "".join(rng.choice(pool) + rng.choice(_SPACERS) for _ in range(rng.randint(0, 12)))
+        for _ in range(300)
+    ] + ["paſſport: 1234 567890", "Паспорт 1234 567890 ivan@mail.ru", "", None]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
+    _assert_field_parity(df, "t", dict(enumerate(texts)))
 
 
 def test_reference_second_pass_is_noop(fuzz_pairs):

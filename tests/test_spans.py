@@ -4,9 +4,12 @@ pure-Python golden, including mega-documents, on both assembly routes."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_spark.functions import fields as FX
 from ocr_spark.pipeline import extract_documents
 from ocr_spark.sources import corpus
 from tests import reference_impl as ref
@@ -90,8 +93,6 @@ def test_array_input_plan_explodes_once_without_count_pass(spark, small_corpus):
     before the explode: one span explode per union branch, no count
     aggregate over span rows, and the salted branch keeps its two-phase
     aggregation (keyed on (doc_id, salt), then on doc_id)."""
-    import re
-
     from ocr_spark.operators.spans import assemble_spans, classify_spans
 
     df = small_corpus
@@ -112,7 +113,8 @@ def test_stage3_plan_runs_each_pattern_once(small_corpus):
     field pattern (plus normalize_amount's number) appears once in each
     union branch (single-phase and salted), no value is left to Spark's
     `With` rewrite (`_common_expr`), and the column analysis runs no
-    regex replace at all."""
+    regex replace at all. The classifier's word count runs no per-row
+    `split`, and both email patterns sit under the '@' gate."""
     from ocr_spark import config
     from ocr_spark.operators import layout as L
 
@@ -122,6 +124,50 @@ def test_stage3_plan_runs_each_pattern_once(small_corpus):
     assert plan.count("regexp_extract(") == 2 * per_branch
     assert "_common_expr" not in plan
     assert "regexp_replace" not in str(L.analyze_text_columns(F.col("t")))
+    # the word count is a regexp_count, not a split that compiles per row
+    assert not re.search(r"split\(.*, \(\?U\)\\s\+, -1\)", plan)
+    # both email patterns run only under the '@' gate, in each branch
+    others = [
+        FX._java_ci(FX._label_gate(p))
+        for f, ps in config.FIELD_PATTERNS.items() if f != "email" for p in ps
+    ]
+    gate = re.compile(r"CASE WHEN \(instr\(extracted_text#\d+, @\) > 0\) THEN ")
+    for p in config.FIELD_PATTERNS["email"]:
+        at = [m.start() for m in re.finditer(re.escape(FX._java_ci(FX._label_gate(p))), plan)]
+        assert len(at) == 2
+        for k in at:
+            gated = [m.end() for m in gate.finditer(plan, 0, k)]
+            assert gated and not any(q in plan[gated[-1] : k] for q in others)
+
+
+def test_classifier_matches_reference_on_whitespace_and_links(spark):
+    """``is_boilerplate`` and ``word_count`` equal the reference on every
+    ``(?U)\\s`` code point, mixed whitespace runs, empty and null text,
+    and short spans with a link, the only spans whose word count the
+    classifier still evaluates."""
+    from ocr_spark.functions.text import UNICODE_WHITESPACE
+    from ocr_spark.operators.spans import is_boilerplate, word_count
+
+    link = '<a href="/x">more</a>'
+    texts = [None, "", " ", UNICODE_WHITESPACE, link, "© 2026 " + link, "menu " + link]
+    for c in UNICODE_WHITESPACE:
+        texts += [c, f"{c}one{c}{c}two{c}", f"{link}{c}a{c}b", f"{c}one two{c}three{c}four {link}{c}"]
+    for n in range(7):  # around BOILERPLATE_MIN_WORDS
+        words = [f"w{i}" for i in range(n)]
+        texts += [" ".join(words + [link]), "\u3000\t".join(words) + "\n\x85" + link]
+        texts += [UNICODE_WHITESPACE.join(words + [link]) + UNICODE_WHITESPACE[::-1]]
+    # link density around BOILERPLATE_MAX_LINK_DENSITY (a 7-char tag pair)
+    for pad in range(48, 64):
+        texts.append("<a>" + "x" * 20 + "</a>" + " y" * (pad // 2) + "z" * (pad % 2))
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    got = {
+        r["i"]: (r["wc"], r["bp"])
+        for r in df.select(
+            "i", word_count(F.col("t")).alias("wc"), is_boilerplate(F.col("t")).alias("bp")
+        ).collect()
+    }
+    for i, t in enumerate(texts):
+        assert got[i] == (ref.word_count(t), ref.is_boilerplate(t)), (i, repr(t))
 
 
 def test_salted_route_matches_golden(spark, docs, tmp_path_factory, golden):
@@ -777,3 +823,28 @@ def test_span_operators_ignore_input_order_on_tied_offsets(tied_frames, op):
     got = rows(forward)
     assert got, op
     assert got == rows(reversed_), op
+
+
+def test_oracle_span_order_is_span_order(spark):
+    """The DuckDB oracles' sort key orders tied spans, null fields
+    included, exactly as :func:`span_order` does in Spark."""
+    import duckdb
+
+    from ocr_spark.operators.spans import span_order
+    from ocr_spark.plans.entry_queries import _SPAN_ORDER_SQL
+
+    spans = [s for _, ss in _TIED_DOCS for s in ss] + [
+        _span(None, "x", None, 0),
+        _span("text", None, None, 0),
+        _span("text", "x", None, None),
+        _span("text", "x", "", 0),
+        _span("text", "x", "a", 0),
+        _span("media", "", None, 8),
+    ]
+    df = spark.createDataFrame([(1, spans)], _SPANS_SCHEMA)
+    want = [tuple(s) for s in df.select(span_order(F.col("spans")).alias("o")).first()["o"]]
+    con = duckdb.connect()
+    con.execute('CREATE TABLE s (kind VARCHAR, text VARCHAR, media_ref VARCHAR, "offset" INTEGER)')
+    con.executemany("INSERT INTO s VALUES (?, ?, ?, ?)", [tuple(s.values()) for s in spans])
+    got = con.execute(f'SELECT "offset", kind, text, media_ref FROM s ORDER BY {_SPAN_ORDER_SQL}').fetchall()
+    assert got == want
