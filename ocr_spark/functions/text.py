@@ -209,20 +209,19 @@ def text_quality_score(col: Column) -> Column:
     cyr follows the reference's exact quirk: ``'а'<=ch.lower()<='я' or ch
     in 'ёй'`` — the literal check is on the UNLOWERED char, so lowercase
     'ё' counts but uppercase 'Ё' does NOT ('й' is inside а-я either way).
-    num_alpha counts Unicode letters; words = whitespace tokens containing
-    a letter; word_density = #words / max(1, len/25); length_score =
+    num_alpha counts Unicode letters (``\\p{L}``, the characters Python's
+    ``str.isalpha`` accepts); words = whitespace tokens containing a
+    letter; word_density = #words / max(1, len/25); length_score =
     min(len/1000, 1). Returns 0.0 for empty / letterless text.
     """
     c = F.coalesce(col, F.lit(""))
-    # Python ch.isalpha() over our corpora = Unicode letters; [а-яёa-z] on
-    # lowered text covers ru/en (the only alphabets the reference handles).
-    num_alpha = _count_chars(F.lower(c), "а-яёa-z")
+    num_alpha = _count_chars(c, r"\p{L}")
     cyr = cyrillic_count(c, include_yo=False) + _count_chars(c, "ё")
     cyr_ratio = cyr / F.greatest(F.lit(1), num_alpha)
     # words with at least one letter
     toks = F.filter(
         F.split(py_strip(c), r"(?U)\s+"),
-        lambda w: w.rlike("[а-яёА-ЯЁa-zA-Z]"),
+        lambda w: w.rlike(r"\p{L}"),
     )
     word_density = F.size(toks) / F.greatest(F.lit(1.0), F.length(c) / F.lit(25.0))
     length_score = F.least(F.length(c) / F.lit(1000.0), F.lit(1.0))

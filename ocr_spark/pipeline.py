@@ -21,6 +21,14 @@ typed row per document:
 
 Everything after the assembly shuffle is narrow projection work —
 Catalyst pipelines it into the same stage; nothing re-shuffles.
+
+The PDF path (``process_pdfs``, the reference's ``POST /pdf/process``):
+
+pages (doc_id, page_number, text) of the text and visual layers →
+  one doc_id shuffle, one groupBy   concat + min-text route per document
+  'direct'                          the concatenated text layer
+  'ocr'                             render + OCR every visual page in one
+                                    Python stage, corrected page concat
 """
 
 from __future__ import annotations
@@ -60,7 +68,7 @@ def process_pdfs(text_pages: DataFrame, visual_pages: DataFrame | None = None) -
 
         per-page text layer (S2) → ordered concat (A4) → min-text route
         (F6) → 'direct': the concatenated text layer
-             → 'ocr':    rasterize + OCR scan the page (S3+S6, one Python
+             → 'ocr':    rasterize + OCR scan each page (S3+S6, one Python
                          stage) → conf-gated corrected box assembly
                          (F1+T3+A6) → ordered page concat
 
@@ -71,40 +79,81 @@ def process_pdfs(text_pages: DataFrame, visual_pages: DataFrame | None = None) -
 
     Output: (doc_id, route, full_text, total_pages).
 
-    The plan reads the text layer once: the routed concat feeds both the
-    OCR semi-join and the final left join, and the two uses share one
-    shuffle stage (``concat_pages``' aggregate is the same for both, and
-    the semi-join keys null-safe, so no ``isnotnull`` filter is inferred
-    under one of them alone). Only routed-to-OCR pages enter the render+
-    scan stage (``ocr_engine.scan_pages``), which renders and OCRs each
-    page in one batch loop — the ~100-1000× costlier branch never touches
-    direct-path documents. A null doc_id can enter that stage, but the
-    final join never matches it, so its OCR text stays empty.
+    One shuffle: the rows of both layers, tagged, are hash-partitioned on
+    ``doc_id`` together and one ``groupBy(doc_id)`` collects each
+    document's text pages and visual pages. ``all_text``, ``total_pages``
+    and ``route`` come from the text pages; direct rows leave from that
+    aggregate, and OCR rows enter one Python stage
+    (``ocr_engine.scan_pages``) that renders and scans every visual page of
+    the document, so no task runs two Python stages and both layers parse
+    in the same map stage. The two branches read the same shuffle (a
+    ReusedExchange), with no join. The shuffle has one partition per core:
+    AQE coalesces partitions by bytes, and the page rows are small, so it
+    would leave the CPU-bound OCR stage one task.
+
+    A document with a null doc_id routes on its text layer but never
+    reaches the OCR stage (its OCR text is ``""``); visual pages of a
+    document absent from the text layer are dropped.
     """
     from ocr_spark.operators.layout import full_text_from_boxes
     from ocr_spark.sources import pdf as P
     from ocr_spark.sources.ocr_engine import scan_pages
 
-    visual = visual_pages if visual_pages is not None else text_pages
-    direct = P.concat_pages(text_pages)  # (doc_id, all_text, total_pages)
-    routed = route_documents(direct, direct_text_col="all_text")
+    page = F.struct("page_number", "text").alias("page")
+    partitions = text_pages.sparkSession.sparkContext.defaultParallelism
+    if visual_pages is None:
+        docs = (
+            text_pages.select("doc_id", page)
+            .repartition(partitions, "doc_id")
+            .groupBy("doc_id")
+            .agg(F.collect_list("page").alias("pages"))
+            .withColumn("visual", F.col("pages"))
+        )
+    else:
+        layers = text_pages.select("doc_id", page, F.lit(True).alias("text_layer")).unionByName(
+            visual_pages.select("doc_id", page, F.lit(False).alias("text_layer"))
+        )
+        docs = (
+            layers.repartition(partitions, "doc_id")
+            .groupBy("doc_id")
+            .agg(
+                F.collect_list(F.when(F.col("text_layer"), F.col("page"))).alias("pages"),
+                F.collect_list(F.when(~F.col("text_layer"), F.col("page"))).alias("visual"),
+            )
+            .filter(F.size("pages") > 0)
+        )
+    # A null doc_id gets no visual pages here rather than a filter on
+    # doc_id: the optimizer would push that filter below the shuffle of
+    # the OCR branch alone, and the two branches would stop sharing it.
+    routed = route_documents(
+        docs.select(
+            "doc_id",
+            P.join_pages(F.col("pages")).alias("all_text"),
+            F.size("pages").alias("total_pages"),
+            F.when(F.col("doc_id").isNotNull(), F.col("visual")).otherwise(F.array()).alias("visual"),
+        ),
+        direct_text_col="all_text",
+    )
+    scanned = (F.col("route") == "ocr") & (F.size("visual") > 0)
 
-    ocr_ids = routed.filter(F.col("route") == "ocr").select(F.col("doc_id").alias("ocr_id"))
-    ocr_pages = visual.join(ocr_ids, F.col("doc_id").eqNullSafe(F.col("ocr_id")), "left_semi")
-    boxes = scan_pages(ocr_pages, P.render_page_array)
-    ocr_text = P.concat_pages(
-        boxes.select("doc_id", "page_number", full_text_from_boxes(F.col("boxes")).alias("text"))
-    ).select("doc_id", F.col("all_text").alias("ocr_text"))
-
-    out = routed.join(ocr_text, "doc_id", "left")
-    return out.select(
+    direct = routed.filter(~scanned).select(
         "doc_id",
         "route",
-        F.when(F.col("route") == "direct", F.col("all_text"))
-        .otherwise(F.coalesce(F.col("ocr_text"), F.lit("")))
-        .alias("full_text"),
-        F.col("total_pages"),
+        F.when(F.col("route") == "direct", F.col("all_text")).otherwise(F.lit("")).alias("full_text"),
+        "total_pages",
     )
+    boxes = scan_pages(
+        routed.filter(scanned).select("doc_id", F.col("visual").alias("pages"), "total_pages"),
+        P.render_page_array,
+    )
+    ocr_pages = F.transform(
+        "pages",
+        lambda p: F.struct(p["page_number"], full_text_from_boxes(p["boxes"]).alias("text")),
+    )
+    ocr = boxes.select(
+        "doc_id", F.lit("ocr").alias("route"), P.join_pages(ocr_pages).alias("full_text"), "total_pages"
+    )
+    return direct.unionByName(ocr)
 
 
 def extract_documents(docs: DataFrame, drop_boilerplate: bool = True) -> DataFrame:

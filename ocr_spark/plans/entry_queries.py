@@ -799,8 +799,8 @@ qf2 AS (
     (length(t) - length(regexp_replace(t, '[^\\w\\s]', '', 'g'))) AS punct,
     len(list_filter(w, x -> list_contains([{', '.join(chr(39) + x + chr(39) for x in config.LANGID_STOPWORDS['en'])}], x))) AS stop,
     ({_cyr('t', yo=False)} + (length(t) - length(replace(t, 'ё', '')))) AS cyr,
-    (length(lower(t)) - length(regexp_replace(lower(t), '[а-яёa-z]', '', 'g'))) AS n_alpha,
-    len(list_filter(regexp_split_to_array({_strip('t')}, '{_WS}+'), x -> regexp_matches(x, '[а-яёА-ЯЁa-zA-Z]'))) AS n_toks
+    (length(t) - length(regexp_replace(t, '\\pL', '', 'g'))) AS n_alpha,
+    len(list_filter(regexp_split_to_array({_strip('t')}, '{_WS}+'), x -> regexp_matches(x, '\\pL'))) AS n_toks
   FROM qf
 )
 SELECT doc_id,
@@ -4867,9 +4867,9 @@ kq AS (
 kq2 AS (
   SELECT doc_id, t,
     ({_cyr('t', yo=False)} + (length(t) - length(replace(t, 'ё', '')))) AS cyr,
-    (length(lower(t)) - length(regexp_replace(lower(t), '[а-яёa-z]', '', 'g'))) AS n_alpha,
+    (length(t) - length(regexp_replace(t, '\\pL', '', 'g'))) AS n_alpha,
     len(list_filter(regexp_split_to_array({_strip('t')}, '{_WS}+'),
-                    x -> regexp_matches(x, '[а-яёА-ЯЁa-zA-Z]'))) AS n_toks
+                    x -> regexp_matches(x, '\\pL'))) AS n_toks
   FROM kq
 ),
 kscore AS (
@@ -4947,8 +4947,8 @@ sdn AS (
 sdflag AS (
   SELECT doc_id, kind, text, media_ref, "offset",
          CASE WHEN kind = 'media' OR norm = '' THEN TRUE
-              ELSE row_number() OVER (PARTITION BY md5(norm)
-                                      ORDER BY doc_id, "offset") = 1
+              ELSE rank() OVER (PARTITION BY kind = 'media', md5(norm)
+                                ORDER BY doc_id, "offset") = 1
          END AS keep
   FROM sdn
 )
@@ -5611,13 +5611,13 @@ def q_span_lang_runs(spark: SparkSession, sf: str) -> DataFrame:
     f"""
 WITH {D.SQL_SPAN_CORPUS},
 smr AS (
-  SELECT doc_id, "offset", kind,
+  SELECT doc_id, "offset", kind, text, media_ref,
          CASE WHEN kind = 'media' THEN '![media](' || coalesce(media_ref, '') || ')'
               ELSE coalesce(text, '') END AS r
   FROM span_rows
 )
 SELECT doc_id,
-       coalesce(string_agg(CASE WHEN r != '' THEN r END, chr(10) || chr(10) ORDER BY "offset"), '') AS markdown,
+       coalesce(string_agg(CASE WHEN r != '' THEN r END, chr(10) || chr(10) ORDER BY {_SPAN_ORDER_SQL}), '') AS markdown,
        sum(CASE WHEN kind = 'text' THEN 1 ELSE 0 END)::BIGINT AS n_text,
        sum(CASE WHEN kind = 'media' THEN 1 ELSE 0 END)::BIGINT AS n_media
 FROM smr GROUP BY doc_id""",
@@ -5648,15 +5648,15 @@ sqc AS (
 sqn AS (
   SELECT *,
          coalesce(last_value(CASE WHEN cls != 2 THEN cls END IGNORE NULLS)
-           OVER (PARTITION BY doc_id ORDER BY "offset"
+           OVER (PARTITION BY doc_id ORDER BY {_SPAN_ORDER_SQL}
                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) AS prev,
          coalesce(first_value(CASE WHEN cls != 2 THEN cls END IGNORE NULLS)
-           OVER (PARTITION BY doc_id ORDER BY "offset"
+           OVER (PARTITION BY doc_id ORDER BY {_SPAN_ORDER_SQL}
                  ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING), -1) AS nxt
   FROM sqc
 )
 SELECT doc_id, kind, text, media_ref,
-       (row_number() OVER (PARTITION BY doc_id ORDER BY "offset") - 1)::BIGINT AS ord
+       (row_number() OVER (PARTITION BY doc_id ORDER BY {_SPAN_ORDER_SQL}) - 1)::BIGINT AS ord
 FROM sqn
 WHERE cls = 1 OR (cls = 2 AND (prev = 1 OR nxt = 1))""",
 )
@@ -5676,7 +5676,7 @@ def q_spans_quality_filter(spark: SparkSession, sf: str) -> DataFrame:
 WITH {_SQL_KEPT_SPANS},
 edoc AS (
   SELECT doc_id,
-         coalesce(string_agg(CASE WHEN kind = 'text' THEN text END, chr(10) ORDER BY "offset"), '') AS extracted_text,
+         coalesce(string_agg(CASE WHEN kind = 'text' THEN text END, chr(10) ORDER BY {_SPAN_ORDER_SQL}), '') AS extracted_text,
          count(*)::BIGINT AS n_spans,
          sum(CASE WHEN kind = 'media' THEN 1 ELSE 0 END)::BIGINT AS n_media
   FROM skept GROUP BY doc_id
@@ -6320,7 +6320,8 @@ FROM oph""",
 def q_pdf_ocr_scan(spark: SparkSession, sf: str) -> DataFrame:
     """The FULL OCR fallback branch on real bytes: fixture PDF → S2 page
     text → S3 rasterize (deterministic band render) + S6 scan in one
-    Python stage (ocr_engine.scan_pages, the process_pdfs path) → boxes.
+    Python stage (ocr_engine.scan_pages, the process_pdfs path: one row
+    per document with its pages) → boxes.
     Raw+rotation candidates only, so every box is oracle-predictable; the
     oracle recomputes band darkness from the page text's char hash and
     derives conf/cx/cy in closed form."""
@@ -6328,9 +6329,11 @@ def q_pdf_ocr_scan(spark: SparkSession, sf: str) -> DataFrame:
     from ocr_spark.sources.ocr_engine import scan_pages
 
     pages = P.extract_pages(P.synth_pdf_docs(spark, _N_PDF_DOCS))
-    b = scan_pages(pages, P.render_page_array).select(
-        "doc_id", "page_number", F.explode("boxes").alias("b")
+    docs = pages.groupBy("doc_id").agg(
+        F.collect_list(F.struct("page_number", "text")).alias("pages")
     )
+    p = scan_pages(docs, P.render_page_array).select("doc_id", F.explode("pages").alias("p"))
+    b = p.select("doc_id", "p.page_number", F.explode("p.boxes").alias("b"))
     return b.select(
         "doc_id",
         "page_number",
@@ -10276,8 +10279,8 @@ def q_span_transitions(spark: SparkSession, sf: str) -> DataFrame:
 WITH {D.SQL_SPAN_CORPUS},
 ig_runs AS (
   SELECT doc_id, kind,
-         row_number() OVER (PARTITION BY doc_id ORDER BY "offset")
-       - row_number() OVER (PARTITION BY doc_id, kind ORDER BY "offset") AS grp
+         row_number() OVER (PARTITION BY doc_id ORDER BY {_SPAN_ORDER_SQL})
+       - row_number() OVER (PARTITION BY doc_id, kind ORDER BY {_SPAN_ORDER_SQL}) AS grp
   FROM span_rows
 ),
 ig_mr AS (

@@ -30,6 +30,7 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType, StructField, StructType
 
 from ocr_spark.operators.image import (
     adaptive_mean_threshold,
@@ -42,7 +43,7 @@ from ocr_spark.operators.image import (
 
 _BOX = "array<struct<text:string, conf:double, cx:double, cy:double>>"
 BOXES_SCHEMA = f"image_id long, boxes {_BOX}, engine string"
-PAGE_BOXES_SCHEMA = f"doc_id long, page_number int, boxes {_BOX}"
+PAGE_BOXES = f"array<struct<page_number:int, boxes:{_BOX}>>"
 
 DEFAULT_ENGINE = "fake"
 
@@ -245,29 +246,39 @@ def scan_images(
     return images.mapInPandas(process, BOXES_SCHEMA)
 
 
-def scan_pages(pages: DataFrame, render: Callable[[str], np.ndarray]) -> DataFrame:
-    """Rasterise + OCR scan fused: (doc_id, page_number, text) → (doc_id,
-    page_number, boxes), one row per page.
+def scan_pages(docs: DataFrame, render: Callable[[str], np.ndarray]) -> DataFrame:
+    """Rasterise + OCR scan fused, one row per document: ``docs`` holds
+    ``pages`` array<struct<page_number, text>>, and each row comes back
+    with ``pages`` as array<struct<page_number, boxes>>, one element per
+    input page in the same order. Other columns pass through.
 
     ``render`` turns a page's text into its grayscale raster (e.g.
     ``sources.pdf.render_page_array``); the page is rendered and scanned
     in the same batch loop, so the raster never leaves the Python worker.
     Same candidate set as ``scan_images(include_preprocess=False)`` on the
-    rasterised pages: raw + right-angle rotations. A null doc_id passes
-    through as null."""
+    rasterised pages: raw + right-angle rotations."""
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = _load_model()
-        for pdf in batches:
-            boxes = [
-                _best_boxes(model, render(text), include_preprocess=False, detect_skew=None)
-                for text in pdf["text"].tolist()
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "page_number": pdf["page_number"], "boxes": boxes}
-            )
 
-    return pages.select("doc_id", "page_number", "text").mapInPandas(process, PAGE_BOXES_SCHEMA)
+        def scan(pages):
+            return None if pages is None else [
+                {
+                    "page_number": p["page_number"],
+                    "boxes": _best_boxes(
+                        model, render(p["text"]), include_preprocess=False, detect_skew=None
+                    ),
+                }
+                for p in pages
+            ]
+
+        for pdf in batches:
+            pdf["pages"] = [scan(pages) for pages in pdf["pages"].tolist()]
+            yield pdf
+
+    boxed = StructField("pages", DataType.fromDDL(PAGE_BOXES))
+    schema = StructType([boxed if f.name == "pages" else f for f in docs.schema])
+    return docs.mapInPandas(process, schema)
 
 
 def model_init_count() -> int:

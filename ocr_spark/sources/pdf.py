@@ -509,23 +509,24 @@ def extract_metadata(docs: DataFrame, id_col: str = "doc_id", content_col: str =
     return docs.select(F.col(id_col), F.col(content_col)).mapInPandas(process, META_SCHEMA)
 
 
+def join_pages(pages: Column) -> Column:
+    """A4's page order as an expression: an array of (page_number, text)
+    structs → the texts sorted by (page_number, text) and joined with
+    newlines (a null text is skipped)."""
+    return F.array_join(F.transform(F.array_sort(pages), lambda s: s["text"]), "\n")
+
+
 def concat_pages(pages: DataFrame) -> DataFrame:
     """A4 (pdf_processor.py:104-139): order-preserving page concat — sort
     INSIDE the aggregation, never relying on partition order.
 
-    ``total_pages`` is the size of the collected page list, not a
-    ``count(1)`` beside it: the aggregate then holds one function whatever
-    columns a consumer keeps, so two uses of this frame in one plan (see
-    ``pipeline.process_pdfs``) share one shuffle."""
+    ``total_pages`` is the size of the collected page list, i.e. the
+    number of page rows of the document."""
     collected = pages.groupBy("doc_id").agg(
-        F.collect_list(F.struct(F.col("page_number").alias("p"), F.col("text").alias("t"))).alias(
-            "pages"
-        )
+        F.collect_list(F.struct("page_number", "text")).alias("pages")
     )
     return collected.select(
-        "doc_id",
-        F.array_join(F.transform(F.array_sort("pages"), lambda s: s["t"]), "\n").alias("all_text"),
-        F.size("pages").alias("total_pages"),
+        "doc_id", join_pages(F.col("pages")).alias("all_text"), F.size("pages").alias("total_pages")
     )
 
 

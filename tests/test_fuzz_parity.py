@@ -31,8 +31,8 @@ _WORD_POOL = [
     "ivan.petrov@mail.ru", "@", "user@host", "A.B@X.ORG",
 ]
 # letters Java and Python both fold to a label's letter: K (U+212A) to k,
-# ſ (U+017F) to s. Only the field test draws them: text_quality_score
-# counts ru/en letters only, and both are letters to Python.
+# ſ (U+017F) to s. Both are letters outside ru/en, which
+# text_quality_score counts like Python's str.isalpha.
 _FOLD_WORDS = ["\u212a", "ſ", "paſſport:", "addreſs", "PAſſPORT", "\u212a\u212a"]
 _SPACERS = [" ", "  ", "\t", "\n", "\r\n", "   ", "   \n\t "]
 
@@ -80,8 +80,18 @@ def test_fuzz_metrics_parity(fuzz_pairs):
         assert out[i]["em"] == R.exact_match(x, y), (i, x, y)
 
 
-def test_fuzz_text_parity(fuzz_pairs):
-    rows, df = fuzz_pairs
+def _gen_fold_texts(rng: random.Random, n: int) -> list[str]:
+    pool = _WORD_POOL + _FOLD_WORDS
+    return [
+        "".join(rng.choice(pool) + rng.choice(_SPACERS) for _ in range(rng.randint(0, 12)))
+        for _ in range(n)
+    ]
+
+
+def test_fuzz_text_parity(spark, fuzz_pairs):
+    rows, _ = fuzz_pairs
+    texts = [x for _, x, _ in rows] + _gen_fold_texts(random.Random(20260821), 300)
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, a string")
     a = F.col("a")
     out = {
         r["id"]: r
@@ -93,7 +103,7 @@ def test_fuzz_text_parity(fuzz_pairs):
             T.correct_ocr_errors(a).alias("corr"),
         ).collect()
     }
-    for i, x, _ in rows:
+    for i, x in enumerate(texts):
         assert out[i]["norm"] == R.normalize_text(x), (i, repr(x))
         assert out[i]["lang"] == R.line_language(x), (i, repr(x))
         assert out[i]["q"] == pytest.approx(R.text_quality_score(x), abs=1e-12), (i, repr(x))
@@ -121,12 +131,9 @@ def test_fuzz_field_extraction_parity(fuzz_pairs):
 def test_fuzz_field_extraction_case_folds(spark):
     """The field gates (email's '@', the label lookaheads) on texts that
     also hold the case-fold specials."""
-    rng = random.Random(20260820)
-    pool = _WORD_POOL + _FOLD_WORDS
-    texts = [
-        "".join(rng.choice(pool) + rng.choice(_SPACERS) for _ in range(rng.randint(0, 12)))
-        for _ in range(300)
-    ] + ["paſſport: 1234 567890", "Паспорт 1234 567890 ivan@mail.ru", "", None]
+    texts = _gen_fold_texts(random.Random(20260820), 300) + [
+        "paſſport: 1234 567890", "Паспорт 1234 567890 ivan@mail.ru", "", None
+    ]
     df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
     _assert_field_parity(df, "t", dict(enumerate(texts)))
 

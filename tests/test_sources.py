@@ -407,24 +407,80 @@ def _scanned_text_layer(pages):
     return pages.withColumn("text", F.when(scanned, F.lit("")).otherwise(F.col("text")))
 
 
-def test_process_pdfs_parses_text_layer_once(spark, tmp_path):
-    """The executed (final AQE) plan reads the input twice, not three
-    times: the text layer's concat shuffle is shared by the OCR semi-join
-    and the final join (a ReusedExchange), and render+OCR is one Python
-    stage — two PDF parses plus one scan, 3 MapInPandas."""
+def _final_tree(df):
+    """The executed (final AQE) plan as (node name, children), with each
+    query stage replaced by the plan it wraps; a ReusedExchange is a leaf."""
+
+    def walk(node):
+        if "QueryStage" in node.nodeName():
+            return walk(node.plan())
+        kids = node.children()
+        return node.nodeName(), [walk(kids.apply(i)) for i in range(kids.size())]
+
+    root = df._jdf.queryExecution().executedPlan()
+    assert root.nodeName() == "AdaptiveSparkPlan" and root.isFinalPlan()
+    return walk(root.executedPlan())
+
+
+def _nodes(tree):
+    name, kids = tree
+    yield name
+    for kid in kids:
+        yield from _nodes(kid)
+
+
+def _paths(tree, prefix=()):
+    name, kids = tree
+    if not kids:
+        yield prefix + (name,)
+    for kid in kids:
+        yield from _paths(kid, prefix + (name,))
+
+
+def _pdf_pages_from_parquet(spark, tmp_path, n):
+    path = str(tmp_path / "docs")
+    pdf.synth_pdf_docs(spark, n).write.parquet(path)
+    return pdf.extract_pages(spark.read.parquet(path))
+
+
+def test_process_pdfs_one_shuffle_one_python_stage_per_task(spark, tmp_path):
+    """The executed plan shuffles once: both page layers parse in one map
+    stage, their rows meet in one doc_id shuffle that the direct and the
+    OCR branch both read (a ReusedExchange), and render+OCR is one Python
+    stage — 2 scans, 3 MapInPandas, no broadcast and no join. No task
+    runs two Python stages: on every root-to-leaf path an Exchange lies
+    between two MapInPandas."""
     from ocr_spark.pipeline import process_pdfs
 
-    path = str(tmp_path / "docs")
-    pdf.synth_pdf_docs(spark, 20).write.parquet(path)
-    pages = pdf.extract_pages(spark.read.parquet(path))
+    pages = _pdf_pages_from_parquet(spark, tmp_path, 20)
     out = process_pdfs(_scanned_text_layer(pages), visual_pages=pages)
     rows = out.collect()  # an action first: the AQE plan is final
     assert len(rows) == 20 and sum(r["route"] == "ocr" for r in rows) == 4
+    tree = _final_tree(out)
+    nodes = list(_nodes(tree))
+    assert nodes.count("Scan parquet ") == 2
+    assert nodes.count("MapInPandas") == 3
+    assert nodes.count("Exchange") == 1 and nodes.count("ReusedExchange") == 1
+    assert "BroadcastExchange" not in nodes
+    assert not [n for n in nodes if "Join" in n or n == "CartesianProduct"]
+    for path in _paths(tree):
+        stages = [n for n in path if n in ("MapInPandas", "Exchange", "ReusedExchange")]
+        assert ("MapInPandas", "MapInPandas") not in zip(stages, stages[1:]), path
+
+
+def test_process_pdfs_default_visual_layer_scans_once(spark, tmp_path):
+    """Without visual pages the text layer is read and parsed once, and
+    the rows are those of passing it as both layers."""
+    from ocr_spark.pipeline import process_pdfs
+
+    pages = _scanned_text_layer(_pdf_pages_from_parquet(spark, tmp_path, 20))
+    out = process_pdfs(pages)
+    rows = out.collect()
+    assert sum(r["route"] == "ocr" for r in rows) == 4
+    assert sorted(rows) == sorted(process_pdfs(pages, visual_pages=pages).collect())
     plan = _final_plan(out)
-    assert "isFinalPlan=true" in plan
-    assert plan.count("FileScan parquet") == 2
-    assert plan.count("MapInPandas") == 3
-    assert plan.count("ReusedExchange") >= 1
+    assert plan.count("FileScan parquet") == 1
+    assert plan.count("MapInPandas") == 2
 
 
 def test_concat_pages_total_pages_counts_rows(spark):
@@ -440,6 +496,36 @@ def test_concat_pages_total_pages_counts_rows(spark):
     got = {r["doc_id"]: r["total_pages"] for r in pdf.concat_pages(df).collect()}
     want = {r["doc_id"]: r["count"] for r in df.groupBy("doc_id").count().collect()}
     assert got == want == {1: 3, 2: 1, 3: 3, None: 1}
+
+
+def test_process_pdfs_layers_meet_per_document(spark):
+    """How the two page layers combine per document: route, total_pages
+    and direct text come from the text layer; an OCR document's text is
+    its visual pages' OCR text in (page_number, text) order; a document
+    with no visual pages OCRs to ""; a null doc_id never OCRs; visual
+    pages of a document absent from the text layer give no row."""
+    from ocr_spark.pipeline import process_pdfs
+    from tests.reference_impl import correct_ocr_errors
+
+    long_a, long_b = "first page text", "second page text"
+    text_layer = spark.createDataFrame(
+        [(1, 2, long_b), (1, 1, long_a), (2, 1, ""), (2, 2, None), (3, 1, "short"),
+         (None, 1, "")],
+        "doc_id long, page_number int, text string",
+    )
+    visual = spark.createDataFrame(
+        [(1, 1, "x"), (2, 2, "two\nlines"), (2, 1, "one"), (2, 2, ""), (4, 1, "orphan"),
+         (None, 1, "null id")],
+        "doc_id long, page_number int, text string",
+    )
+    band = [correct_ocr_errors(f"line-{i}") for i in range(2)]
+    got = {tuple(r) for r in process_pdfs(text_layer, visual_pages=visual).collect()}
+    assert got == {
+        (1, "direct", f"{long_a}\n{long_b}", 2),
+        (2, "ocr", "\n".join([band[0], "", " ".join(band)]), 2),
+        (3, "ocr", "", 1),
+        (None, "ocr", "", 1),
+    }
 
 
 def test_process_pdfs_fault_rows(spark):
@@ -480,13 +566,16 @@ def test_process_pdfs_fault_rows(spark):
 
 
 def test_scan_pages_matches_rasterize_then_scan_images(spark):
-    """The fused render+OCR stage returns the boxes of rasterize_pages →
-    scan_images(include_preprocess=False), page for page."""
+    """The fused render+OCR stage returns, in each document's row, the
+    boxes of rasterize_pages → scan_images(include_preprocess=False), page
+    for page; other columns pass through."""
     pages = pdf.extract_pages(pdf.synth_pdf_docs(spark, 8))
-    fused = {
-        (r["doc_id"], r["page_number"]): r["boxes"]
-        for r in ocr_engine.scan_pages(pages, pdf.render_page_array).collect()
-    }
+    docs = pages.groupBy("doc_id").agg(
+        F.collect_list(F.struct("page_number", "text")).alias("pages"), F.count("*").alias("n")
+    )
+    scanned = ocr_engine.scan_pages(docs, pdf.render_page_array).collect()
+    assert all(len(r["pages"]) == r["n"] for r in scanned)
+    fused = {(r["doc_id"], p["page_number"]): p["boxes"] for r in scanned for p in r["pages"]}
     imgs = pdf.rasterize_pages(pages).select(
         pdf.pack_image_id(F.col("doc_id"), F.col("page_number")).alias("image_id"),
         "data", "width", "height",
